@@ -111,10 +111,31 @@ object Layout {
     * The tile of rank r among n rows is then pure arithmetic (Spark's
     * NTile rule: the first n % numTiles tiles get one extra row).
     * `sortKeys` should be a total order (ties make which-row-gets-which-
-    * tile run-dependent, exactly as with the window form). */
+    * tile run-dependent, exactly as with the window form).
+    *
+    * Limits: `df` must not carry the operator's working columns (`__pid`,
+    * `__mid`, `__cnt`, `__cs`, `__c`, `__off`, `__n`, `__rank`, compared
+    * case-insensitively), and every range partition must hold fewer than
+    * 2^33 rows — past that the local index overflows the low-33-bit mask
+    * into the partition bits. The boundary projection fails the query with
+    * `raise_error` instead of mis-ranking rows. */
   def exactNtile(df: DataFrame, sortKeys: Seq[Column], numTiles: Int,
-      out: String): DataFrame = {
+      out: String): DataFrame =
+    exactNtile(df, sortKeys, numTiles, out, maxPartitionRows = 1L << 33)
+
+  // an input column of one of these names would be shadowed or dropped
+  private val NtileReserved: Seq[String] =
+    Seq("__pid", "__mid", "__cnt", "__cs", "__c", "__off", "__n", "__rank")
+
+  /** [[exactNtile]] with the per-partition row limit as a parameter, so
+    * specs can trip the guard on small inputs. */
+  private[operators] def exactNtile(df: DataFrame, sortKeys: Seq[Column], numTiles: Int,
+      out: String, maxPartitionRows: Long): DataFrame = {
     require(numTiles >= 1, "numTiles must be positive")
+    val clash = df.columns.filter(c => NtileReserved.contains(c.toLowerCase))
+    require(clash.isEmpty,
+      s"exactNtile: input columns ${clash.mkString(", ")} collide with its reserved " +
+        s"working columns (${NtileReserved.mkString(", ")}); rename them first")
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // The range exchange is materialized ONCE (eager localCheckpoint, the
     // repo's single-JVM stand-in for a temp-table write) and BOTH consumers
@@ -137,9 +158,13 @@ object Layout {
     val boundary = counts
       .select(explode(col("__cs")).as("__c"), col("__cs"))
       .select(col("__c.__pid").as("__pid"),
-        aggregate(
-          filter(col("__cs"), x => x("__pid") < col("__c.__pid")),
-          lit(0L), (acc, x) => acc + x("__cnt")).as("__off"),
+        when(col("__c.__cnt") >= maxPartitionRows, raise_error(concat(
+            lit("exactNtile: range partition "), col("__c.__pid").cast("string"),
+            lit(" holds "), col("__c.__cnt").cast("string"),
+            lit(s" rows; the local row index needs fewer than $maxPartitionRows"))))
+          .otherwise(aggregate(
+            filter(col("__cs"), x => x("__pid") < col("__c.__pid")),
+            lit(0L), (acc, x) => acc + x("__cnt"))).as("__off"),
         aggregate(col("__cs"), lit(0L), (acc, x) => acc + x("__cnt")).as("__n"))
     val k = lit(numTiles.toLong)
     val ranked = part

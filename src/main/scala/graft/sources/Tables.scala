@@ -66,7 +66,7 @@ object TempStores {
       try deleteRecursively(new java.io.File(p)) catch { case _: Throwable => () }
     }))
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
     f.delete(): Unit

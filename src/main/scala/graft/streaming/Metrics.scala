@@ -37,9 +37,15 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * Latency histogram: the reference observes per chunk during foreachBatch
   * delivery (spark_streaming.py:460-461). Here each chunk is banded into
-  * the reference buckets by an executor-side `count_if` over
-  * (batch timestamp - event timestamp) — one observation per chunk, with
-  * the batch's trigger timestamp standing in for per-row delivery time.
+  * the reference buckets on the executor by [[Pipelines.LatencyAgg]], which
+  * reads the clock per row as the row passes into the sinks — (processing
+  * time - event timestamp), one observation per chunk — and the listener
+  * adds the batch's band counts and millisecond sum from the `lat` field.
+  *
+  * `spark_codegen_compilations_total` is the JVM-wide count of generated
+  * classes Spark has compiled (CodegenMetrics), published at every progress
+  * event. A steady query compiles nothing, so a count that climbs with
+  * every batch on a scrape means a plan is recompiling per micro-batch.
   */
 object Metrics {
 
@@ -62,6 +68,8 @@ object Metrics {
   // holds counts in (bucket(i-1), bucket(i)], band n holds > bucket(n-1).
   private val histoCounts = new ConcurrentHashMap[String, Array[LongAdder]]()
   private val histoSumMs = new ConcurrentHashMap[String, LongAdder]()
+  // the compilation count last added to spark_codegen_compilations_total
+  private val codegenSeen = new java.util.concurrent.atomic.AtomicLong()
 
   private def adder(name: String): LongAdder =
     counters.computeIfAbsent(name, _ => new LongAdder)
@@ -77,6 +85,17 @@ object Metrics {
     histoCounts.computeIfAbsent(streamType,
       _ => Array.fill(LatencyBuckets.size + 1)(new LongAdder))
 
+  private val bucketBounds: Array[Double] = LatencyBuckets.toArray
+
+  /** Band of one latency: the first bucket whose edge is >= the latency in
+    * seconds (le semantics), or the overflow band past the last edge. */
+  def latencyBand(latencyMs: Double): Int = {
+    val sec = latencyMs / 1000.0
+    var i = 0
+    while (i < bucketBounds.length && sec > bucketBounds(i)) i += 1
+    i
+  }
+
   /** Add `n` observations to histogram band `i` of `streamType` (band
     * indexing as in the class doc). Called by the listener with per-batch
     * band counts. */
@@ -88,11 +107,25 @@ object Metrics {
 
   /** Single-observation form (used by unit tests / ad-hoc local callers). */
   def observeLatency(streamType: String, latencyMs: Double): Unit = {
-    val sec = latencyMs / 1000.0
-    var i = 0
-    while (i < LatencyBuckets.size && sec > LatencyBuckets(i)) i += 1
-    observeLatencyBand(streamType, i, 1L)
+    observeLatencyBand(streamType, latencyBand(latencyMs), 1L)
     addLatencySumMs(streamType, latencyMs.toLong)
+  }
+
+  /** Add one batch's `lat` observation ([[Pipelines.LatencyObs]] as a Row). */
+  private def addLatencyObservation(streamType: String, lat: org.apache.spark.sql.Row): Unit =
+    if (lat != null) {
+      lat.getSeq[Long](lat.fieldIndex("bands")).zipWithIndex.foreach { case (n, i) =>
+        observeLatencyBand(streamType, i, n)
+      }
+      addLatencySumMs(streamType, lat.getLong(lat.fieldIndex("sum_ms")))
+    }
+
+  /** Bring spark_codegen_compilations_total up to the JVM's compilation
+    * count. Monotone: concurrent listeners add only what is not yet added. */
+  private def publishCodegenCompilations(): Unit = {
+    val now = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val prev = codegenSeen.getAndAccumulate(now, (a, b) => math.max(a, b))
+    if (now > prev) inc("spark_codegen_compilations_total", now - prev)
   }
 
   /** Cumulative histogram (le=bucket -> count), Prometheus-style. */
@@ -144,7 +177,7 @@ object Metrics {
 
   def reset(): Unit = {
     counters.clear(); gauges.clear(); streamsSeen.reset()
-    newStreamsSeenBatch.clear()
+    newStreamsSeenBatch.clear(); codegenSeen.set(0L)
     histoCounts.clear(); histoSumMs.clear()
     apiDurBands.clear(); apiDurSumNs.clear()
   }
@@ -183,10 +216,7 @@ object Metrics {
             inc("live_chunk_gaps_total", long("gap_chunks"))
             inc("chunk_checksum_failures_total{stream_type=live}",
               long("checksum_failures"))
-            (0 to LatencyBuckets.size).foreach { i =>
-              observeLatencyBand("live", i, long(s"lat_band_$i"))
-            }
-            addLatencySumMs("live", long("lat_sum_ms"))
+            addLatencyObservation("live", row.getAs[org.apache.spark.sql.Row]("lat"))
             // streams-ever-seen: sum of per-batch new-key counts (flagged by
             // the keyed-state processor on each key's first-ever row) — a
             // single long per batch, replacing the O(distinct-ids) set the
@@ -208,10 +238,7 @@ object Metrics {
               long("chunks") * Processors.QualityVariants.size)
             inc("chunk_checksum_failures_total{stream_type=vod}",
               long("checksum_failures"))
-            (0 to LatencyBuckets.size).foreach { i =>
-              observeLatencyBand("vod", i, long(s"lat_band_$i"))
-            }
-            addLatencySumMs("vod", long("lat_sum_ms"))
+            addLatencyObservation("vod", row.getAs[org.apache.spark.sql.Row]("lat"))
           case _ => ()
         }
       }
@@ -228,6 +255,7 @@ object Metrics {
         // state-store partitions — commit work, not wall latency
         setGauge(s"spark_state_commit_sum_ms$labels", so.commitTimeMs)
       }
+      publishCodegenCompilations()
       // one time-series sample per progress event feeds the dashboard
       // rate()/histogram_quantile() panels (Dashboard.series)
       Dashboard.series.record()
@@ -256,7 +284,9 @@ object Metrics {
       "Streaming state memory bytes per stateful operator (last progress)"),
     ("spark_state_commit_sum_ms", "gauge",
       "State store commit ms per stateful operator, summed across its " +
-        "store partitions for the last batch (work, not wall latency)"))
+        "store partitions for the last batch (work, not wall latency)"),
+    ("spark_codegen_compilations_total", "counter",
+      "Generated classes compiled by Spark codegen in this JVM"))
 
   private val ApiHelp: Seq[(String, String, String)] = Seq(
     // the reference API service's scrape surface (api/main.py:66-80;
@@ -336,7 +366,8 @@ object Metrics {
     * surface (reference `start_http_server`, spark_streaming.py:548): the
     * 7 reference families name-for-name, plus the three spark_state_*
     * keyed-state gauges (a graft extension — state boundedness is the
-    * scale-operations signal the reference never surfaced). Generic
+    * scale-operations signal the reference never surfaced) and the codegen
+    * compilation counter. Generic
     * `observation.field` counters are registry/debug-only. */
   def exposition: String = expositionFor(Help)
 

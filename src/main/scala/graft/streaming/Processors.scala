@@ -88,6 +88,10 @@ object Processors {
 
   val QualityVariants: Seq[String] = Seq("1080p", "720p", "480p", "360p")
 
+  // Built once per JVM: every state task's processor init needs it, and
+  // Encoders.product reflects under Scala's global lock.
+  private val segmentEncoder: Encoder[Segment] = Encoders.product[Segment]
+
   private def sortedBySeq(rows: Iterator[ChunkEvents.Chunk]): Iterator[ChunkEvents.Chunk] =
     rows.toSeq.sortBy(c => (c.sequence_number, c.chunk_index)).iterator
 
@@ -102,7 +106,7 @@ object Processors {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       lastSeq = getHandle.getValueState[Long]("lastSeq", Encoders.scalaLong, TTLConfig.NONE)
-      window = getHandle.getListState[Segment]("window", Encoders.product[Segment], TTLConfig.NONE)
+      window = getHandle.getListState[Segment]("window", segmentEncoder, TTLConfig.NONE)
     }
 
     override def handleInputRows(
@@ -183,7 +187,7 @@ object Processors {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       targetDur = getHandle.getValueState[Long]("targetDur", Encoders.scalaLong, TTLConfig.NONE)
-      segments = getHandle.getListState[Segment]("segments", Encoders.product[Segment], TTLConfig.NONE)
+      segments = getHandle.getListState[Segment]("segments", segmentEncoder, TTLConfig.NONE)
       spilledCount = getHandle.getValueState[Long]("spilledCount", Encoders.scalaLong, TTLConfig.NONE)
     }
 

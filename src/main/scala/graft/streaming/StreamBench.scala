@@ -1,11 +1,14 @@
 package graft.streaming
 
+import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.sources.TempStores
 
 /** Streaming throughput/latency bench: drives the live pipeline from the
   * synthetic rate source for a fixed window and prints one JSON line with
@@ -49,24 +52,17 @@ object StreamBench {
       commitP50: Long, commitP99: Long)
 
   /** Exact (rank-selected, non-interpolated) per-chunk latency percentiles
-    * over the steady window, in ms. Two forms of the reference's
-    * chunk_processing_latency metric (spark_streaming.py:460-461):
-    *  - `trig*`: batch trigger timestamp - event timestamp — the exact
-    *    quantile of the SAME quantity the histogram bands measure, so the
-    *    interpolated panel value is directly checkable against it;
-    *  - `dlv*`: trig + that batch's triggerExecution ms — latency at
-    *    delivery COMPLETION, the reference's own observation point (it
-    *    calls time.time() while delivering each chunk in foreachBatch).
-    * `samples` = chunks in the steady window feeding both. */
-  final case class ExactLatency(
-      samples: Int,
-      trigP50: Long, trigP95: Long, trigP99: Long,
-      dlvP50: Long, dlvP95: Long, dlvP99: Long) {
+    * over the steady window, in ms, of the reference's
+    * chunk_processing_latency metric (spark_streaming.py:460-461): each
+    * chunk's processing time at delivery - event timestamp, the reference's
+    * own observation point (it calls time.time() while delivering each chunk
+    * in foreachBatch) and the SAME quantity the histogram bands count, so
+    * the interpolated panel value is directly checkable against it.
+    * `samples` = chunks in the steady window. */
+  final case class ExactLatency(samples: Int, dlvP50: Long, dlvP95: Long, dlvP99: Long) {
     def json: String =
-      s"""{"samples":$samples,"trigger_ms_p50":$trigP50,""" +
-        s""""trigger_ms_p95":$trigP95,"trigger_ms_p99":$trigP99,""" +
-        s""""delivered_ms_p50":$dlvP50,"delivered_ms_p95":$dlvP95,""" +
-        s""""delivered_ms_p99":$dlvP99}"""
+      s"""{"samples":$samples,"delivered_ms_p50":$dlvP50,""" +
+        s""""delivered_ms_p95":$dlvP95,"delivered_ms_p99":$dlvP99}"""
   }
 
   final case class Result(
@@ -79,7 +75,7 @@ object StreamBench {
       panels: Seq[(String, Double)] = Nil,
       panelWindowMs: Long = 0L, panelNowMs: Long = 0L,
       pipeline: String = "live",
-      exactLatency: ExactLatency = ExactLatency(0, 0, 0, 0, 0, 0, 0)) {
+      exactLatency: ExactLatency = ExactLatency(0, 0, 0, 0)) {
     def stateOpsJson: String = stateOps.map { s =>
       s"""{"operator":"${s.operator}","rows":${s.rowsTotal},""" +
         s""""memory_bytes":${s.memoryBytes},"commit_sum_ms_p50":${s.commitP50},""" +
@@ -125,8 +121,8 @@ object StreamBench {
     // (ns-at-completion, triggerExecution ms) per non-empty batch
     val batches = new ConcurrentLinkedQueue[(Long, Long)]()
     // per non-empty batch: the observe()d exact per-chunk latencies
-    // (ns-at-completion, triggerExecution ms, lat_ms_sorted)
-    val batchLats = new ConcurrentLinkedQueue[(Long, Long, Seq[Long])]()
+    // (ns-at-completion, lat.ms_sorted)
+    val batchLats = new ConcurrentLinkedQueue[(Long, Seq[Long])]()
     // per stateful operator: last-seen (rows, memory) + all commit latencies
     val stateLast = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
     val stateCommits = new ConcurrentLinkedQueue[(String, Long)]()
@@ -145,15 +141,14 @@ object StreamBench {
             .foreach { ms =>
               val now = System.nanoTime()
               batches.add((now, ms.toLong))
-              // exact per-chunk latencies ride the same observe row as the
+              // exact per-chunk latencies ride the same observation as the
               // histogram bands (cluster-correct driver channel, bounded by
               // the source rate limit + MaxLatencyObservations)
               val om = e.progress.observedMetrics
               Option(om.get(s"${pipeline}_metrics")).foreach { row =>
-                try {
-                  val lats = row.getSeq[Long](row.fieldIndex("lat_ms_sorted"))
-                  if (lats.nonEmpty) batchLats.add((now, ms.toLong, lats))
-                } catch { case _: Throwable => () }
+                val lat = row.getStruct(row.fieldIndex("lat"))
+                val lats = lat.getSeq[Long](lat.fieldIndex("ms_sorted"))
+                if (lats.nonEmpty) batchLats.add((now, lats))
               }
             }
           // SPARK_GRAFT_STREAM_PROFILE=1: dump the full progress JSON
@@ -176,15 +171,14 @@ object StreamBench {
     Sinks.InMemoryMetadataSink.clear("sbench")
     // durable = filesystem-backed sinks (real atomic-move writes per chunk)
     // instead of the in-memory stores
-    val (objects, meta): (Sinks.ObjectStore, Sinks.MetadataSink) =
-      if (durable) {
-        val root = java.nio.file.Files.createTempDirectory("graft-sbench-store")
-        (new Sinks.FileObjectStore(s"$root/objects"),
-         new Sinks.FileMetadataSink(s"$root/meta"))
-      } else
+    val storeRoot =
+      if (durable) Some(Files.createTempDirectory("graft-sbench-store")) else None
+    val (objects, meta): (Sinks.ObjectStore, Sinks.MetadataSink) = storeRoot match {
+      case Some(root) =>
+        (new Sinks.FileObjectStore(s"$root/objects"), new Sinks.FileMetadataSink(s"$root/meta"))
+      case None =>
         (new Sinks.InMemoryObjectStore("sbench"), new Sinks.InMemoryMetadataSink("sbench"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sbench-ckpt").toString
-
+    }
     // Size the keyed stage's state-store count to the operating point (see
     // DefaultStatePartitions): the conf is read at stream start (fresh
     // checkpoint each run), restored after so batch work on a shared
@@ -192,29 +186,34 @@ object StreamBench {
     val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
 
+    val ckptDir = Files.createTempDirectory("graft-sbench-ckpt")
+    val ckpt = ckptDir.toString
     val t0 = System.nanoTime()
-    val q =
-      if (vod)
-        Pipelines.startVod(
-          StreamSources.syntheticVodSource(spark, rowsPerSecond = rps, nStreams = 16),
-          objects, meta, ckpt)
-      else
-        Pipelines.startLive(
-          StreamSources.syntheticLiveSource(spark, rowsPerSecond = rps, nStreams = 16),
-          objects, meta, ckpt)
-    try q.awaitTermination(seconds * 1000L) finally {
-      // Stop BETWEEN triggers, not mid-batch: stop() interrupts any
-      // in-flight foreachPartition task and the killed task's stack trace
-      // lands in the bench output looking like a sink failure (r8 "what's
-      // wrong" #2). With a 1 s trigger and sub-second batches there is an
-      // idle window every cycle; wait (bounded) for the current trigger to
-      // finish, then stop while the query is idle.
-      val deadline = System.nanoTime() + 10_000_000_000L
-      try while (q.status.isTriggerActive && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      catch { case _: Throwable => () }
-      q.stop()
-    }
+    // the store and checkpoint dirs live only as long as the query
+    try {
+      val q =
+        if (vod)
+          Pipelines.startVod(
+            StreamSources.syntheticVodSource(spark, rowsPerSecond = rps, nStreams = 16),
+            objects, meta, ckpt)
+        else
+          Pipelines.startLive(
+            StreamSources.syntheticLiveSource(spark, rowsPerSecond = rps, nStreams = 16),
+            objects, meta, ckpt)
+      try q.awaitTermination(seconds * 1000L) finally {
+        // Stop BETWEEN triggers, not mid-batch: stop() interrupts any
+        // in-flight foreachPartition task and the killed task's stack trace
+        // lands in the bench output looking like a sink failure (r8 "what's
+        // wrong" #2). With a 1 s trigger and sub-second batches there is an
+        // idle window every cycle; wait (bounded) for the current trigger to
+        // finish, then stop while the query is idle.
+        val deadline = System.nanoTime() + 10_000_000_000L
+        try while (q.status.isTriggerActive && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        catch { case _: Throwable => () }
+        q.stop()
+      }
+    } finally (storeRoot.toSeq :+ ckptDir).foreach(d => TempStores.deleteRecursively(d.toFile))
     val wallSec = (System.nanoTime() - t0) / 1e9
     spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
 
@@ -255,16 +254,11 @@ object StreamBench {
       .flatMap(p => p.value.map(f => p.panel -> f()))
     // Exact per-chunk latency over the steady window (r14 verdict #1): rank
     // selection over every chunk's recorded latency — no bucket
-    // interpolation. Both anchors (trigger timestamp; + batch duration =
-    // delivery completion) come from the same per-batch observe rows.
-    val steadyLatBatches = batchLats.asScala.toSeq
+    // interpolation.
+    val dlvLats = batchLats.asScala.toSeq
       .filter(_._1 - firstBatchNs >= warmupSec * 1_000_000_000L)
-    val trigLats = steadyLatBatches.flatMap(_._3).sorted
-    val dlvLats = steadyLatBatches.flatMap { case (_, batchMs, ls) =>
-      ls.map(_ + batchMs)
-    }.sorted
-    val exact = ExactLatency(trigLats.size,
-      pct(trigLats, 0.5), pct(trigLats, 0.95), pct(trigLats, 0.99),
+      .flatMap(_._2).sorted
+    val exact = ExactLatency(dlvLats.size,
       pct(dlvLats, 0.5), pct(dlvLats, 0.95), pct(dlvLats, 0.99))
     Result(
       chunksPerSec = processed / wallSec, chunks = processed, wallSec = wallSec,

@@ -135,6 +135,28 @@ class LayoutSpec extends SparkSpec {
     assert(gotM.filter($"got" =!= $"want").count() === 0L)
   }
 
+  test("exactNtile rejects inputs carrying its reserved working columns") {
+    for (c <- Seq("__rank", "__PID", "__c")) {
+      val e = intercept[IllegalArgumentException](
+        Layout.exactNtile(Seq((1L, 2L)).toDF("k", c), Seq($"k"), 4, "got"))
+      assert(e.getMessage.contains(c), e.getMessage)
+    }
+  }
+
+  test("exactNtile fails the query when a range partition reaches its row limit") {
+    val df = (0 until 100).map(_.toLong).toDF("k")
+    // 100 rows over 4 range partitions: the largest holds at least 25
+    val e = intercept[Exception](
+      Layout.exactNtile(df, Seq($"k"), 4, "got", maxPartitionRows = 25L).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("exactNtile: range partition")), e.toString)
+    // under a limit no partition reaches, the tiling is the usual one
+    val ok = Layout.exactNtile(df, Seq($"k"), 4, "got", maxPartitionRows = 101L)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(ok === (0L until 100L).map(k => k -> (k / 25 + 1).toInt).toMap)
+  }
+
   test("rangeBalance sends boundary ties to the lower bucket") {
     // boundaries at 10 and 20; value exactly 10 goes to bucket 0
     val bounds = Seq((1L, 10.0), (2L, 20.0)).toDF("bucket", "boundary")

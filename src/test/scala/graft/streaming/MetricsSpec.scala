@@ -80,6 +80,9 @@ class MetricsSpec extends AnyFunSuite {
         |# HELP spark_state_commit_sum_ms State store commit ms per stateful operator, summed across its store partitions for the last batch (work, not wall latency)
         |# TYPE spark_state_commit_sum_ms gauge
         |spark_state_commit_sum_ms 0
+        |# HELP spark_codegen_compilations_total Generated classes compiled by Spark codegen in this JVM
+        |# TYPE spark_codegen_compilations_total counter
+        |spark_codegen_compilations_total 0
         |""".stripMargin
     assert(Metrics.exposition === expected)
     Metrics.reset()

@@ -742,14 +742,13 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(rate > 0.0 && math.abs(rate - r.chunksPerSec) < r.chunksPerSec,
       s"panel rate $rate vs measured ${r.chunksPerSec}")
     // exact per-chunk latency (r14 verdict #1): every steady chunk's raw
-    // latency arrives on the observe channel, and the exact p99 is
-    // consistent with the interpolated panel's source histogram — the
-    // delivered form is the trigger form plus a positive batch duration
+    // latency arrives on the observe channel, read at delivery, after the
+    // event was generated; the panel's source histogram observed every
+    // processed chunk exactly once
     val ex = r.exactLatency
     assert(ex.samples > 0, "steady window must carry exact latency samples")
-    assert(ex.trigP50 <= ex.trigP95 && ex.trigP95 <= ex.trigP99)
-    assert(ex.dlvP50 > ex.trigP50 && ex.dlvP99 >= ex.trigP99,
-      "delivery-completion latency must exceed the trigger-anchored form")
+    assert(0 < ex.dlvP50 && ex.dlvP50 <= ex.dlvP95 && ex.dlvP95 <= ex.dlvP99)
+    assert(Metrics.latencyHistogram("live").last._2 === r.chunks)
     Dashboard.series.clear()
     Metrics.reset()
   }
@@ -777,20 +776,71 @@ class StreamingPipelineSpec extends SparkSpec {
     Metrics.reset()
   }
 
-  test("TopLatenciesAgg: deterministic, order-independent, keeps the " +
-      "LARGEST when the cap binds (p99 stays exact)") {
-    val agg = new Pipelines.TopLatenciesAgg(4)
-    def fold(xs: Seq[Long]): Seq[Long] =
-      agg.finish(xs.foldLeft(agg.zero)(agg.reduce))
-    val xs = Seq(5L, 1L, 9L, 3L, 7L, 2L, 8L)
-    assert(fold(xs) === Seq(9L, 8L, 7L, 5L))
-    assert(fold(scala.util.Random.shuffle(xs)) === fold(xs))
-    // merge path == single-partition path
-    val (a, b) = xs.splitAt(3)
-    val merged = agg.finish(agg.merge(
-      a.foldLeft(agg.zero)(agg.reduce), b.foldLeft(agg.zero)(agg.reduce)))
-    assert(merged === fold(xs))
-    // under-cap: everything survives, descending
-    assert(fold(Seq(2L, 4L, 1L)) === Seq(4L, 2L, 1L))
+  test("LatencyAgg (fixed clock): bands at the bucket edges, largest-first " +
+      "under the cap, order-independent, merge equals a single fold") {
+    val now = 1000000L
+    val agg = new Pipelines.LatencyAgg(4, () => now)
+    def buf(lats: Seq[Long]) =
+      lats.foldLeft(agg.zero)((b, l) => agg.reduce(b, java.lang.Long.valueOf(now - l)))
+    def fold(lats: Seq[Long]) = agg.finish(buf(lats))
+    // le semantics: exactly at an edge stays in the bucket, 1 ms above moves
+    // up; a clock behind the event time lands in the first band
+    val edges = fold(Seq(100L, 101L, 250L, 16000L, 16001L, -5L))
+    assert(edges.bands === Seq(2L, 2L, 0L, 0L, 0L, 0L, 0L, 1L, 1L))
+    assert(edges.sum_ms === 32447L)
+    assert(edges.ms_sorted === Seq(16001L, 16000L, 250L, 101L))
+    // null event times are skipped
+    assert(agg.finish(agg.reduce(agg.zero, null)) === fold(Nil))
+    // the cap binds inside reduce and merge: the 4 largest survive, largest first
+    val xs = scala.util.Random.shuffle((1L to 50L).toList)
+    val all = fold(xs)
+    assert(all.ms_sorted === Seq(50L, 49L, 48L, 47L))
+    assert(all.bands.sum === 50L && all.sum_ms === 1275L)
+    assert(fold(scala.util.Random.shuffle(xs)) === all)
+    val (a, b) = xs.splitAt(17)
+    assert(agg.finish(agg.merge(buf(a), buf(b))) === all)
+    // under the cap: everything survives, descending
+    assert(fold(Seq(2L, 4L, 1L)).ms_sorted === Seq(4L, 2L, 1L))
+  }
+
+  test("live query: steady micro-batches over Kafka-shaped frames compile " +
+      "no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    Sinks.InMemoryObjectStore.clear("cg-obj")
+    Sinks.InMemoryMetadataSink.clear("cg-meta")
+    // frames carry their own kafka_timestamp, as the Kafka source's do
+    val stream = MemoryStream[(String, Timestamp)]
+    val ckpt = Files.createTempDirectory("ckpt-live-codegen").toString
+    val meta = new Sinks.InMemoryMetadataSink("cg-meta")
+    val q = Pipelines.startLive(
+      StreamSources.frames(stream.toDF().toDF("value", "kafka_timestamp")),
+      new Sinks.InMemoryObjectStore("cg-obj"), meta,
+      ckpt, trigger = Trigger.ProcessingTime(0), queryName = "live-codegen")
+    def batch(i: Long): Unit = {
+      val ts = new Timestamp(System.currentTimeMillis())
+      stream.addData(Seq("s-a", "s-b", "s-c").map(sid =>
+        (eventJson(sid, i, i, dur(i)), ts)) :+ (("{broken", ts)))
+      q.processAllAvailable()
+    }
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Metrics.reset()
+    withListener {
+      try {
+        // warm-up: the query compiles its code once, over its first two
+        // batches (the second still compiles 2 classes the first did not)
+        (0L to 1L).foreach(batch)
+        val before = compiled
+        (2L to 4L).foreach(batch)
+        assert(compiled === before, "steady batches recompiled generated code")
+        // the listener publishes the JVM's count on every progress event
+        awaitCounter("spark_codegen_compilations_total", before)
+        assert(Metrics.counter("spark_codegen_compilations_total") === before)
+        assert(Metrics.exposition.contains(s"\nspark_codegen_compilations_total $before\n"))
+      } finally q.stop()
+    }
+    assert(meta.count("live_metadata") === 15L) // 3 streams x 5 batches
+    Metrics.reset()
   }
 }
