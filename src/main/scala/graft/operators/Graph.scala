@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics as relational fixed-point loops — each
   * iteration is one hash join (ranks ⋈ edges, keyed by node) plus one
@@ -62,7 +66,23 @@ object Graph {
     * Overflow headroom: rank ≤ nodes·scale and contributions multiply by an
     * edge count, so the intermediate fits a long whenever
     * nodes·scale·maxCnt < 2⁶³ — 10⁶ nodes at the default micro-scale leaves
-    * 6 orders of magnitude for edge weights.
+    * 6 orders of magnitude for edge weights. Past it the loop fails loudly
+    * (exact arithmetic), never wraps.
+    *
+    * Round shape: the co-partitioned join of the RDD paper (Zaharia et al.,
+    * NSDI'12 §3.2.2). Links and the node set are hash-partitioned by node
+    * ONCE, under one partitioner of `spark.sql.shuffle.partitions` width,
+    * and persisted for the loop; every rank vector keeps that partitioner.
+    * So each round's links⋈ranks and nodes⋈contrib joins are narrow, and
+    * the dst-keyed contribution sum — the propagation itself — is the
+    * round's only shuffle. Rounds are stages, not jobs: a run of up to
+    * [[LineageRounds]] rounds is one Spark job (see [[pageRankRdd]]).
+    *
+    * Null nodes keep the SQL equi-join semantics the recurrence was first
+    * written in (a null key matches nothing): edges out of a null src never
+    * propagate, mass sent to a null dst is dropped (it still counts in the
+    * sender's out-degree), and a null node ranks at the teleport floor.
+    * RDD joins DO match null keys, so the loop filters them explicitly.
     */
   def pageRankFixedPoint(
       edges: DataFrame,
@@ -79,50 +99,75 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(cntCol).cast("long").as("cnt"))
       .groupBy("src", "dst").agg(sum("cnt").as("cnt"))
-    val outDeg = e.groupBy("src").agg(sum("cnt").as("out_total"))
-    // Materialize the loop-invariant edge list (with its per-edge
-    // denominator) and node set ONCE — without this every iteration's
-    // lineage re-derives them from the raw input, turning a k-round loop
-    // into k full source scans. Same eager-materialization discipline as
-    // the connected-components loop in [[Dedup]].
-    //
-    // Both invariants are PRE-PARTITIONED on their loop join key before the
-    // checkpoint (r19, guide §2.4): Dataset.checkpoint preserves the
-    // physical plan's output partitioning through the materialized RDD, so
-    // every round's ranks⋈eo join (keyed node = src) and the nodes⋈contrib
-    // left join (keyed node) find their inputs already hash-distributed
-    // and plan NO exchange for them. Each round then pays exactly ONE
-    // exchange — the dst-keyed contrib aggregation, which IS the
-    // propagation and cannot be removed. The explicit width pins
-    // REPARTITION_BY_NUM (not AQE-coalescible) so the co-partitioning
-    // stays aligned round to round; width follows the session conf, never
-    // a local constant.
-    val width = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val eo = Loops.roundCheckpoint(
-      e.join(outDeg, "src").repartition(width, col("src")))
-    val nodes = Loops.roundCheckpoint(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .repartition(width, col("node")).distinct())
+    val (ranks, held) = pageRankRdd(e, iters, dampPct, scale)
+    val schema = StructType(Seq(
+      StructField("node", e.schema("src").dataType,
+        e.schema("src").nullable || e.schema("dst").nullable),
+      StructField("rank", LongType, nullable = false)))
+    // One materialization for the whole loop: the returned frame is backed
+    // by rows (reliable checkpoint storage when the session asks for it),
+    // so the loop's persisted inputs can be released before returning.
+    val out = Loops.roundCheckpoint(e.sparkSession.createDataFrame(
+      ranks.map { case (n, r) => Row(n, r) }, schema))
+    held.foreach(_.unpersist(blocking = false))
+    out
+  }
+
+  /** Rounds between materializations of the rank vector in long runs. A run
+    * of at most this many rounds is one Spark job; a longer one builds a
+    * DAG of at most this many rounds per job instead of one deep DAG. */
+  private[operators] val LineageRounds = 10
+
+  /** The PageRank loop over the canonical edge frame `e` (src, dst, cnt;
+    * one row per pair). Returns the rank RDD — not yet materialized, keyed
+    * by node under the loop's partitioner — and the persisted RDDs its
+    * lineage reads, which the caller releases once it has materialized the
+    * ranks. */
+  private[operators] def pageRankRdd(
+      e: DataFrame,
+      iters: Int,
+      dampPct: Long,
+      scale: Long): (RDD[(Any, Long)], Seq[RDD[_]]) = {
+    // Binary keys hash by array identity on the JVM, so two equal byte
+    // strings would land apart and never join.
+    require(e.schema("src").dataType != BinaryType,
+      "pageRankFixedPoint: binary node ids are not supported")
+    val spark = e.sparkSession
+    val part = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val adj = e.rdd.map(r => (r.get(0), (r.get(1), r.get(2)))).partitionBy(part)
+    val nodes = adj.flatMap { case (s, (d, _)) => Iterator(s -> (), d -> ()) }
+      .reduceByKey(part, (a, _) => a)
+    // SQL's sum skips a null weight and its join matches no null src.
+    val weighted = adj
+      .flatMapValues { case (d, w) => Option(w).map(w => (d, w.asInstanceOf[Long])) }
+      .filter(_._1 != null)
+    val outDeg = weighted.mapValues(_._2).reduceByKey(part, (a, b) => Math.addExact(a, b))
+    val links = weighted.join(outDeg, part)
+      .flatMapValues { case ((d, w), out) => if (d == null) None else Some((d, w, out)) }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    nodes.persist(StorageLevel.MEMORY_AND_DISK)
     val base = (100L - dampPct) * scale / 100L
-    var ranks = nodes.withColumn("rank", lit(scale))
+    var ranks: RDD[(Any, Long)] = nodes.mapValues(_ => scale)
+    var frontier: RDD[(Any, Long)] = null
     for (i <- 1 to iters) {
-      val contrib = ranks.join(eo, ranks("node") === eo("src"))
-        .select(col("dst").as("node"),
-          expr("(rank * cnt) div out_total").as("c"))
-        .groupBy("node").agg(sum("c").as("c"))
-      val next = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"($dampPct * coalesce(c, 0L)) div 100")).as("rank"))
-      // Checkpoint CADENCE 2 (r19, the BPE-trainer treatment, guide §1.2
-      // per-round fixed costs): the q138 profile showed 63 jobs of 5-30 ms
-      // — per-round action floors, not compute. Materializing every 2nd
-      // round fuses two propagation steps into one query execution (half
-      // the actions; plan depth stays bounded at two rounds), and the
-      // final round always materializes so the returned frame is backed by
-      // rows, exactly as before.
-      ranks = if (i % 2 == 0 || i == iters) Loops.roundCheckpoint(next) else next
+      val contrib = links.join(ranks, part)
+        .map { case (_, ((d, w, out), rank)) => (d, Math.multiplyExact(rank, w) / out) }
+        .reduceByKey(part, (a, b) => Math.addExact(a, b))
+      ranks = nodes.leftOuterJoin(contrib, part).mapValues { case (_, c) =>
+        Math.addExact(base, Math.multiplyExact(dampPct, c.getOrElse(0L)) / 100L)
+      }
+      if (i % LineageRounds == 0 && i < iters) {
+        // Truncate here; the RDD form keeps the partitioner, so the next
+        // rounds' joins stay narrow. The previous frontier is unreachable
+        // once this one is materialized.
+        Loops.markCheckpoint(spark, ranks)
+        ranks.count()
+        if (frontier != null) frontier.unpersist(blocking = true)
+        frontier = ranks
+      }
     }
-    ranks
+    (ranks, Seq(links, nodes) ++ Option(frontier))
   }
 
   /** User co-engagement graph over an event log: an undirected edge (src <

@@ -45,9 +45,10 @@ object Loops {
     if (reliable(ds.sparkSession)) ds.checkpoint(eager = true)
     else ds.localCheckpoint(eager = true)
 
-  /** RDD form for loops that round-trip through RDDs for fresh attribute
-    * ids (the CC label loop). Marks only; the caller materializes with its
-    * own action (checkpointing completes on that action either way).
+  /** RDD form for loops that run on RDDs: the CC label loop (round-trips
+    * for fresh attribute ids) and PageRank's rank frontier (keeps its
+    * partitioner). Marks only; the caller materializes with its own action
+    * (checkpointing completes on that action either way).
     *
     * Reliable mode persists BEFORE marking: `RDD.checkpoint()` on an
     * unpersisted RDD makes the separate checkpoint-writing job RECOMPUTE

@@ -1,11 +1,15 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.{HashPartitioner, OneToOneDependency, Partitioner, ShuffleDependency}
+import org.apache.spark.rdd.{CoGroupedRDD, RDD}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Fixed-point PageRank pinned against a single-threaded reference
   * implementation of the same integer recurrence, plus its structural
   * invariants (fixed points, dangling mass, determinism at any
-  * parallelism). */
+  * parallelism) and the shape of its loop (co-partitioned narrow joins,
+  * one job per call, no leaked storage). */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,6 +33,62 @@ class GraphSpec extends SparkSpec {
     Graph.pageRankFixedPoint(edges.toDF("src", "dst", "cnt"), iters = iters)
       .collect().map(r => r.getAs[String]("node") -> r.getAs[Long]("rank")).toMap
 
+  /** One row per (src, dst) with summed weights, as the operator
+    * canonicalizes its input. */
+  private def canonical(edges: Seq[(String, String, Long)]): Seq[(String, String, Long)] =
+    edges.groupBy(e => (e._1, e._2)).map { case ((s, d), es) => (s, d, es.map(_._3).sum) }.toSeq
+
+  /** Runs the loop on canonical edges and hands its rank RDD and the
+    * partitioner the loop should use (session width) to `f`, releasing the
+    * loop's persisted inputs after. */
+  private def withRanks[T](edges: Seq[(String, String, Long)], iters: Int)(
+      f: (RDD[(Any, Long)], Partitioner) => T): T = {
+    val (ranks, held) = Graph.pageRankRdd(edges.toDF("src", "dst", "cnt"), iters, 85L, 1000000L)
+    try f(ranks, new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    finally held.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Every RDD the given one's lineage reaches, each once. */
+  private def lineage(rdd: RDD[_]): Seq[RDD[_]] = {
+    val seen = scala.collection.mutable.LinkedHashMap[Int, RDD[_]]()
+    def walk(r: RDD[_]): Unit = if (!seen.contains(r.id)) {
+      seen(r.id) = r
+      r.dependencies.foreach(d => walk(d.rdd))
+    }
+    walk(rdd)
+    seen.values.toSeq
+  }
+
+  /** Spark jobs `f` runs from this thread. The listener bus is async: a
+    * fence job in its own group, seen after every job `f` started, closes
+    * the count. */
+  private def jobs(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graphspec-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => n.incrementAndGet(); ()
+          case Some(g) if g == s"$group-fence" => fenced.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "graph spec")
+      f
+      sc.setJobGroup(s"$group-fence", "graph spec fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      n.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
   test("symmetric 2-cycle is a fixed point at the initial mass") {
     val got = run(Seq(("a", "b", 1L), ("b", "a", 1L)))
     assert(got === Map("a" -> 1000000L, "b" -> 1000000L))
@@ -48,13 +108,79 @@ class GraphSpec extends SparkSpec {
   test("deterministic across shuffle parallelism (integer arithmetic has no summation order)") {
     val edges = (1 to 200).map(i => (s"n${i % 50}", s"n${(i * 7) % 50}", (i % 5 + 1).toLong))
     val df = edges.toDF("src", "dst", "cnt")
-    val a = Graph.pageRankFixedPoint(df.repartition(1), iters = 5)
+    def ranks(in: org.apache.spark.sql.DataFrame) = Graph.pageRankFixedPoint(in, iters = 5)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val b = Graph.pageRankFixedPoint(df.repartition(7), iters = 5)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(a === b)
-    assert(a === refRanks(edges.groupBy(e => (e._1, e._2)).map {
-      case ((s, d), es) => (s, d, es.map(_._3).sum) }.toSeq, 5))
+    val ref = refRanks(canonical(edges), 5)
+    // the input's partitioning
+    assert(ranks(df.repartition(1)) === ref)
+    assert(ranks(df.repartition(7)) === ref)
+    // the session's width (the loop's partitioner) and AQE
+    val conf = spark.conf
+    val (width, aqe) = (conf.get("spark.sql.shuffle.partitions"),
+      conf.get("spark.sql.adaptive.enabled"))
+    try for (w <- Seq(1, 4, 7); a <- Seq(true, false)) {
+      conf.set("spark.sql.shuffle.partitions", w.toLong)
+      conf.set("spark.sql.adaptive.enabled", a)
+      assert(ranks(df) === ref, s"shuffle.partitions=$w adaptive=$a")
+    } finally {
+      conf.set("spark.sql.shuffle.partitions", width)
+      conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+  }
+
+  test("null nodes keep SQL join semantics (null src never propagates, mass to null is dropped); binary ids refused") {
+    val got = Graph.pageRankFixedPoint(
+        Seq[(String, String, Long)](("a", "b", 3L), ("a", null, 1L), (null, "b", 2L),
+          ("b", "a", 1L), ("b", "c", 1L)).toDF("src", "dst", "cnt"), iters = 10)
+      .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(got === Map(Some("a") -> 294216L, Some("b") -> 337872L,
+      Some("c") -> 294216L, None -> 150000L))
+    // byte-array ids hash by identity on the JVM: refused, not mis-joined
+    intercept[IllegalArgumentException](Graph.pageRankFixedPoint(
+      Seq((Array[Byte](1), Array[Byte](2), 1L)).toDF("src", "dst", "cnt")))
+  }
+
+  test("long runs bound the lineage every LineageRounds rounds and still match the reference") {
+    val edges = canonical((1 to 60).map(i => (s"n${i % 13}", s"n${(i * 5) % 13}", (i % 3 + 1).toLong)))
+    assert(run(edges, iters = 25) === refRanks(edges, 25))
+    // rounds 21-25 are all the rank RDD still has to recompute
+    def shuffles(iters: Int) = withRanks(edges, iters)((ranks, _) =>
+      lineage(ranks).flatMap(_.dependencies).count(_.isInstanceOf[ShuffleDependency[_, _, _]]))
+    assert(shuffles(25) === shuffles(0) + 25 - 2 * Graph.LineageRounds)
+  }
+
+  test("one call leaves exactly one persisted RDD: the returned frame's checkpoint") {
+    val sc = spark.sparkContext
+    val df = Seq(("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L), ("c", "a", 1L)).toDF("src", "dst", "cnt")
+    for (iters <- Seq(0, 10, 25)) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = Graph.pageRankFixedPoint(df, iters = iters)
+      assert((sc.getPersistentRDDs.keySet.toSet -- before).size === 1, s"iters=$iters")
+      assert(out.count() === 3L)
+    }
+  }
+
+  test("co-partitioned rounds: one ShuffleDependency per round, every join narrow, one loop job") {
+    val edges = canonical((1 to 40).map(i => (s"n${i % 9}", s"n${(i * 4) % 9}", (i % 4 + 1).toLong)))
+    def shape(iters: Int) = withRanks(edges, iters) { (ranks, part) =>
+      val rdds = lineage(ranks)
+      val cogroups = rdds.collect { case c: CoGroupedRDD[_] => c }
+      // links ⋈ ranks and nodes ⋈ contrib per round, each on the loop's
+      // partitioner, plus links' own weighted ⋈ outDeg once rounds read it
+      assert(cogroups.size === (if (iters == 0) 0 else 1 + 2 * iters))
+      assert(cogroups.forall(c => c.partitioner.contains(part) &&
+        c.dependencies.forall(_.isInstanceOf[OneToOneDependency[_]])),
+        "every join must be narrow")
+      assert(ranks.partitioner.contains(part))
+      rdds.flatMap(_.dependencies).count(_.isInstanceOf[ShuffleDependency[_, _, _]])
+    }
+    val setup = shape(0)
+    assert(shape(2) === setup + 2)
+    assert(shape(10) === setup + 10)
+    // rounds add stages, not jobs
+    val df = edges.toDF("src", "dst", "cnt")
+    assert(jobs(Graph.pageRankFixedPoint(df, iters = 2)) ===
+      jobs(Graph.pageRankFixedPoint(df, iters = 10)))
   }
 
   test("zero iterations returns the uniform initial vector") {
