@@ -51,7 +51,7 @@ object GraftSql {
   def registerOperatorViews(spark: SparkSession, dir: String): Unit = {
     val docs = Tables(spark, dir, "documents")
     Dedup.exact(docs).createOrReplaceTempView("graft_dedup_groups")
-    Retrieval.bm25TopK(docs, nQueryTerms = 10, topK = 10, spread = true)
+    Retrieval.bm25TopK(docs, nQueryTerms = 10, topK = 10)
       .createOrReplaceTempView("graft_bm25_topk")
   }
 

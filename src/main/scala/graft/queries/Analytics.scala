@@ -195,8 +195,10 @@ object Analytics extends QueryModule {
     QueryDef("q133_bm25_topk",
       (s, dir) => {
         import s.implicits._
-        Retrieval.bm25TopK(t(s, dir, "documents"), nQueryTerms = 10, topK = 10,
-          spread = true)
+        // no spread: the extra (id, text) exchange regressed q133 2.0x at
+        // sf0.1, ties standalone at sf0.01 and adds task time (PROFILING.md,
+        // "Table resolution: one schema inference per file version")
+        Retrieval.bm25TopK(t(s, dir, "documents"), nQueryTerms = 10, topK = 10)
           .orderBy($"term", $"rank")
       },
       Some("""WITH tok AS (SELECT doc_id,

@@ -3,7 +3,6 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.{HashPartitioner, OneToOneDependency, Partitioner, ShuffleDependency}
 import org.apache.spark.rdd.{CoGroupedRDD, RDD}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Fixed-point PageRank pinned against a single-threaded reference
   * implementation of the same integer recurrence, plus its structural
@@ -57,36 +56,6 @@ class GraphSpec extends SparkSpec {
     }
     walk(rdd)
     seen.values.toSeq
-  }
-
-  /** Spark jobs `f` runs from this thread. The listener bus is async: a
-    * fence job in its own group, seen after every job `f` started, closes
-    * the count. */
-  private def jobs(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graphspec-${java.util.UUID.randomUUID}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => n.incrementAndGet(); ()
-          case Some(g) if g == s"$group-fence" => fenced.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "graph spec")
-      f
-      sc.setJobGroup(s"$group-fence", "graph spec fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      n.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
   }
 
   test("symmetric 2-cycle is a fixed point at the initial mass") {
