@@ -279,8 +279,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id",
       k: Int = 16,
-      shingle: Int = 3,
-      spread: Boolean = false): DataFrame = {
+      shingle: Int = 3): DataFrame = {
     // explode_outer keeps shingle-less docs as a single null-hash row, so
     // no second scan + join-back is needed to preserve them; the guarded
     // hash leaves their mins null -> coalesced to the Long.MaxValue sentinel
@@ -290,27 +289,10 @@ object Dedup {
     // min over the hash multiset equals min over the distinct set, so the
     // signature stays bit-identical to the per-row distinct form while the
     // scan skips both the string materialization and the string distinct.
-    //
-    // `spread` (r19, same guard as exactSubstrGrams): the shingle hash walk
-    // and the k map-side partial mins inherit the SCAN's split count — ONE
-    // task on a single-row-group fixture file (q46 profile: the whole
-    // signature build ran 321 ms in 1 of 32 tasks). Spreading the (id,
-    // text) rows first costs one ~1 byte/char exchange; the hash walk then
-    // runs at spark.sql.shuffle.partitions-way parallelism. Opt-in for the
-    // batch self-dedup callers; default false keeps the map-only shape for
-    // incremental/streaming banding ([[bandedSignatures]]), where an extra
-    // per-batch text shuffle is pure cost.
-    val base = docs.select(col(idCol).as("id"), col(textCol).as("__t"))
-    val sprd =
-      if (spread)
-        base.repartition(
-          docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("id"))
-      else base
-    val hashed = sprd
-      .select(col("id"),
+    val hashed = docs
+      .select(col(idCol).as("id"),
         explode_outer(org.apache.spark.sql.graft.ArrayExpressions
-          .wordShingleHashes(col("__t"), shingle)).as("h"))
+          .wordShingleHashes(col(textCol), shingle)).as("h"))
       // the null guard must wrap the FAMILY hash too: xxhash64 skips null
       // arguments (hashing just the seed) instead of propagating null
       .select(col("id") +: (0 until k).map(seed =>
@@ -365,8 +347,11 @@ object Dedup {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val rows = k / bands
-    val sig = minhashSignatureTable(docs, textCol, idCol, k, shingle,
-        spread = true) // batch self-dedup: parallelize the hash walk (r19)
+    // batch self-dedup: spread the (id, text) rows so the shingle hash walk
+    // and the k partial mins run at conf width, not the scan's split count
+    // (q46 profile: the whole signature build ran 321 ms in 1 of 32 tasks)
+    val sig = minhashSignatureTable(Layout.spread(docs, col(idCol)), textCol, idCol, k,
+        shingle)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // No explicit eager fill here (r18, measured): capBuckets' sampled
     // occupancy probe below is the first action and already materializes
@@ -512,16 +497,11 @@ object Dedup {
     // SSJoin index build's temp-table materialization; partition-local
     // checkpoint is the single-JVM analog and spills.
     //
-    // Spread first (r19, same guard as minhashSignatureTable, applied
-    // unconditionally because this operator is always a batch self-join):
-    // the distinctShingles kernel — the dominant CPU of this operator —
-    // inherits the scan's split count, ONE task on a single-row-group
-    // fixture file, and the eager checkpoint then materializes it
-    // sequentially. One ~1 byte/char (id, text) exchange parallelizes the
-    // kernel at pinned conf width (non-coalescible REPARTITION_BY_NUM).
-    val sh = docs.select(col(idCol).as("id"), col(textCol).as("__t"))
-      .repartition(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+    // Spread first (always: this operator is a batch self-join): the
+    // distinctShingles kernel — its dominant CPU — would otherwise run on
+    // the scan's splits, and the eager checkpoint would materialize it
+    // sequentially.
+    val sh = Layout.spread(docs.select(col(idCol).as("id"), col(textCol).as("__t")),
         col("id"))
       .select(col("id"),
         explode(TextFunctions.distinctShingles(col("__t"), shingle)).as("sh"))
@@ -778,21 +758,8 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id",
       k: Int = 8,
-      w: Int = 8,
-      spread: Boolean = false): DataFrame = {
-    // `spread` (r19, same opt-in guard as minhashSignatureTable): the
-    // char-gram hash walk + SlidingMin kernel inherit the scan's split
-    // count — ONE task on a single-row-group fixture file. One ~1 byte/char
-    // (id, text) exchange first parallelizes the walk; default false keeps
-    // the map-only scan shape (q57's audit pass) where input splits already
-    // provide parallelism.
-    val base =
-      if (spread)
-        docs.select(col(idCol), col(textCol)).repartition(
-          docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-          col(idCol))
-      else docs
-    val grams = charGramHashes(base, textCol, idCol, k)
+      w: Int = 8): DataFrame = {
+    val grams = charGramHashes(docs, textCol, idCol, k)
     grams.select(col("id"),
       array_distinct(ArrayExpressions.slidingMin(col("gh"), w)).as("fingerprints"),
       size(col("gh")).as("n_grams"))
@@ -889,8 +856,10 @@ object Dedup {
       minShared: Int = 2,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val fps = winnowingFingerprintTable(docs, textCol, idCol, k, w,
-        spread = true) // batch self-dedup: parallelize the gram walk (r19)
+    // batch self-dedup: spread so the char-gram walk + SlidingMin kernel
+    // run at conf width, not on the scan's splits
+    val fps = winnowingFingerprintTable(Layout.spread(docs, col(idCol)), textCol, idCol,
+        k, w)
       .select(col("id"), explode(col("fingerprints")).as("fph"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     fps.count() // eager fill (r18) — see exactSubstrSpans
@@ -949,7 +918,7 @@ object Dedup {
       idCol: String = "doc_id",
       maxBucket: Int = 0): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    val grams = exactSubstrGrams(docs, minLen, textCol, idCol, spread = true)
+    val grams = exactSubstrGrams(Layout.spread(docs, col(idCol)), minLen, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // eager fill (r18): the shared-hash aggregate and both pair-join sides
     // otherwise race the unfilled cache and each re-derive the gram frame
@@ -1028,8 +997,7 @@ object Dedup {
       docs: DataFrame,
       minLen: Int = 40,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      spread: Boolean = false): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
     val L = minLen
     // Gram hashing is the native CharGramHashes kernel (one byte walk per
@@ -1041,30 +1009,15 @@ object Dedup {
     // per row (the r13 scale-ramp's ~24 B/char gram-frame budget already
     // dominates it).
     //
-    // `spread` (r18, guide §2.5): the hash walk + explode inherit the
-    // SCAN's split count — on a single-row-group fixture file that is ONE
-    // task, and the q195 profile showed the whole gram derivation running
-    // ~500-800 ms single-task per consumer. Spreading the (id, text) rows
-    // by id first costs one exchange of ~1 byte/char — small next to the
-    // ~24 byte/char gram frame the span operators shuffle downstream
-    // anyway — so the span-family callers opt in. Callers whose design is
-    // a MAP-ONLY gram projection (the q197 decontamination gate, whose
-    // corpus side must reach a BroadcastHashJoin with no corpus exchange)
-    // keep the default false: there the added text shuffle would be the
-    // heaviest exchange in the job, not 4% of it. Width follows the
-    // session conf; the explicit number keeps AQE from re-coalescing the
-    // fan-out stage down to the input's byte size.
-    val base = docs.filter(length(col(textCol)) >= L)
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("__t"))
-    val sprd =
-      if (spread)
-        base.repartition(
-          docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("id"))
-      else base
-    sprd
-      .select(col("id"),
-        posexplode(ArrayExpressions.charGramHashes(col("__t"), L)))
+    // Map-only, so the q197 decontamination gate's corpus side reaches a
+    // BroadcastHashJoin with no corpus exchange; the span-family callers
+    // spread their input first ([[Layout.spread]]): the q195 profile showed
+    // the whole gram derivation running ~500-800 ms single-task per
+    // consumer, and the ~1 byte/char text exchange is small next to the
+    // ~24 byte/char gram frame they shuffle downstream anyway.
+    docs.filter(length(col(textCol)) >= L)
+      .select(col(idCol).cast("long").as("id"),
+        posexplode(ArrayExpressions.charGramHashes(col(textCol), L)))
       .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("gh"))
   }
@@ -1121,7 +1074,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     val L = minLen
-    val grams = exactSubstrGrams(docs, L, textCol, idCol, spread = true)
+    val grams = exactSubstrGrams(Layout.spread(docs, col(idCol)), L, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     grams.count() // eager fill (r18) — see exactSubstrSpans
     val rep = grams.groupBy(col("id"), col("gh"))
@@ -1317,28 +1270,15 @@ object Dedup {
   def simhashTable(
       docs: DataFrame,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      spread: Boolean = false): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     // One map-only pass: the native SimHash64 kernel tokenizes, hashes and
     // majority-votes per ROW inside whole-stage codegen — no token explode,
     // no 64-column groupBy, no shuffle (the former explode/groupBy form's
     // only shuffle; bit-parity with it and with [[simhash]] is pinned in
     // DedupSpec). coalesce replicates the old explode_outer null fold:
     // NULL text -> every bit sums to -1 -> fingerprint 0.
-    //
-    // `spread` (r19, same guard as minhashSignatureTable): the fingerprint
-    // byte walk inherits the scan's split count (ONE task on a single-row-
-    // group fixture file). The batch self-dedup caller opts in; the default
-    // keeps the map-only no-shuffle shape for everyone else.
-    val base = docs.select(col(idCol).as("id"), col(textCol).as("__t"))
-    val sprd =
-      if (spread)
-        base.repartition(
-          docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("id"))
-      else base
-    sprd.select(col("id"),
-      coalesce(org.apache.spark.sql.graft.ArrayExpressions.simhash64(col("__t")),
+    docs.select(col(idCol).as("id"),
+      coalesce(org.apache.spark.sql.graft.ArrayExpressions.simhash64(col(textCol)),
         lit(0L)).as("simhash"))
   }
 
@@ -1460,7 +1400,8 @@ object Dedup {
       matchBlocks: Int = 1,
       maxHamming: Int = Int.MaxValue): DataFrame =
     signatureHammingPairs(
-      simhashTable(docs, textCol, idCol, spread = true), "id", "simhash",
+      // batch self-dedup: the fingerprint byte walk runs at conf width
+      simhashTable(Layout.spread(docs, col(idCol)), textCol, idCol), "id", "simhash",
       blocks, maxBucket, matchBlocks, maxHamming)
 
   /** Hamming-bounded pairs over ANY 64-bit signature frame — the banded

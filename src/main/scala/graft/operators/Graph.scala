@@ -239,21 +239,16 @@ object Graph {
     // to ONE partition — but the join's OUTPUT is quadratic per apex
     // (Σ C(deg, 2) wedges), and the q167 profile showed the whole wedge
     // stage + partial aggregate running 5.6 s in ONE task (21.8 MB of
-    // partial-agg output from a 0.1 MB input). The EXPLICIT-width hash
-    // repartition on the apex — placed directly over the checkpointed
-    // adjacency, whose Scan ExistingRDD carries no known partitioning, so
-    // the optimizer cannot elide it as redundant — survives as a
-    // REPARTITION_BY_NUM exchange AQE may not re-coalesce, and every
-    // apex-keyed consumer below (degree agg, weight join, both wedge
-    // sides) reuses that ONE exchange at full width instead of adding its
-    // own coalescible one. Width follows the session conf (local cores
-    // here, cluster-sized there), never a constant.
-    val wedgeWidth =
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sym = und.select(col("x").as("node"), col("y").as("nb"))
+    // partial-agg output from a 0.1 MB input). Spreading on the apex
+    // directly over the checkpointed adjacency — whose Scan ExistingRDD
+    // carries no known partitioning, so the optimizer cannot elide the
+    // exchange as redundant — gives every apex-keyed consumer below (degree
+    // agg, weight join, both wedge sides) that ONE exchange at full width
+    // instead of its own coalescible one.
+    val sym = Layout.spread(und.select(col("x").as("node"), col("y").as("nb"))
       .union(und.select(col("y").as("node"), col("x").as("nb")))
-      .localCheckpoint(true) // adjacency: wedge sides + anti-join + degrees
-      .repartition(wedgeWidth, col("node"))
+      .localCheckpoint(true), // adjacency: wedge sides + anti-join + degrees
+      col("node"))
     val deg = sym.groupBy("node").agg(count(lit(1)).as("d"))
     // d >= 2: a degree-1 node can never be a wedge apex, and ln(1) = 0
     // would make the weight projection divide by zero under ANSI mode
@@ -423,19 +418,16 @@ object Graph {
     val withDeg = und
       .join(deg.select(col("node").as("x"), col("degree").as("dx")), "x")
       .join(deg.select(col("node").as("y"), col("degree").as("dy")), "y")
-    val oriented = withDeg.select(
+    // same wedge fan-out guard as adamicAdar (r18): spread the self-join's
+    // input so the quadratic-output wedge enumeration is not one task
+    val oriented = Layout.spread(withDeg.select(
         when(col("dx") < col("dy") ||
             (col("dx") === col("dy") && col("x") < col("y")),
           struct(col("x").as("s"), col("y").as("t")))
           .otherwise(struct(col("y").as("s"), col("x").as("t"))).as("e"))
       .select(col("e.s").as("s"), col("e.t").as("t"))
-      .localCheckpoint(true) // both wedge sides read it
-      // same wedge fan-out guard as adamicAdar (r18): pin the self-join's
-      // width so AQE's input-sized coalescing can't serialize the
-      // quadratic-output wedge enumeration onto one task
-      .repartition(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("s"))
+      .localCheckpoint(true), // both wedge sides read it
+      col("s"))
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.s") === col("e2.s") && col("e1.t") < col("e2.t"))
       .select(col("e1.s").as("a"), col("e1.t").as("b"), col("e2.t").as("c"))

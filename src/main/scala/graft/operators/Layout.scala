@@ -34,6 +34,23 @@ object Layout {
     terms.reduce(_ bitwiseOR _)
   }
 
+  /** Hash-spread `df`'s rows by `keys` over `spark.sql.shuffle.partitions`
+    * partitions, so the narrow work after it runs that many tasks wide
+    * instead of inheriting the scan's split count (ONE task on a
+    * single-row-group fixture file). The width is pinned on purpose: a
+    * widthless `repartition(keys)` plans as REPARTITION_BY_COL, which AQE
+    * coalesces down to the exchange's byte size — the small pre-expansion
+    * input would fold the expensive work back onto a task or two. The
+    * pinned REPARTITION_BY_NUM exchange is not coalescible. Width follows
+    * the session conf (local cores here, cluster-sized there).
+    *
+    * Batch callers spread their own input before handing it to an
+    * operator; operators stay map-only so the same code runs unchanged on
+    * incremental and streaming frames. */
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      keys: _*)
+
   /** Clamp an arbitrary numeric column into the [0, 2^bits) domain a Morton
     * dimension needs (floor for fractionals, saturate at the edges). */
   def clampDim(c: Column, bits: Int): Column =

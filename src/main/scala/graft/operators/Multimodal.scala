@@ -66,20 +66,9 @@ object Multimodal {
     * shuffling media payloads to win parallelism is the §8 anti-pattern —
     * scan parallelism covers them in production, and in this catalog their
     * input is a generator output that is already spread. */
-  private def spreadAssets(assets: DataFrame): Dataset[Asset] = {
-    // Explicit width (r19): a widthless repartition(col) plans as
-    // REPARTITION_BY_COL, which AQE's coalescing may shrink based on the
-    // tiny pre-expansion shuffle bytes — exactly the signal that would fold
-    // the synthesis back toward one task when parallelismFirst=false. The
-    // pinned-width REPARTITION_BY_NUM form (same guard as Graph.adamicAdar
-    // and Sketch's HyperBall spread) is not coalescible; width follows the
-    // session conf, never a local constant.
-    val width =
-      assets.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    assets.select(col("asset_id"), col("media_type"), col("content"))
-      .repartition(width, col("asset_id"))
-      .as(Encoders.product[Asset])
-  }
+  private def spreadAssets(assets: DataFrame): Dataset[Asset] =
+    Layout.spread(assets.select(col("asset_id"), col("media_type"), col("content")),
+      col("asset_id")).as(Encoders.product[Asset])
 
   /** Adapt any (id, text) table into a typed asset table: binary content +
     * media-type metadata (deterministic assignment across the 3 modalities). */

@@ -42,24 +42,8 @@ object Retrieval {
       k1: Double = 1.2,
       b: Double = 0.75,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      spread: Boolean = false): DataFrame = {
-    // `spread` (r19, same opt-in guard as the Dedup signature scans): the
-    // tokenize + explode + map-side partial tf agg inherit the scan's split
-    // count — ONE task on a single-row-group fixture file. One ~1 byte/char
-    // (id, text) exchange first parallelizes the tokenize; the posting
-    // shuffle after partial agg (~3 bytes/char of (doc, term, cnt) rows) is
-    // bigger, so the added exchange never dominates. Default false keeps
-    // the map-only scan shape where input splits already provide
-    // parallelism.
-    val base = docs.select(col(idCol), col(textCol))
-    val sprd =
-      if (spread)
-        base.repartition(
-          docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-          col(idCol))
-      else base
-    val tf = sprd
+      textCol: String = "text"): DataFrame = {
+    val tf = docs
       .select(col(idCol), explode(TextFunctions.tokens(col(textCol))).as("term"))
       .filter(length(col("term")) > 0)
       .groupBy(col(idCol), col("term"))

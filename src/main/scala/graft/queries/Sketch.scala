@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Graph, Sketches}
+import graft.operators.{Graph, Layout, Sketches}
 
 /** Probabilistic-sketch queries over the documents corpus. Unlike
   * `approx_count_distinct`/t-digest (engine-private internals, only
@@ -74,10 +74,8 @@ object Sketch extends QueryModule {
         // parallelism), and both results are exactly preserved: HLL
         // registers max over rho (duplicates never move a max) and
         // count_distinct == count over the distinct frame.
-        val width = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val toks = t(s, dir, "documents")
-          .select($"source", $"doc_id", $"text")
-          .repartition(width, $"doc_id")
+        val toks = Layout.spread(
+            t(s, dir, "documents").select($"source", $"doc_id", $"text"), $"doc_id")
           .select($"source", explode(graft.functions.TextFunctions.tokens($"text"))
             .as("token"))
           .filter(length($"token") > 0)
@@ -138,14 +136,11 @@ object Sketch extends QueryModule {
         // feeds two consumers; vocabulary-sized, it persists cheaply and is
         // filled sequentially by `top`'s checkpoint before `cells` reads it.
         // spread (r19, guide §2.5 input parallelism): the tokenize +
-        // explode + map-side partial agg inherit the scan's split count —
-        // ONE task on the single-row-group fixture file (q87 profile:
-        // 844 ms in 1 of 32 tasks). One ~1 byte/char exchange of (id,
-        // text) first; width follows the session conf.
-        val width = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val counts = t(s, dir, "documents")
-          .select($"doc_id", $"text")
-          .repartition(width, $"doc_id")
+        // explode + map-side partial agg would otherwise run on the scan's
+        // splits — ONE task on the single-row-group fixture file (q87
+        // profile: 844 ms in 1 of 32 tasks).
+        val counts = Layout.spread(t(s, dir, "documents").select($"doc_id", $"text"),
+            $"doc_id")
           .select(explode(graft.functions.TextFunctions.tokens($"text")).as("token"))
           .filter(length($"token") > 0)
           .groupBy($"token").agg(count(lit(1)).as("exact_n"))
@@ -549,18 +544,15 @@ object Sketch extends QueryModule {
           .union(edges.select($"dst".as("node"), $"src".as("nb")))
         val ball1 = sym.select($"node", $"node".as("item"))
           .union(sym.select($"node", $"nb".as("item")))
-        // Explicit-width spread of the checkpointed register table (r18,
-        // guide §2.5): the propagation join's INPUT is small, so AQE
-        // coalesced it to 2 tasks while its OUTPUT fans out to
-        // edges x 64 buckets — profiled at 2.3 s in 2 tasks (13.6 MB of
-        // partial-agg output from 7.3 MB in). The repartition sits over the
-        // checkpoint's Scan ExistingRDD (no known partitioning), so it
-        // survives as a non-coalescible REPARTITION_BY_NUM exchange; width
-        // follows the session conf.
-        val r1 = Sketches.hllRegisters(ball1, Seq("node"), $"item", B)
-          .localCheckpoint(true) // self term + per-neighbor term
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
-            $"node")
+        // Spread of the checkpointed register table (r18, guide §2.5): the
+        // propagation join's INPUT is small, so AQE coalesced it to 2 tasks
+        // while its OUTPUT fans out to edges x 64 buckets — profiled at
+        // 2.3 s in 2 tasks (13.6 MB of partial-agg output from 7.3 MB in).
+        // The spread sits over the checkpoint's Scan ExistingRDD (no known
+        // partitioning), so the optimizer cannot elide it.
+        val r1 = Layout.spread(Sketches.hllRegisters(ball1, Seq("node"), $"item", B)
+          .localCheckpoint(true), // self term + per-neighbor term
+          $"node")
         val propagated = r1.union(
           sym.join(r1.withColumnRenamed("node", "nb"), "nb")
             .select($"node", $"bucket", $"register"))

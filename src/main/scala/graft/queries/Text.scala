@@ -4,7 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{CorpusStats, Decontamination, Dedup, HeuristicFilters, Multimodal, Sampling}
+import graft.operators.{CorpusStats, Decontamination, Dedup, HeuristicFilters, Layout, Multimodal,
+  Sampling}
 
 /** Text-analysis + dedup surface over the `documents` fixture (the
   * training-data-pipeline operators from BASELINE.json's north star).
@@ -931,7 +932,7 @@ object Text extends QueryModule {
         // NOT spread before the decontamination gate (r19, measured): the
         // gate's distinctShingles probe + the langId/qualityScore kernels
         // run on the scan's splits (557 ms single-task at fixture scale —
-        // the gate is map-only by design). A pinned-width (id, text) spread
+        // the gate is map-only by design). A Layout.spread of (id, text)
         // here A/B-benched NEUTRAL (5-rep q72 min 4.52 -> 4.36 s, inside
         // the day's ±0.5 s host band) because the fill overlaps the
         // pipeline's other jobs, and at production scan parallelism the
@@ -3621,7 +3622,7 @@ object Reshape extends QueryModule {
         // independent drop-ledger audit — recomputed exactly as capBuckets
         // accounts it (occupancy of each >=2-distinct-doc gram), with the
         // oracle recomputing it a third way from gram STRINGS.
-        val grams = Dedup.exactSubstrGrams(synth, minLen = 40, spread = true)
+        val grams = Dedup.exactSubstrGrams(Layout.spread(synth, $"doc_id"), minLen = 40)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // eager fill (r18): four consumers (ledger, shared-hash prefilter,
         // both pair-join sides) otherwise race the unfilled cache and each
@@ -3701,7 +3702,7 @@ object Reshape extends QueryModule {
         val pbDocs = synth.filter($"doc_id" % 2 =!= 0)
         // ONE index-side gram explode serves the ledger audit, the cap's
         // occupancy pass, and the join (q189/q195 lifecycle)
-        val ixGrams = Dedup.exactSubstrGrams(ixDocs, minLen = 40, spread = true)
+        val ixGrams = Dedup.exactSubstrGrams(Layout.spread(ixDocs, $"doc_id"), minLen = 40)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         ixGrams.count() // eager fill (r18) — see q195
         val ledger = ixGrams.groupBy($"gh")
@@ -3711,7 +3712,7 @@ object Reshape extends QueryModule {
               .as("dropped_index_rows"),
             count_if($"occ" > cap).as("capped_buckets"))
         val spans = Dedup.exactSubstrSpansAgainstIndex(
-            ixGrams, Dedup.exactSubstrGrams(pbDocs, minLen = 40, spread = true),
+            ixGrams, Dedup.exactSubstrGrams(Layout.spread(pbDocs, $"doc_id"), minLen = 40),
             minLen = 40, maxBucket = cap)
         val checked = spans
           .join(synth.select($"doc_id".as("index_id"), $"text".as("ti")),

@@ -159,7 +159,6 @@ object StreamBench {
         }
       }
     }
-    spark.streams.addListener(listener)
 
     Metrics.reset()
     // The panel series is process-wide: clear it so this run's panels are
@@ -179,54 +178,57 @@ object StreamBench {
       case None =>
         (new Sinks.InMemoryObjectStore("sbench"), new Sinks.InMemoryMetadataSink("sbench"))
     }
+    val ckptDir = Files.createTempDirectory("graft-sbench-ckpt")
+    val ckpt = ckptDir.toString
     // Size the keyed stage's state-store count to the operating point (see
     // DefaultStatePartitions): the conf is read at stream start (fresh
     // checkpoint each run), restored after so batch work on a shared
     // session keeps its own width.
     val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-
-    val ckptDir = Files.createTempDirectory("graft-sbench-ckpt")
-    val ckpt = ckptDir.toString
+    spark.streams.addListener(listener)
     val t0 = System.nanoTime()
-    // the store and checkpoint dirs live only as long as the query
-    try {
-      val q =
-        if (vod)
-          Pipelines.startVod(
-            StreamSources.syntheticVodSource(spark, rowsPerSecond = rps, nStreams = 16),
-            objects, meta, ckpt)
-        else
-          Pipelines.startLive(
-            StreamSources.syntheticLiveSource(spark, rowsPerSecond = rps, nStreams = 16),
-            objects, meta, ckpt)
-      try q.awaitTermination(seconds * 1000L) finally {
-        // Stop BETWEEN triggers, not mid-batch: stop() interrupts any
-        // in-flight foreachPartition task and the killed task's stack trace
-        // lands in the bench output looking like a sink failure (r8 "what's
-        // wrong" #2). With a 1 s trigger and sub-second batches there is an
-        // idle window every cycle; wait (bounded) for the current trigger to
-        // finish, then stop while the query is idle.
-        val deadline = System.nanoTime() + 10_000_000_000L
-        try while (q.status.isTriggerActive && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        catch { case _: Throwable => () }
-        q.stop()
+    // the conf and the listener are restored on every path, a failed run
+    // too; the store and checkpoint dirs live only as long as the query
+    val (wallSec, processed) = try {
+      try {
+        val q =
+          if (vod)
+            Pipelines.startVod(
+              StreamSources.syntheticVodSource(spark, rowsPerSecond = rps, nStreams = 16),
+              objects, meta, ckpt)
+          else
+            Pipelines.startLive(
+              StreamSources.syntheticLiveSource(spark, rowsPerSecond = rps, nStreams = 16),
+              objects, meta, ckpt)
+        try q.awaitTermination(seconds * 1000L) finally {
+          // Stop BETWEEN triggers, not mid-batch: stop() interrupts any
+          // in-flight foreachPartition task and the killed task's stack trace
+          // lands in the bench output looking like a sink failure (r8 "what's
+          // wrong" #2). With a 1 s trigger and sub-second batches there is an
+          // idle window every cycle; wait (bounded) for the current trigger to
+          // finish, then stop while the query is idle.
+          val deadline = System.nanoTime() + 10_000_000_000L
+          try while (q.status.isTriggerActive && System.nanoTime() < deadline)
+            Thread.sleep(50)
+          catch { case _: Throwable => () }
+          q.stop()
+        }
+      } finally (storeRoot.toSeq :+ ckptDir).foreach(d => TempStores.deleteRecursively(d.toFile))
+      val wallSec = (System.nanoTime() - t0) / 1e9
+      // listener bus is async — let the final progress events drain
+      val processedCounter = s"spark_${pipeline}_chunks_processed_total"
+      var prev = -1L
+      var cur = Metrics.counter(processedCounter)
+      while (cur != prev) {
+        prev = cur; Thread.sleep(300)
+        cur = Metrics.counter(processedCounter)
       }
-    } finally (storeRoot.toSeq :+ ckptDir).foreach(d => TempStores.deleteRecursively(d.toFile))
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-
-    // listener bus is async — let the final progress events drain
-    val processedCounter = s"spark_${pipeline}_chunks_processed_total"
-    var prev = -1L
-    var cur = Metrics.counter(processedCounter)
-    while (cur != prev) {
-      prev = cur; Thread.sleep(300)
-      cur = Metrics.counter(processedCounter)
+      (wallSec, cur)
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
     }
-    spark.streams.removeListener(listener)
-    val processed = cur
     val all = batches.asScala.toSeq
     val durations = all.map(_._2).sorted
     // Warm-up window is anchored at the FIRST RECORDED BATCH, not at bench

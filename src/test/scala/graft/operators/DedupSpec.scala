@@ -1,6 +1,16 @@
 package graft.operators
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -15,6 +25,79 @@ class DedupSpec extends SparkSpec {
     (1L, base), (2L, base.toUpperCase), // exact dups modulo case
     (3L, nearDup), (4L, different)
   ).toDF("doc_id", "text")
+
+  /** Every node of `p`, looking through AQE wrappers, query stages, reused
+    * exchanges, cached relations and subqueries. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+    case _ => p.children ++ p.subqueries
+  }).flatMap(planNodes)
+
+  /** The executed plans of every SQL action `f` runs (eager checkpoints and
+    * cache fills included). The listener bus is async: a fence action,
+    * delivered after every action `f` ran, closes the capture. */
+  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val fenced = new CountDownLatch(1)
+    val l = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "spec_plan_fence")) fenced.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      f
+      spark.range(1).toDF("spec_plan_fence").collect()
+      assert(fenced.await(60, TimeUnit.SECONDS))
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("batch self-dedup operators spread their input once below the kernel; " +
+      "the table builders stay map-only") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val d = docs.coalesce(1)
+    def pinned(plans: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
+      plans.flatMap(planNodes).collect {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+      }.groupBy(_.canonicalized).values.map(_.head).toSeq
+    def calls(node: SparkPlan, kernel: String): Boolean =
+      node.expressions.exists(_.find(_.prettyName == kernel).isDefined)
+    Seq[(String, String, () => Unit)](
+      ("minhashCandidates", "word_shingle_hashes",
+        () => Dedup.minhashCandidates(d).collect()),
+      ("sharedFingerprintPairs", "char_gram_hashes",
+        () => Dedup.sharedFingerprintPairs(d).collect()),
+      ("exactSubstrSpans", "char_gram_hashes",
+        () => Dedup.exactSubstrSpans(d).collect()),
+      ("selfRepeatSpans", "char_gram_hashes",
+        () => Dedup.selfRepeatSpans(d).collect()),
+      ("simhashCandidates", "simhash64",
+        () => Dedup.simhashCandidates(d).collect()),
+      ("containmentPairs", "word_shingles",
+        () => Dedup.containmentPairs(d).collect())
+    ).foreach { case (op, kernel, run) =>
+      val plans = executedPlans(run())
+      val spreads = pinned(plans)
+      assert(spreads.map(_.numPartitions) === Seq(width), op)
+      val spread = spreads.head
+      assert(!planNodes(spread).exists(calls(_, kernel)), s"$op: $kernel below the spread")
+      assert(plans.flatMap(planNodes).exists(n => calls(n, kernel) &&
+          planNodes(n).exists(_.canonicalized == spread.canonicalized)),
+        s"$op: no $kernel above the spread")
+    }
+    Seq[(String, () => Unit)](
+      ("minhashSignatureTable", () => Dedup.minhashSignatureTable(d).collect()),
+      ("simhashTable", () => Dedup.simhashTable(d).collect()),
+      ("winnowingFingerprintTable", () => Dedup.winnowingFingerprintTable(d).collect()),
+      ("exactSubstrGrams", () => Dedup.exactSubstrGrams(d).collect()),
+      ("bm25TopK", () => Retrieval.bm25TopK(d).collect())
+    ).foreach { case (op, run) => assert(pinned(executedPlans(run())).isEmpty, op) }
+  }
 
   test("exact dedup groups case/punct-identical docs, keeps min id canonical") {
     val rows = Dedup.exact(docs).collect()

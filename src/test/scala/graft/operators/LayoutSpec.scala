@@ -157,6 +157,21 @@ class LayoutSpec extends SparkSpec {
     assert(ok === (0L until 100L).map(k => k -> (k / 25 + 1).toInt).toMap)
   }
 
+  test("spread keeps the session's shuffle width under AQE coalescing") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "5")
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      val df = (0L until 200L).toDF("k").coalesce(1)
+      assert(Layout.spread(df, $"k").rdd.getNumPartitions === 5)
+      // the widthless form is coalesced to the input's tiny byte size
+      assert(df.repartition($"k").rdd.getNumPartitions < 5)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("rangeBalance sends boundary ties to the lower bucket") {
     // boundaries at 10 and 20; value exactly 10 goes to bucket 0
     val bounds = Seq((1L, 10.0), (2L, 20.0)).toDF("bucket", "boundary")

@@ -753,6 +753,21 @@ class StreamingPipelineSpec extends SparkSpec {
     Metrics.reset()
   }
 
+  test("StreamBench: a run that throws restores the session's shuffle width " +
+      "and detaches its listener") {
+    Pipelines.registerProgressListener(spark) // once per session, so attach it first
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val listeners = spark.streams.listListeners().length
+    // seconds = 0 fails awaitTermination's timeoutMs > 0 require mid-run
+    intercept[IllegalArgumentException](
+      StreamBench.run(spark, seconds = 0, rps = 4, durable = false, warmupSec = 0,
+        statePartitions = width.toInt + 3))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
+    assert(spark.streams.listListeners().length === listeners)
+    Dashboard.series.clear()
+    Metrics.reset()
+  }
+
   test("StreamBench VOD leg: panels publish measured non-null VOD values " +
       "that re-derive from the recorded series (r14 verdict #4)") {
     val r = StreamBench.run(spark, seconds = 14, rps = 4, durable = false,
