@@ -20,31 +20,15 @@ object Bench {
     // locale to ROOT before the first number is formatted.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Partition-count robustness experiments (PROFILING.md): decouple the
-    // static shuffle width from the thread count the way a cluster
-    // deployment does (hundreds of partitions over tens of cores). Official
-    // runs leave it unset -> partitions == cpus.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufflePartitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def buildSession(): SparkSession = Sessions.local("graft-bench", defaultCpus = 32)
 
     // Environment context stamped into every artifact: the per-job
     // scheduling floor (min/p50 of a trivial two-stage job — see
-    // PROFILING.md round 11 and tools/JobFloor). Loop-family numbers are
-    // only comparable across rounds at similar floors; a p50 far above
-    // ~200 ms marks the run as contention-inflated. Probed BEFORE and
-    // AFTER the query loop: a floor that rose mid-run explains late-
+    // PROFILING.md, "CC/LSH slowdown closed", round 11). Loop-family
+    // numbers are only comparable across rounds at similar floors; a p50
+    // far above ~200 ms marks the run as contention-inflated. Probed BEFORE
+    // and AFTER the query loop: a floor that rose mid-run explains late-
     // catalog outliers (r11's q115 34 s) that a single up-front probe
     // can't — external load is not constant over a 20-minute suite.
     // A FAILED probe records Double.MaxValue, never its wall time (r16
@@ -56,7 +40,8 @@ object Bench {
       (1 to n).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { s.range(0, 1000000, 1, cpus.toInt).repartition(cpus.toInt)
+          try { val cpus = s.sparkContext.defaultParallelism
+            s.range(0, 1000000, 1, cpus).repartition(cpus)
             .selectExpr("sum(id)").collect(); true }
           catch { case _: Throwable => false }
         if (ok) (System.nanoTime() - t0) / 1e6 else Double.MaxValue
@@ -79,17 +64,18 @@ object Bench {
     // compute window, shuffle-file disk I/O, memory bandwidth). This probe
     // moves ~128 MB through a hash + shuffle + aggregate (the same
     // join+agg+materialize shape one CC round runs, a few hundred ms
-    // quiet — tools/JobFloor is its standalone form), so those contention
-    // classes show up proportionally instead of not at all. Every
+    // quiet — PROFILING.md, "CC-family excursions", round 16), so those
+    // contention classes show up proportionally instead of not at all. Every
     // out-of-band log entry records BOTH probes; "contended" means either
     // is elevated vs its own run-start reference.
     def jobProbeTimes(s: SparkSession, n: Int): Seq[Double] =
       (1 to n).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { s.range(0, 8000000, 1, cpus.toInt)
+          try { val cpus = s.sparkContext.defaultParallelism
+            s.range(0, 8000000, 1, cpus)
             .selectExpr("id", "xxhash64(id) AS h")
-            .repartition(cpus.toInt, org.apache.spark.sql.functions.col("h"))
+            .repartition(cpus, org.apache.spark.sql.functions.col("h"))
             .selectExpr("bit_xor(h)").collect(); true }
           catch { case _: Throwable => false }
         if (ok) (System.nanoTime() - t0) / 1e6 else Double.MaxValue

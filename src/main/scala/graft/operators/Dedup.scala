@@ -1341,13 +1341,13 @@ object Dedup {
     // MEASURED NON-OPTIMIZATION (sf0.1, 100k docs): caching the (id, text)
     // projection to share it across the three consumers (minhash signatures,
     // simhash fingerprints, refinement shingles) made the whole operator
-    // 2.4x SLOWER (6.1 s cached vs 2.5 s re-scanning; ProfileEnsemble) —
-    // the columnar cache write of corpus text costs far more than the extra
-    // parquet scans it saves, and the same holds at cluster scale where a
-    // corpus-sized cache spills to disk. The consumers therefore re-scan
-    // parquet (cheap, pushed-down, two columns); only the SMALL derived
-    // frames (signature table, candidate pairs) are persisted, inside the
-    // generators.
+    // 2.4x SLOWER (6.1 s cached vs 2.5 s re-scanning; PROFILING.md "q47
+    // ensemble near-dups") — the columnar cache write of corpus text costs
+    // far more than the extra parquet scans it saves, and the same holds at
+    // cluster scale where a corpus-sized cache spills to disk. The consumers
+    // therefore re-scan parquet (cheap, pushed-down, two columns); only the
+    // SMALL derived frames (signature table, candidate pairs) are persisted,
+    // inside the generators.
     val mh = minhashCandidates(docs, textCol, idCol, k, bands, shingle, maxBucket)
     // hamming <= blocks - blockMatches keeps exactly what the simhash side
     // GUARANTEES (pigeonhole over the multi-index tables — see

@@ -781,14 +781,15 @@ object Text extends QueryModule {
         // inlines a projection into the nested-loop join's filter, so without
         // a barrier every one of the ~125k pairs would recompute BOTH sides'
         // shingle-building (measured 6.7 s -> 1.6 s for the pair scan). The
-        // repartition first spreads the bounded corpus's single parquet split
-        // so the pair scan uses every core; the eager localCheckpoint (the
-        // q72 lifecycle) then pins 500 tiny rows, not a corpus-sized frame.
-        val sh = docs
+        // spread gives the 500 rows the session width before the eager
+        // localCheckpoint (the q72 lifecycle) pins them, so the pair scan
+        // runs one task per core. A widthless repartition would be coalesced
+        // by AQE to one partition, and the scan with it (PROFILING.md, "q69:
+        // the pair scan on one task").
+        val shingled = docs
           .select($"doc_id", TextFunctions.distinctShingles($"text", 3).as("sh"))
           .withColumn("ln", size($"sh"))
-          .repartition(col("doc_id"))
-          .localCheckpoint(true)
+        val sh = Layout.spread(shingled, col("doc_id")).localCheckpoint(true)
         // The set intersect dominates the exhaustive scan — and left in one
         // plan the optimizer merges the Jaccard filter INTO the nested-loop
         // join condition AHEAD of the cheap predicates (plan-audited), so the

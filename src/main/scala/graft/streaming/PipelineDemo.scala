@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable end-to-end demo of the full topology on the synthetic source:
   * two queries (VOD 5 s / live 1 s triggers), RocksDB keyed state, in-memory
   * sinks, metrics. `runMain graft.streaming.PipelineDemo [seconds]`.
@@ -12,14 +10,8 @@ import org.apache.spark.sql.SparkSession
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val seconds = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // a fresh temp checkpoint every run: no state layout pins the width
+    val spark = graft.Sessions.local("graft-pipeline-demo", defaultCpus = 8)
 
     val objects = new Sinks.InMemoryObjectStore("demo")
     val meta = new Sinks.InMemoryMetadataSink("demo")

@@ -287,18 +287,7 @@ object StreamBench {
     val rps = args.drop(1).headOption.map(_.toInt).getOrElse(2000)
     val warmupSec = sys.env.get("SPARK_GRAFT_WARMUP_SEC").map(_.toInt)
       .getOrElse(math.min(10, seconds / 3))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Decoupled from thread count so the shuffle-partition headroom of the
-    // 100 TB sizing notes is measurable (e.g. 128 partitions on 32 threads).
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-stream-bench", defaultCpus = 32)
 
     val durable = sys.env.get("SPARK_GRAFT_DURABLE").contains("1")
     val pipeline = sys.env.getOrElse("SPARK_GRAFT_STREAM_PIPELINE", "live")

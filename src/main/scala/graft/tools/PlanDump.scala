@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: the formatted physical plan of a representative
   * catalog slice, each with the scale property the plan must exhibit. Run
   * after any planner-visible change; the committed file is the review
@@ -210,13 +208,9 @@ object PlanDump {
         "what makes the gate stateless-streaming-safe per ingest batch."))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-plan-dump", defaultCpus = 8)
+    // PLANS.md states its capture width; keep it whatever the environment says
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val byName = graft.SparkEntry.catalog.map(q => q.name -> q).toMap
     val sb = new StringBuilder

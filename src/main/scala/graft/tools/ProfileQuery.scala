@@ -3,7 +3,8 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+
+import graft.Sessions
 
 /** Generic per-stage profiler for one catalog query (guide §1: decide where
   * the wall time goes BEFORE touching the plan). Runs the query under a
@@ -19,21 +20,14 @@ object ProfileQuery {
       id: Int, attempt: Int, name: String, wallMs: Long, tasks: Int,
       runMs: Long, gcMs: Long, shufReadMB: Double, shufWriteMB: Double,
       inputMB: Double)
+  private val RepKey = "graft.profile.rep"
 
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(
       sys.error("usage: ProfileQuery <queryName> [reps]"))
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-profile-query", defaultCpus = 32)
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query: $name"))
 
@@ -45,42 +39,54 @@ object ProfileQuery {
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     dropPersisted()
 
-    val stages = mutable.ArrayBuffer[StageRow]()
-    val jobs = mutable.ArrayBuffer[(Int, Long, String)]()
-    val jobStart = mutable.Map[Int, (Long, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobStart(e.jobId) = (e.time,
-          Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(""))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobStart.remove(e.jobId).foreach { case (t0, d) =>
-          jobs += ((e.jobId, e.time - t0, d))
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val s = e.stageInfo
-        val wall = (for {a <- s.submissionTime; b <- s.completionTime}
-          yield b - a).getOrElse(-1L)
-        val m = s.taskMetrics
-        stages += StageRow(s.stageId, s.attemptNumber(), s.name, wall,
-          s.numTasks, m.executorRunTime, m.jvmGCTime,
-          m.shuffleReadMetrics.totalBytesRead / 1e6,
-          m.shuffleWriteMetrics.bytesWritten / 1e6,
-          m.inputMetrics.bytesRead / 1e6)
-      }
-    }
-
     (1 to reps).foreach { rep =>
-      stages.clear(); jobs.clear(); jobStart.clear()
-      spark.sparkContext.addSparkListener(listener)
+      // Each rep gets its own listener and buffers, and keeps only the jobs
+      // carrying its local property (broadcast jobs inherit it; they do not
+      // keep the caller's job group) and their stages: the listener-bus
+      // fence job is neither counted nor written into the buffers while
+      // they are read.
+      val repId = s"$name-$rep-${System.nanoTime()}"
+      val stages = mutable.ArrayBuffer[StageRow]()
+      val jobs = mutable.ArrayBuffer[(Int, Long, String)]()
+      val jobStart = mutable.Map[Int, (Long, String)]()
+      val repStages = mutable.Set[Int]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val props = Option(e.properties)
+          if (props.exists(_.getProperty(RepKey) == repId)) {
+            jobStart(e.jobId) = (e.time,
+              props.flatMap(p => Option(p.getProperty("spark.job.description")))
+                .getOrElse(""))
+            repStages ++= e.stageIds
+          }
+        }
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          jobStart.remove(e.jobId).foreach { case (t0, d) =>
+            jobs += ((e.jobId, e.time - t0, d))
+          }
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+          val s = e.stageInfo
+          if (repStages.contains(s.stageId)) {
+            val wall = (for {a <- s.submissionTime; b <- s.completionTime}
+              yield b - a).getOrElse(-1L)
+            val m = s.taskMetrics
+            stages += StageRow(s.stageId, s.attemptNumber(), s.name, wall,
+              s.numTasks, m.executorRunTime, m.jvmGCTime,
+              m.shuffleReadMetrics.totalBytesRead / 1e6,
+              m.shuffleWriteMetrics.bytesWritten / 1e6,
+              m.inputMetrics.bytesRead / 1e6)
+          }
+        }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(RepKey, repId)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      finally sc.setLocalProperty(RepKey, null)
       val wall = (System.nanoTime() - t0) / 1e9
-      // drain queued listener events before reading the buffers
-      // (listenerBus is private[spark]; a short sleep suffices for a tool)
-      Thread.sleep(300)
-      spark.sparkContext.removeSparkListener(listener)
+      Sessions.drainListeners(sc)
+      sc.removeSparkListener(listener)
       println(f"\n=== $name rep $rep: wall $wall%.2f s, " +
         f"${jobs.size} jobs, ${stages.size} stages ===")
       println(f"${"job"}%4s ${"ms"}%7s  description")

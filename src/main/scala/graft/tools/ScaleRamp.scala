@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.{Dedup, Graph, Multimodal, Retrieval, Similarity, Sketches}
 import graft.sources.Tables
 
@@ -61,18 +62,7 @@ object ScaleRamp {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = args.headOption.map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-ramp")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // WARN exposes BlockManager/MemoryStore block-drop messages when
-    // debugging lost-block aborts; default stays quiet
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_RAMP_LOG", "ERROR"))
+    val spark = Sessions.local("graft-scale-ramp", defaultCpus = 32)
 
     // SPARK_GRAFT_RAMP_FACTORS=10 iterates on one factor (debugging the
     // factor-10 lost-block abort without re-paying 1x/3x); RAMP_FIT rows
@@ -168,6 +158,9 @@ object ScaleRamp {
             val t0 = System.nanoTime()
             op(corpus).write.format("noop").mode("overwrite").save()
             val dt = (System.nanoTime() - t0) / 1e9
+            // a failed job's end may still be queued on the listener bus:
+            // read the count once the bus has drained, not one row late
+            Sessions.drainListeners(spark.sparkContext)
             val failed = failedJobs.get() - fail0
             if (failed > 0)
               println(s"RAMP_VOID op=$name factor=$f failed_jobs=$failed " +
@@ -271,7 +264,7 @@ object ScaleRamp {
     // over the cores or the whole ramp times a single task
     def overflowDocs(f: Int): DataFrame =
       Tables(spark, sfDir, "documents").orderBy("doc_id").limit(100 * f)
-        .repartition(cpus.toInt)
+        .repartition(spark.sparkContext.defaultParallelism)
         .select(col("doc_id"), repeat(col("text"), 512).as("text"))
     ramp("repeat_overflow", overflowDocs, Seq(
       "overflow_repeat" -> (d => Dedup.internalRepeatOverflow(d,

@@ -153,8 +153,9 @@ case class DoubleDot(left: Expression, right: Expression)
   * (planes=9 x tables=4 = 36 unrolled 64-step loops). Spark compiles such
   * methods fine but HotSpot silently never JITs them, and the bucketing scan
   * ran INTERPRETED — measured 80x slower (3.9 s vs 0.05 s on a 20 k x 64
-  * corpus; see tools/LshProbe). One compact loop per table stays far under
-  * the limit at any realistic plane count.
+  * corpus; PROFILING.md "LSH bucketing: the JIT huge-method limit"). One
+  * compact loop per table stays far under the limit at any realistic plane
+  * count.
   *
   * Exact-equivalence contract with the composed HOF form, case by case:
   * null vector, null element, or length != dim all yield bucket 0 (the

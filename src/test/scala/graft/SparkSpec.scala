@@ -14,34 +14,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
-  /** Spark jobs `f` runs from this thread. The listener bus is async: a
-    * fence job in its own group, seen after every job `f` started, closes
-    * the count. */
+  /** Spark jobs `f` runs from this thread: the jobs started in its own job
+    * group, counted once the listener bus has drained past them. */
   def jobs(f: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"spec-jobs-${java.util.UUID.randomUUID}"
     val n = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => n.incrementAndGet(); ()
-          case Some(g) if g == s"$group-fence" => fenced.countDown()
-          case _ => ()
-        }
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
     }
     sc.addSparkListener(l)
     try {
       sc.setJobGroup(group, "spec job count")
-      f
-      sc.setJobGroup(s"$group-fence", "spec job count fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      try f finally sc.clearJobGroup()
+      Sessions.drainListeners(sc)
       n.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    } finally sc.removeSparkListener(l)
   }
 }
 

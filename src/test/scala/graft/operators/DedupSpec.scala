@@ -1,18 +1,12 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec,
-  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.tools.PlanSnap
+import graft.tools.PlanSnap.planNodes
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -26,36 +20,7 @@ class DedupSpec extends SparkSpec {
     (3L, nearDup), (4L, different)
   ).toDF("doc_id", "text")
 
-  /** Every node of `p`, looking through AQE wrappers, query stages, reused
-    * exchanges, cached relations and subqueries. */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case s: QueryStageExec => Seq(s.plan)
-    case r: ReusedExchangeExec => Seq(r.child)
-    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-    case _ => p.children ++ p.subqueries
-  }).flatMap(planNodes)
-
-  /** The executed plans of every SQL action `f` runs (eager checkpoints and
-    * cache fills included). The listener bus is async: a fence action,
-    * delivered after every action `f` ran, closes the capture. */
-  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val fenced = new CountDownLatch(1)
-    val l = new QueryExecutionListener {
-      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == "spec_plan_fence")) fenced.countDown()
-        else plans.add(qe.executedPlan)
-      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      f
-      spark.range(1).toDF("spec_plan_fence").collect()
-      assert(fenced.await(60, TimeUnit.SECONDS))
-      plans.asScala.toSeq
-    } finally spark.listenerManager.unregister(l)
-  }
+  private def executedPlans(f: => Unit): Seq[SparkPlan] = PlanSnap.executedPlans(spark)(f)
 
   test("batch self-dedup operators spread their input once below the kernel; " +
       "the table builders stay map-only") {
