@@ -77,8 +77,9 @@ object GraftSql {
   /** Community-label view (`graft_user_communities`): synchronous LPA, the
     * q177 contract (4 rounds, isolated users keep their own id) — a SQL
     * client groups/joins on `community` without re-deriving the
-    * propagation. Eager at registration (the LPA loop localCheckpoints per
-    * round), so clients opt in per view, same as [[registerTriangleView]]. */
+    * propagation. Eager at registration (the LPA loop materializes its
+    * result once, on the [[graft.operators.Loops]] kernel), so clients opt
+    * in per view, same as [[registerTriangleView]]. */
   def registerCommunityView(spark: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.functions._
     val ev = Tables(spark, dir, "events")

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import org.apache.spark.sql.graft.ArrayExpressions
 
@@ -563,16 +564,22 @@ object Dedup {
     *
     * Algorithm: distributed min-label propagation with pointer jumping.
     * Each round, (a) every node takes the min label over itself and its
-    * neighbors — one hash join (edges x labels, partitioned by node id)
-    * plus one map-side-combined groupBy-min — then (b) labels POINT-JUMP
-    * through the label graph (label(x) := label(label(x))), which doubles
-    * the distance the component minimum travels per round. Convergence is
-    * O(log diameter) rounds instead of plain propagation's O(diameter) —
-    * the round-shape of the alternating-star MapReduce CC algorithms, so
-    * a 2^25-diameter chain (far beyond any real near-dup graph) converges
-    * within the default round budget. Every round materializes eagerly
-    * (localCheckpoint) so lineage depth stays constant and the convergence
-    * check (a changed-label count) doesn't recompute the history.
+    * neighbors — one narrow join of the node-partitioned edges with the
+    * labels plus one map-side-combined min shuffle — then (b) labels
+    * POINT-JUMP through the label graph (label(x) := label(label(x))),
+    * which doubles the distance the component minimum travels per round:
+    * one shuffle asks each label's own row, one brings the answer back to
+    * the asking node. Convergence is O(log diameter) rounds instead of
+    * plain propagation's O(diameter) — the round-shape of the
+    * alternating-star MapReduce CC algorithms, so a 2^25-diameter chain
+    * (far beyond any real near-dup graph) converges within the default
+    * round budget. The loop runs on the [[Loops]] kernel: each round is
+    * materialized by ONE action that also counts the changed labels (the
+    * convergence read), so lineage depth stays constant.
+    *
+    * Ids compare in Spark SQL's order and keep its join semantics: a null
+    * id joins nothing, so it never passes its label on, but takes the min
+    * of its partners' labels. Binary ids are refused.
     *
     * Returns (doc_id, cluster_id) for every doc THAT APPEARS IN A PAIR;
     * singleton docs are absent by construction — left-join the corpus and
@@ -584,145 +591,52 @@ object Dedup {
       idColA: String = "id_a",
       idColB: String = "id_b",
       maxRounds: Int = 25): DataFrame = {
-    // Each iteration input is re-wrapped over a checkpointed RDD with FRESH
-    // attribute ids (createDataFrame) — iterative self-referencing plans
-    // otherwise trip Catalyst's Union constraint rewrite (round N's plan
-    // contains round N-1's attribute ids on both sides). Checkpointing at
-    // the RDD level (not Dataset.localCheckpoint) keeps a handle to the
-    // object that actually OWNS the cached blocks, so the unpersists below
-    // genuinely release storage instead of no-op'ing through a re-wrapped
-    // frame that the CacheManager never registered.
-    val sessionInit = pairs.sparkSession
-    // Edges are materialized WITH LINEAGE INTACT (persist, not checkpoint):
-    // truncation is only needed where lineage would otherwise grow with the
-    // round count — the frontiers — and edges' lineage is the constant-
-    // depth candidate pipeline. Keeping it recomputable closes the r18
-    // zombie-broadcast abort: each round's `edges JOIN labels` broadcasts
-    // the (small) edge side on Spark's broadcast thread pool, and a
-    // broadcast future that nothing ended up awaiting can still be running
-    // when the loop converges and releases edges — reading a dropped block
-    // of a TRUNCATED rdd aborts the job (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
-    // observed as silent post-convergence job failures on the 10x funnel
-    // ramp: the lost rdd's creation site traced to this line), while a
-    // dropped block of a persisted rdd just recomputes. Same argument at
-    // cluster scale for executor loss, where edges is the one loop input
-    // that must survive the WHOLE loop: frontier rounds are transient, but
-    // a lost edge block would abort every later round.
-    def materialized(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      (sessionInit.createDataFrame(rdd, df.schema), rdd)
+    val edges = pairs.select(col(idColA).as("src"), col(idColB).as("dst"))
+      .union(pairs.select(col(idColB).as("src"), col(idColA).as("dst")))
+    val id = edges.schema("src").dataType
+    val schema = StructType(Seq(StructField("doc_id", id), StructField("cluster_id", id)))
+    Loops.run(pairs.sparkSession, schema) { loop =>
+      loop.iterate(clusterLoop(loop, edges), maxRounds).map { case (n, (l, _)) => Row(n, l) }
     }
-    val (edges, edgesRdd) = materialized(
-      pairs.select(col(idColA).as("src"), col(idColB).as("dst"))
-        .union(pairs.select(col(idColB).as("src"), col(idColA).as("dst"))))
-    // No separate initial-label frame (r18): with labels₀(x) = x, round 1's
-    // neighbor-min join degenerates to a projection of the edge table
-    // itself (dst takes src as a candidate label; every node contributes a
-    // self row — duplicates collapse in the same groupBy-min that already
-    // runs). That removes the distinct + checkpoint + count jobs the old
-    // labels₀ materialization paid, and round 1's edges⋈labels join, with
-    // bit-identical round-1 output (pinned by the existing CC specs).
-    var labels: DataFrame = null
-    // One Spark job per round: the convergence signal rides the same job
-    // that materializes the round's labels. The old label is carried THROUGH
-    // the neighbor-min aggregation (max() over exactly one non-null per
-    // node), folded into a per-row `changed` flag during the
-    // materialization scan, and counted by the materializing aggregate —
-    // the previous shape re-joined `jumped` against `labels`
-    // and ran a second `count()` job per round, doubling per-round actions
-    // (r7 bench: q101 ~23 s, q58 ~4 s; this plus checkpoint hygiene is the
-    // judge-targeted fix). Each round also unpersists round N−1's cached
-    // blocks once round N is materialized, so long loops don't accumulate
-    // heap debt that later catalog queries pay for.
-    val session = pairs.sparkSession
-    // the materialized round rows carry a third `changed` column so the
-    // convergence count is an ACTION over checkpointed data (exactly-once
-    // per partition, immune to task-retry over-count — a transformation-side
-    // accumulator here could spuriously report changed > 0 on a flaky
-    // cluster and waste rounds or trip the maxRounds guard); downstream
-    // consumers project (node, label) explicitly, so the extra column never
-    // enters a join or the returned frame
-    val nodeType = edges.schema("src").dataType
-    val labelSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("label", nodeType),
-      org.apache.spark.sql.types.StructField("changed", org.apache.spark.sql.types.BooleanType)))
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    // one-round release lag (see the unpersist below): holds round N-1
-    // while round N+1 materializes from round N
-    var prevPrevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      // (a) neighbor-min, carrying each node's previous label alongside.
-      // Round 1 (labels == null) inlines labels₀(x) = x: neighbor
-      // candidates are just (dst, src), self rows are (src, src, old=src)
-      // straight off the edge table — no join, no distinct (the
-      // groupBy-min collapses duplicate self rows identically).
-      val stepped = (if (labels == null)
-        edges.select(col("dst").as("node"), col("src").as("label"),
-            lit(null).cast(nodeType).as("old"))
-          .union(edges.select(col("src").as("node"), col("src").as("label"),
-            col("src").as("old")))
-      else
-        edges.as("e").join(labels.as("l"), col("e.src") === col("l.node"))
-          .select(col("e.dst").as("node"), col("l.label").as("label"),
-            lit(null).cast(nodeType).as("old"))
-          .union(labels.select(col("node"), col("label"), col("label").as("old"))))
-        .groupBy(col("node"))
-        .agg(min(col("label")).as("label"), max(col("old")).as("old"))
-      // (b) pointer jump: label(x) := label(label(x)) (labels are node ids,
-      // so the lookup side is `stepped` itself)
-      val jumped = stepped.as("a")
-        .join(stepped.as("b"), col("a.label") === col("b.node"), "left")
-        .select(col("a.node").as("node"),
-          coalesce(col("b.label"), col("a.label")).as("label"), col("a.old"))
-      val roundRdd = jumped.rdd.map { r =>
-        org.apache.spark.sql.Row(r.get(0), r.get(1),
-          r.isNullAt(2) || r.get(1) != r.get(2))
-      }
-      Loops.markCheckpoint(session, roundRdd)
-      // the round's ONE action: materializes the checkpoint AND counts
-      // changes, with per-partition exactly-once aggregation semantics
-      val changed = roundRdd.aggregate(0L)(
-        (n, r) => if (r.getBoolean(2)) n + 1L else n, _ + _)
-      // Release rounds LAGGED BY ONE, and blocking (r18): the 10x funnel
-      // ramp intermittently died with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-      // under host contention — a cached block of round N dropped while
-      // round N+1 read it, whose recompute then reached round N-1's
-      // ALREADY-UNPERSISTED checkpoint (round N's truncated lineage stops
-      // exactly there). Keeping one extra round alive makes that recompute
-      // succeed instead: while round N+1 materializes from round N, round
-      // N-1's blocks still exist, and once N+1 is materialized nothing can
-      // reach N-1 again. Blocking removal closes the other half of the
-      // race (an async removal in flight while the next round's jobs
-      // launch); one label-table round costs single-digit ms to drop.
-      if (prevPrevRdd != null) prevPrevRdd.unpersist(blocking = true)
-      prevPrevRdd = prevRdd
-      prevRdd = roundRdd
-      labels = session.createDataFrame(roundRdd, labelSchema)
-      converged = changed == 0L
-      round += 1
-    }
-    edgesRdd.unpersist(blocking = false) // symmetrized corpus-pair edges: the
-    // loop's largest retained blocks; release them before returning (the
-    // final round's label RDD stays cached — it backs the returned frame).
-    // Safe against in-flight zombie broadcast readers: edges kept its
-    // lineage (see `materialized` above), so a late read recomputes.
-    // the lagged round too: after the loop the final round is materialized,
-    // so its predecessor can no longer be reached by any recompute
-    if (prevPrevRdd != null && !(prevPrevRdd eq prevRdd))
-      prevPrevRdd.unpersist(blocking = false)
-    if (!converged) {
-      // per the no-silent-caps rule: a non-converged labeling is PARTIAL
-      // (some cluster ids are not yet the component minimum) — fail loudly.
-      throw new IllegalStateException(
-        s"nearDupClusters did not converge in $maxRounds rounds " +
-          "(graph diameter > 2^rounds? raise maxRounds)")
-    }
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** The CC loop over symmetric (src, dst) `edges`: (label, changed this
+    * round) per node, starting from label = node. */
+  private[operators] def clusterLoop(loop: Loops.Loop, edges: DataFrame)
+      : Loops.FixedPoint[Any, (Any, Boolean)] = {
+    val ord = Loops.idOrdering("nearDupClusters", edges.schema("src").dataType)
+    // SQL's min: nulls skipped
+    def least(a: Any, b: Any): Any = if (a == null || (b != null && ord.gt(a, b))) b else a
+    val part = loop.part
+    val adj = loop.static(edges.rdd.map(r => (r.get(0), r.get(1))))
+    val links = adj.filter(_._1 != null)
+    Loops.FixedPoint(
+      adj.mapPartitions(_.map(_._1).distinct.map(n => (n, (n, true))),
+        preservesPartitioning = true),
+      labels => {
+        // (a) neighbor-min; (label, label before the round)
+        val nbMin = Loops.combine(Loops.lookup(labels, links) {
+          case ((_, dst), label) => label.map { case (l, _) => (dst, l) }
+        }, part)(least)
+        val stepped = Loops.lookup(nbMin, labels, keep = true) { case ((n, (label, _)), m) =>
+          Some((n, (least(label, m.orNull), label)))
+        }
+        // (b) pointer jump: ask each label's own row, answer the asking node
+        val asks = stepped
+          .flatMap { case (n, (label, _)) => Option(label).map(_ -> n) }
+          .partitionBy(part)
+        val answers = Loops.lookup(stepped, asks) { case ((label, n), own) =>
+          own.map { case (jumped, _) => (n, if (jumped == null) label else jumped) }
+        }.partitionBy(part)
+        Loops.lookup(answers, stepped, keep = true) { case ((n, (label, old)), jumped) =>
+          val next = jumped.getOrElse(label)
+          Some((n, (next, old == null || next != old)))
+        }
+      },
+      Some(Loops.Read[(Any, Boolean)](
+        v => (if (v._2) 1L else 0L, 0L), _._1 == 0L,
+        (_, maxRounds) => s"nearDupClusters did not converge in $maxRounds rounds " +
+          "(graph diameter > 2^rounds? raise maxRounds)")))
   }
 
   /** Winnowing document fingerprints (Schleimer-Wilkerson-Aiken, the

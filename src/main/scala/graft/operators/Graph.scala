@@ -1,15 +1,14 @@
 package graft.operators
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-/** Iterative graph analytics as relational fixed-point loops — each
-  * iteration is one hash join (ranks ⋈ edges, keyed by node) plus one
-  * map-side-combined aggregation, the same round shape as [[Dedup]]'s
+/** Graph analytics over edge frames. The iterative ones (PageRank, k-core,
+  * label propagation) run on the [[Loops]] fixed-point kernel: each round
+  * is narrow joins against the node-partitioned edges plus one map-side-
+  * combined propagation shuffle, the same round shape as [[Dedup]]'s
   * connected-components loop. Nothing graph-specific is materialized on the
   * driver: the node set, edge list, and rank vector all stay distributed,
   * partitioned by node id, so a 10^9-node graph runs the identical plan with
@@ -69,14 +68,12 @@ object Graph {
     * 6 orders of magnitude for edge weights. Past it the loop fails loudly
     * (exact arithmetic), never wraps.
     *
-    * Round shape: the co-partitioned join of the RDD paper (Zaharia et al.,
-    * NSDI'12 §3.2.2). Links and the node set are hash-partitioned by node
-    * ONCE, under one partitioner of `spark.sql.shuffle.partitions` width,
-    * and persisted for the loop; every rank vector keeps that partitioner.
-    * So each round's links⋈ranks and nodes⋈contrib joins are narrow, and
-    * the dst-keyed contribution sum — the propagation itself — is the
-    * round's only shuffle. Rounds are stages, not jobs: a run of up to
-    * [[LineageRounds]] rounds is one Spark job (see [[pageRankRdd]]).
+    * Round shape ([[Loops]]): links and the node set are hash-partitioned
+    * by node once and persisted, so each round's links⋈ranks and
+    * nodes⋈contrib joins are narrow and the dst-keyed contribution sum —
+    * the propagation itself — is the round's only shuffle. Rounds are
+    * stages, not jobs: a run of up to [[Loops.LineageRounds]] rounds is one
+    * Spark job.
     *
     * Null nodes keep the SQL equi-join semantics the recurrence was first
     * written in (a null key matches nothing): edges out of a null src never
@@ -99,76 +96,59 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(cntCol).cast("long").as("cnt"))
       .groupBy("src", "dst").agg(sum("cnt").as("cnt"))
-    val (ranks, held) = pageRankRdd(e, iters, dampPct, scale)
     val schema = StructType(Seq(
       StructField("node", e.schema("src").dataType,
         e.schema("src").nullable || e.schema("dst").nullable),
       StructField("rank", LongType, nullable = false)))
-    // One materialization for the whole loop: the returned frame is backed
-    // by rows (reliable checkpoint storage when the session asks for it),
-    // so the loop's persisted inputs can be released before returning.
-    val out = Loops.roundCheckpoint(e.sparkSession.createDataFrame(
-      ranks.map { case (n, r) => Row(n, r) }, schema))
-    held.foreach(_.unpersist(blocking = false))
-    out
+    Loops.run(e.sparkSession, schema) { loop =>
+      loop.iterate(pageRankLoop(loop, e, dampPct, scale), iters)
+        .map { case (n, r) => Row(n, r) }
+    }
   }
 
-  /** Rounds between materializations of the rank vector in long runs. A run
-    * of at most this many rounds is one Spark job; a longer one builds a
-    * DAG of at most this many rounds per job instead of one deep DAG. */
-  private[operators] val LineageRounds = 10
-
   /** The PageRank loop over the canonical edge frame `e` (src, dst, cnt;
-    * one row per pair). Returns the rank RDD — not yet materialized, keyed
-    * by node under the loop's partitioner — and the persisted RDDs its
-    * lineage reads, which the caller releases once it has materialized the
-    * ranks. */
-  private[operators] def pageRankRdd(
+    * one row per pair): ranks keyed by node, starting at `scale`. */
+  private[operators] def pageRankLoop(
+      loop: Loops.Loop,
       e: DataFrame,
-      iters: Int,
       dampPct: Long,
-      scale: Long): (RDD[(Any, Long)], Seq[RDD[_]]) = {
-    // Binary keys hash by array identity on the JVM, so two equal byte
-    // strings would land apart and never join.
-    require(e.schema("src").dataType != BinaryType,
-      "pageRankFixedPoint: binary node ids are not supported")
-    val spark = e.sparkSession
-    val part = new HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      scale: Long): Loops.FixedPoint[Any, Long] = {
+    Loops.idOrdering("pageRankFixedPoint", e.schema("src").dataType) // refuses binary ids
+    val part = loop.part
     val adj = e.rdd.map(r => (r.get(0), (r.get(1), r.get(2)))).partitionBy(part)
-    val nodes = adj.flatMap { case (s, (d, _)) => Iterator(s -> (), d -> ()) }
-      .reduceByKey(part, (a, _) => a)
+    val nodes = loop.static(adj.flatMap { case (s, (d, _)) => Iterator(s -> (), d -> ()) }
+      .reduceByKey(part, (a, _) => a))
     // SQL's sum skips a null weight and its join matches no null src.
     val weighted = adj
       .flatMapValues { case (d, w) => Option(w).map(w => (d, w.asInstanceOf[Long])) }
       .filter(_._1 != null)
     val outDeg = weighted.mapValues(_._2).reduceByKey(part, (a, b) => Math.addExact(a, b))
-    val links = weighted.join(outDeg, part)
-      .flatMapValues { case ((d, w), out) => if (d == null) None else Some((d, w, out)) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    val links = loop.static(weighted.join(outDeg, part)
+      .flatMapValues { case ((d, w), out) => if (d == null) None else Some((d, w, out)) })
     val base = (100L - dampPct) * scale / 100L
-    var ranks: RDD[(Any, Long)] = nodes.mapValues(_ => scale)
-    var frontier: RDD[(Any, Long)] = null
-    for (i <- 1 to iters) {
+    Loops.FixedPoint(nodes.mapValues(_ => scale), ranks => {
       val contrib = links.join(ranks, part)
         .map { case (_, ((d, w, out), rank)) => (d, Math.multiplyExact(rank, w) / out) }
         .reduceByKey(part, (a, b) => Math.addExact(a, b))
-      ranks = nodes.leftOuterJoin(contrib, part).mapValues { case (_, c) =>
+      nodes.leftOuterJoin(contrib, part).mapValues { case (_, c) =>
         Math.addExact(base, Math.multiplyExact(dampPct, c.getOrElse(0L)) / 100L)
       }
-      if (i % LineageRounds == 0 && i < iters) {
-        // Truncate here; the RDD form keeps the partitioner, so the next
-        // rounds' joins stay narrow. The previous frontier is unreachable
-        // once this one is materialized.
-        Loops.markCheckpoint(spark, ranks)
-        ranks.count()
-        if (frontier != null) frontier.unpersist(blocking = true)
-        frontier = ranks
-      }
-    }
-    (ranks, Seq(links, nodes) ++ Option(frontier))
+    })
   }
+
+  /** The undirected simple graph of an edge frame: one (x, y) row per
+    * unordered pair, x < y; self-loops, duplicates and rows with a null
+    * endpoint (`least`/`greatest` skip the null, leaving x = y) drop out. */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).as("x"),
+        greatest(col(srcCol), col(dstCol)).as("y"))
+      .filter(col("x") =!= col("y"))
+      .distinct()
+
+  /** Both directions of every `undirected` row, keyed by the first. */
+  private def symmetric(und: DataFrame): RDD[(Any, Any)] =
+    und.rdd.flatMap(r => Iterator((r.get(0), r.get(1)), (r.get(1), r.get(0))))
 
   /** User co-engagement graph over an event log: an undirected edge (src <
     * dst) between users sharing at least `minShared` of their top-`topK`
@@ -229,11 +209,7 @@ object Graph {
       maxHubDegree: Int = 128,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("x"),
-        greatest(col(srcCol), col(dstCol)).as("y"))
-      .filter(col("x") =!= col("y"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     // Wedge fan-out guard (r18, guide §2.5): the wedge self-join's INPUT is
     // tiny (the capped adjacency list), so AQE coalesces its exchanges down
     // to ONE partition — but the join's OUTPUT is quadratic per apex
@@ -272,11 +248,11 @@ object Graph {
   /** The k-core of an undirected simple graph (maximal subgraph where every
     * node keeps degree >= k), by iterative peeling: each round drops nodes
     * whose CURRENT degree is below k and the edges touching them, until a
-    * fixed point. One degree aggregation + two semi-joins per round, edges
-    * localCheckpoint'd so round plans stay constant-depth — the identical
-    * loop discipline as [[pageRankFixedPoint]] and the CC rounds. The one
-    * driver pull per round is a single count (the CC-loop convention) used
-    * only for the early exit; peeling is MONOTONE, so exiting at the fixed
+    * fixed point. On the [[Loops]] kernel a round is one narrow join of the
+    * node-partitioned adjacency with the degree vector and one shuffle
+    * (alive nodes count their alive neighbours), and its convergence read —
+    * the remaining and the removed edge count — rides the one action that
+    * materializes the round. Peeling is MONOTONE, so exiting at the fixed
     * point equals running all `maxRounds` rounds — which is what makes an
     * unrolled fixed-round SQL oracle bit-comparable regardless of where
     * convergence lands. Returns (node, core_degree) for the surviving
@@ -299,91 +275,96 @@ object Graph {
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     require(k >= 1 && maxRounds >= 1)
-    var e = Loops.roundCheckpoint(edges
-      .select(least(col(srcCol), col(dstCol)).as("x"),
-        greatest(col(srcCol), col(dstCol)).as("y"))
-      .filter(col("x") =!= col("y"))
-      .distinct())
-    var prev = e.count()
-    var round = 0
-    var converged = prev == 0L
-    while (prev > 0L && round < maxRounds) {
-      val deg = e.select(explode(array(col("x"), col("y"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select(col("node"))
-      val e2 = Loops.roundCheckpoint(e
-        .join(keep.withColumnRenamed("node", "x"), Seq("x"), "left_semi")
-        .join(keep.withColumnRenamed("node", "y"), Seq("y"), "left_semi")
-        .select(col("x"), col("y")))
-      val n = e2.count()
-      val done = n == prev || n == 0L
-      prev = n
-      e = e2
-      round += 1
-      if (done) { converged = true; round = maxRounds } // fixed point
+    val und = undirected(edges, srcCol, dstCol)
+    Loops.run(edges.sparkSession, nodeSchema(und, "core_degree", LongType)) { loop =>
+      loop.iterate(kCoreLoop(loop, und, k), maxRounds, strict)
+        .flatMap { case (n, (d, _)) => if (d > 0L) Some(Row(n, d)) else None }
     }
-    if (!converged) {
-      val msg = s"kCore(k=$k) exhausted maxRounds=$maxRounds before the " +
-        s"fixed point: the last round still removed edges ($prev edges " +
-        "remain, some may have degree < k). Raise maxRounds or pass " +
-        "strict = false for a budget-bounded preview."
-      if (strict) throw new IllegalStateException(msg)
-      else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    e.select(explode(array(col("x"), col("y"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("core_degree"))
+  }
+
+  /** The (node, `name`) schema of a loop over `und`'s node ids. */
+  private def nodeSchema(und: DataFrame, name: String, dt: DataType): StructType =
+    StructType(Seq(StructField("node", und.schema("x").dataType), StructField(name, dt)))
+
+  /** The peeling loop over `undirected` edges: every node's degree among
+    * the surviving nodes, paired with its degree a round earlier (a peeled
+    * node stays, at degree 0). */
+  private[operators] def kCoreLoop(loop: Loops.Loop, und: DataFrame, k: Int)
+      : Loops.FixedPoint[Any, (Long, Long)] = {
+    val part = loop.part
+    val adj = loop.static(symmetric(und))
+    Loops.FixedPoint(
+      adj.mapPartitions(edges => Loops.reduceLocal(edges.map(e => (e._1, 1L)))(_ + _)
+        .map { case (n, d) => (n, (d, d)) }, preservesPartitioning = true),
+      deg => {
+        val alive = Loops.combine(Loops.lookup(deg, adj) {
+          case ((_, nb), Some((d, _))) if d >= k => Some((nb, 1L))
+          case _ => None
+        }, part)(_ + _)
+        Loops.lookup(alive, deg, keep = true) { case ((n, (d, _)), alive) =>
+          Some((n, (if (d >= k) alive.getOrElse(0L) else 0L, d)))
+        }
+      },
+      // sums: (edge ends left, edge ends removed this round)
+      Some(Loops.Read[(Long, Long)](
+        { case (d, before) => (d, before - d) },
+        { case (ends, gone) => gone == 0L || ends == 0L },
+        { case ((ends, _), maxRounds) =>
+          s"kCore(k=$k) exhausted maxRounds=$maxRounds before the " +
+            s"fixed point: the last round still removed edges (${ends / 2} edges " +
+            "remain, some may have degree < k). Raise maxRounds or pass " +
+            "strict = false for a budget-bounded preview." })))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) — the standard
     * community-detection pass over a curation graph: every node starts in
     * its own community, and each round every node adopts the MOST FREQUENT
     * label among its neighbors' previous-round labels (ties break to the
-    * smallest label). Runs exactly `rounds` synchronous rounds: LPA is not
-    * monotone (labels can oscillate on bipartite structures), so a fixed
-    * round count IS the deterministic contract — unlike kCore's monotone
-    * fixed point there is no convergence early-exit to take. With integer
-    * counts and the min tie-break every round is a pure function of the
-    * previous labels, independent of partitioning and engine — what lets
-    * an unrolled SQL CTE chain recompute it bit-for-bit.
+    * smallest label, in Spark SQL's order). Runs exactly `rounds`
+    * synchronous rounds: LPA is not monotone (labels can oscillate on
+    * bipartite structures), so a fixed round count IS the deterministic
+    * contract — unlike kCore's monotone fixed point there is no
+    * convergence read. With integer counts and the min tie-break every
+    * round is a pure function of the previous labels, independent of
+    * partitioning and engine — what lets an unrolled SQL CTE chain
+    * recompute it bit-for-bit.
     *
-    * Round shape: one hash join (adjacency ⋈ labels, keyed by neighbor) +
-    * one map-side-combinable (node, label) count + one per-node top-1
-    * window (partitioned by node — bounded by max degree, never global),
-    * labels localCheckpoint'd per round so plans stay constant-depth: the
-    * identical loop discipline as [[pageRankFixedPoint]]. No driver pulls
-    * at all — the loop is fixed-length. Returns (node, community). */
+    * Round shape ([[Loops]]): one narrow join of the node-partitioned
+    * adjacency with the labels, then one node-keyed shuffle carrying
+    * per-node label counts, combined map-side. Rounds are stages, not
+    * jobs: up to [[Loops.LineageRounds]] rounds are one Spark job.
+    * Returns (node, community). */
   def labelPropagation(
       edges: DataFrame,
       rounds: Int = 4,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    import org.apache.spark.sql.expressions.Window
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("x"),
-        greatest(col(srcCol), col(dstCol)).as("y"))
-      .filter(col("x") =!= col("y"))
-      .distinct()
-    val sym = Loops.roundCheckpoint(
-      und.select(col("x").as("node"), col("y").as("nb"))
-        .union(und.select(col("y").as("node"), col("x").as("nb"))))
-    var labels = Loops.roundCheckpoint(sym.select(col("node")).distinct()
-      .select(col("node"), col("node").as("label")))
-    // Per-round top-1 is ONE deterministic mode() aggregate (r18, guide
-    // §2.3/§2.4): mode(label, deterministic = true) returns the most
-    // frequent neighbor label with ties to the LOWEST value — exactly the
-    // former (node, label)-count + row_number window's (c DESC, label ASC)
-    // rule — in a single node-keyed exchange with map-side partial
-    // aggregation (per-node label->count maps merge associatively), where
-    // the window shape paid TWO exchanges and a per-partition sort per
-    // round.
-    for (_ <- 1 to rounds) {
-      labels = Loops.roundCheckpoint(sym
-        .join(labels.select(col("node").as("nb"), col("label")), "nb")
-        .groupBy(col("node"))
-        .agg(mode(col("label"), deterministic = true).as("label")))
+    val und = undirected(edges, srcCol, dstCol)
+    Loops.run(edges.sparkSession, nodeSchema(und, "community", und.schema("x").dataType)) { loop =>
+      loop.iterate(labelPropagationLoop(loop, und), rounds).map { case (n, l) => Row(n, l) }
     }
-    labels.select(col("node"), col("label").as("community"))
+  }
+
+  /** The label loop over `undirected` edges, starting from label = node. */
+  private[operators] def labelPropagationLoop(loop: Loops.Loop, und: DataFrame)
+      : Loops.FixedPoint[Any, Any] = {
+    val ord = Loops.idOrdering("labelPropagation", und.schema("x").dataType)
+    val part = loop.part
+    val adj = loop.static(symmetric(und))
+    def merge(a: Map[Any, Long], b: Map[Any, Long]) =
+      b.foldLeft(a) { case (m, (l, n)) => m.updated(l, m.getOrElse(l, 0L) + n) }
+    Loops.FixedPoint(
+      adj.mapPartitions(_.map(_._1).distinct.map(n => (n, n)), preservesPartitioning = true),
+      labels => {
+        val counts = Loops.combine(Loops.lookup(labels, adj) {
+          case ((_, nb), label) => label.map(l => (nb, Map(l -> 1L)))
+        }, part)(merge)
+        // the most frequent neighbor label, ties to the lowest
+        counts.mapValues(_.reduce { (a, b) =>
+          if (a._2 > b._2 || (a._2 == b._2 && ord.lt(a._1, b._1))) a else b
+        }._1)
+      })
   }
 
   /** Per-node triangle counts + degrees + clustering coefficient over an
@@ -406,11 +387,7 @@ object Graph {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("x"),
-        greatest(col(srcCol), col(dstCol)).as("y"))
-      .filter(col("x") =!= col("y"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       // referenced by degrees, orientation, and the wedge-closing join
       .localCheckpoint(true)
     val deg = und.select(explode(array(col("x"), col("y"))).as("node"))

@@ -1,14 +1,36 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
-/** Lineage-truncation policy for the iterative operators (the CC label
-  * loop, PageRank ranks, k-core peeling, label propagation).
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The one fixed-point kernel behind every iterative graph operator
+  * (PageRank, the CC label loop, k-core peeling, label propagation), and
+  * its lineage-truncation policy.
   *
-  * Every round of an iterative plan must truncate lineage or plan depth
-  * grows with the round count (and Catalyst re-derives the whole history
-  * each round). The default truncation is `localCheckpoint`: blocks live in
-  * executor memory/disk with NO lineage behind them — fast, no distributed-
+  * Round shape: the co-partitioned join of the RDD paper (Zaharia et al.,
+  * NSDI'12 §3.2.2). A [[Loop]] hash-partitions its static inputs ONCE,
+  * under one partitioner of `spark.sql.shuffle.partitions` width, and
+  * persists them; every frontier keeps that partitioner, so a round's
+  * joins against the static inputs are narrow and its only shuffles are
+  * the propagation itself. No round plans a SQL join, so no runtime join
+  * choice (and no broadcast of a loop input) can differ between two runs.
+  *
+  * A loop without a convergence read materializes its frontier every
+  * [[LineageRounds]] rounds, so a run of up to that many rounds is one
+  * Spark job. A loop with one (CC, k-core) materializes every round with
+  * ONE action that both fills the round and folds the read. Either way
+  * the materialized frontier is the lineage truncation point, and the
+  * one before it is released.
+  *
+  * Truncation is `localCheckpoint` by default: blocks live in executor
+  * memory/disk with NO lineage behind them — fast, no distributed-
   * filesystem round-trip, and exactly right on local[k] or short loops.
   * But on a real cluster a lost executor loses its localCheckpoint blocks
   * UNRECOVERABLY (the lineage that could recompute them was truncated
@@ -16,12 +38,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * loop, executor churn is routine, not exceptional.
   *
   * Setting `graft.loops.reliableCheckpoint=true` (a runtime session conf)
-  * switches every round boundary to RELIABLE checkpointing —
-  * `Dataset.checkpoint(eager = true)` / `RDD.checkpoint()` into the
-  * context's checkpoint directory (`SparkContext.setCheckpointDir`, HDFS/
-  * object-store-backed on a cluster), which survives any executor loss.
-  * The results are IDENTICAL either way (LoopsSpec pins this); only the
-  * storage of the round frontier changes. The knob is read per call, so a
+  * switches every truncation to RELIABLE checkpointing into the context's
+  * checkpoint directory (`SparkContext.setCheckpointDir`, HDFS/object-
+  * store-backed on a cluster), which survives any executor loss. The
+  * results are IDENTICAL either way (LoopsSpec pins this); only the
+  * storage of the frontier changes. The knob is read per call, so a
   * long-running session can turn it on for a big job and off again.
   */
 object Loops {
@@ -38,29 +59,161 @@ object Loops {
     on
   }
 
-  /** Truncate lineage at a round boundary: reliable checkpoint when the
-    * session asks for it, localCheckpoint otherwise. Eager either way —
-    * the loop's convergence reads ride the materialization. */
-  def roundCheckpoint[T](ds: Dataset[T]): Dataset[T] =
-    if (reliable(ds.sparkSession)) ds.checkpoint(eager = true)
-    else ds.localCheckpoint(eager = true)
+  /** How loop inputs and frontiers are cached: serialized, because
+    * caching deserialized values size-samples them as they are stored, a
+    * fixed cost per partition that dominated the rounds of small graphs
+    * at full shuffle width. */
+  private val Store = StorageLevel.MEMORY_AND_DISK_SER
 
-  /** RDD form for loops that run on RDDs: the CC label loop (round-trips
-    * for fresh attribute ids) and PageRank's rank frontier (keeps its
-    * partitioner). Marks only; the caller materializes with its own action
-    * (checkpointing completes on that action either way).
+  /** Rounds between materializations of a frontier in a loop without a
+    * convergence read. A run of at most this many rounds is one Spark
+    * job; a longer one builds a DAG of at most this many rounds per job
+    * instead of one deep DAG. */
+  private[operators] val LineageRounds = 10
+
+  /** A convergence read: the action that materializes a round sums
+    * `measure` over the frontier's values. The loop stops once
+    * `done(sums)`; `exhausted(sums, maxRounds)` describes a loop that ran
+    * out of rounds first. */
+  private[operators] final case class Read[V](
+      measure: V => (Long, Long),
+      done: ((Long, Long)) => Boolean,
+      exhausted: ((Long, Long), Int) => String)
+
+  /** One fixed-point loop: the initial frontier (under the loop's
+    * partitioner), the round, and an optional convergence read. */
+  private[operators] final case class FixedPoint[K, V](
+      init: RDD[(K, V)],
+      step: RDD[(K, V)] => RDD[(K, V)],
+      read: Option[Read[V]] = None)
+
+  /** Runs `body` on a fresh [[Loop]] and returns the rows it builds as a
+    * frame with fresh attribute ids, materialized once (reliable
+    * checkpoint storage when the session asks for it). The loop's
+    * persisted RDDs are released after, or when `body` throws. */
+  private[operators] def run(spark: SparkSession, schema: StructType)(
+      body: Loop => RDD[Row]): DataFrame = {
+    val loop = new Loop(spark)
+    try {
+      val df = spark.createDataFrame(body(loop), schema)
+      if (reliable(spark)) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+    } finally loop.release()
+  }
+
+  /** The order Spark SQL sorts `dt` values in, for loops that take a min
+    * or break ties by id: strings by `UTF8String`'s byte order, not by
+    * `String.compareTo`'s UTF-16 units (which sort a supplementary
+    * character below U+E000..U+FFFF). Binary ids are refused: byte arrays
+    * hash by identity on the JVM, so two equal ids would land apart and
+    * never join. */
+  private[operators] def idOrdering(op: String, dt: DataType): Ordering[Any] = dt match {
+    case BinaryType =>
+      throw new IllegalArgumentException(s"$op: binary node ids are not supported")
+    case _: StringType =>
+      def utf8(s: Any) = UTF8String.fromString(s.asInstanceOf[String])
+      (a, b) => utf8(a).compareTo(utf8(b))
+    case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+  }
+
+  /** Joins `rows` with `table` partition by partition: both are keyed
+    * under the loop's partitioner, so a key's rows and its table entry sit
+    * in the same partition and one hash lookup joins them. `f` sees each
+    * row with its key's table value, if any. `keep` marks the output as
+    * still keyed by the rows' keys (it keeps `table`'s partitioner).
     *
-    * Reliable mode persists BEFORE marking: `RDD.checkpoint()` on an
-    * unpersisted RDD makes the separate checkpoint-writing job RECOMPUTE
-    * the whole round lineage (doubling per-round cost), and the
-    * checkpointed copy would then be a recomputation rather than the exact
-    * data the caller's convergence action observed. With the persist, the
-    * caller's action fills the cache and the checkpoint job copies cached
-    * blocks. The loop's own per-round unpersist releases the cache
-    * (localCheckpoint needs no extra persist — it IS a persist). */
-  def markCheckpoint(spark: SparkSession, rdd: org.apache.spark.rdd.RDD[_]): Unit =
-    if (reliable(spark)) {
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.checkpoint()
-    } else rdd.localCheckpoint()
+    * Rounds join and combine through local hash maps rather than
+    * cogroup/combineByKey: those size-sample their maps in every task, a
+    * fixed cost per partition that dwarfs a round's work on small graphs
+    * at full shuffle width. */
+  private[operators] def lookup[T, R: ClassTag, O: ClassTag](
+      table: RDD[(Any, T)], rows: RDD[(Any, R)], keep: Boolean = false)(
+      f: ((Any, R), Option[T]) => Option[O]): RDD[O] =
+    table.zipPartitions(rows, keep) { (entries, rs) =>
+      val at = new java.util.HashMap[Any, T]()
+      entries.foreach { case (k, v) => at.put(k, v) }
+      rs.flatMap(r => f(r, if (at.containsKey(r._1)) Some(at.get(r._1)) else None))
+    }
+
+  /** Reduces `msgs` by key with `f`: combined within each partition,
+    * shuffled once to `part`, combined again. */
+  private[operators] def combine[M: ClassTag](msgs: RDD[(Any, M)], part: Partitioner)(
+      f: (M, M) => M): RDD[(Any, M)] =
+    msgs.mapPartitions(reduceLocal(_)(f)).partitionBy(part)
+      .mapPartitions(reduceLocal(_)(f), preservesPartitioning = true)
+
+  /** Reduces one partition's rows by key with `f`, in one hash map. */
+  private[operators] def reduceLocal[M](rows: Iterator[(Any, M)])(
+      f: (M, M) => M): Iterator[(Any, M)] = {
+    val acc = new java.util.HashMap[Any, M]()
+    rows.foreach { case (k, v) => acc.put(k, if (acc.containsKey(k)) f(acc.get(k), v) else v) }
+    acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))
+  }
+
+  /** The state of one loop run: its partitioner, and the static inputs
+    * and last materialized frontier it holds until [[release]]. */
+  private[operators] final class Loop(val spark: SparkSession) {
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    private var statics = List.empty[RDD[_]]
+    private var frontier: Option[RDD[_]] = None
+
+    /** `rdd` under the loop's partitioner, persisted for the whole loop. */
+    def static[K: ClassTag, V: ClassTag](rdd: RDD[(K, V)]): RDD[(K, V)] = {
+      val p = if (rdd.partitioner.contains(part)) rdd else rdd.partitionBy(part)
+      p.persist(Store)
+      statics ::= p
+      p
+    }
+
+    /** Runs `fp` for `maxRounds` rounds, or until its read is done, and
+      * returns the last frontier (not yet materialized when the loop has
+      * no read). A loop whose read is not done after `maxRounds` rounds
+      * throws, or with `strict = false` logs a warning and returns the
+      * frontier as it stands. */
+    def iterate[K, V](fp: FixedPoint[K, V], maxRounds: Int,
+        strict: Boolean = true): RDD[(K, V)] = {
+      var cur = fp.init
+      var sums = (0L, 0L)
+      var done = false
+      var round = 0
+      while (round < maxRounds && !done) {
+        cur = fp.step(cur)
+        round += 1
+        fp.read match {
+          case Some(r) =>
+            sums = materialize(cur)(cur.aggregate((0L, 0L))({ case ((a, b), (_, v)) =>
+              val (x, y) = r.measure(v)
+              (a + x, b + y)
+            }, { case ((a, b), (x, y)) => (a + x, b + y) }))
+            done = r.done(sums)
+          case None if round % LineageRounds == 0 && round < maxRounds =>
+            materialize(cur)(cur.count())
+          case None =>
+        }
+      }
+      for (r <- fp.read if !done) {
+        val msg = r.exhausted(sums, maxRounds)
+        if (strict) throw new IllegalStateException(msg)
+        else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+      }
+      cur
+    }
+
+    /** Makes `rdd` the loop's lineage truncation point, materialized by
+      * `action`, and releases the frontier materialized before it, which
+      * nothing can reach any more. The blocks are stored serialized (see
+      * [[Store]]); reliable mode keeps them cached too, so the
+      * checkpoint-writing job copies the blocks `action` filled instead of
+      * RECOMPUTING the round. */
+    private def materialize[T](rdd: RDD[_])(action: => T): T = {
+      rdd.persist(Store)
+      if (reliable(spark)) rdd.checkpoint() else rdd.localCheckpoint()
+      val out = action
+      frontier.foreach(_.unpersist(blocking = true))
+      frontier = Some(rdd)
+      out
+    }
+
+    private[operators] def release(): Unit =
+      (frontier ++: statics).foreach(_.unpersist(blocking = false))
+  }
 }

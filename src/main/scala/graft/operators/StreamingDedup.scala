@@ -39,7 +39,12 @@ object StreamingDedup {
     * when the doc claimed an empty bucket). */
   final case class Verdict(id: String, near_dup: Boolean, dup_of: Option[String], jaccard: Double)
 
-  private final case class Owner(id: String, hashes: Array[Long])
+  /** A bucket's claimant, the keyed state. Package-private, not
+    * `private`: scalac marks a `private` nested class private in its
+    * InnerClasses entry, and Janino honors that flag, so the generated
+    * state serializer could neither call `id()` nor the constructor and
+    * Spark fell back to interpreting the encoder on every batch. */
+  private[operators] final case class Owner(id: String, hashes: Array[Long])
 
   /** Distinct sorted shingle hashes of a document — the set the exact
     * Jaccard refinement runs on (same hashes as the batch refinement's

@@ -37,14 +37,23 @@ class GraphSpec extends SparkSpec {
   private def canonical(edges: Seq[(String, String, Long)]): Seq[(String, String, Long)] =
     edges.groupBy(e => (e._1, e._2)).map { case ((s, d), es) => (s, d, es.map(_._3).sum) }.toSeq
 
+  /** Runs `f` on a fresh loop, releasing what the loop persisted after. */
+  private def withLoop[T](f: Loops.Loop => T): T = {
+    val loop = new Loops.Loop(spark)
+    try f(loop) finally loop.release()
+  }
+
+  /** The partitioner every loop should use: session width. */
+  private def sessionPart: Partitioner =
+    new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
   /** Runs the loop on canonical edges and hands its rank RDD and the
-    * partitioner the loop should use (session width) to `f`, releasing the
-    * loop's persisted inputs after. */
+    * partitioner the loop should use to `f`, releasing the loop's
+    * persisted inputs after. */
   private def withRanks[T](edges: Seq[(String, String, Long)], iters: Int)(
-      f: (RDD[(Any, Long)], Partitioner) => T): T = {
-    val (ranks, held) = Graph.pageRankRdd(edges.toDF("src", "dst", "cnt"), iters, 85L, 1000000L)
-    try f(ranks, new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt))
-    finally held.foreach(_.unpersist(blocking = false))
+      f: (RDD[(Any, Long)], Partitioner) => T): T = withLoop { loop =>
+    val fp = Graph.pageRankLoop(loop, edges.toDF("src", "dst", "cnt"), 85L, 1000000L)
+    f(loop.iterate(fp, iters), sessionPart)
   }
 
   /** Every RDD the given one's lineage reaches, each once. */
@@ -57,6 +66,30 @@ class GraphSpec extends SparkSpec {
     walk(rdd)
     seen.values.toSeq
   }
+
+  /** Shuffles `rounds` unmaterialized rounds of the loop `build` makes
+    * leave in the frontier's lineage, after checking that every join on
+    * the way (an RDD with more than one parent, one of them keyed) reads
+    * all its parents narrowly under the session-width partitioner and
+    * that the frontier keeps it. */
+  private def roundShuffles[K, V](rounds: Int)(
+      build: Loops.Loop => Loops.FixedPoint[K, V]): Int = withLoop { loop =>
+    val fp = build(loop)
+    val out = (1 to rounds).foldLeft(fp.init)((f, _) => fp.step(f))
+    val rdds = lineage(out)
+    val joins = rdds.filter(r => r.dependencies.size > 1 &&
+      r.dependencies.exists(_.rdd.partitioner.isDefined)) // not the input plan's unions
+    assert(joins.nonEmpty == rounds > 0 && joins.forall(_.dependencies.forall(d =>
+        d.isInstanceOf[OneToOneDependency[_]] && d.rdd.partitioner.contains(sessionPart))),
+      "every join must be narrow on the loop partitioner")
+    assert(out.partitioner.contains(sessionPart))
+    rdds.flatMap(_.dependencies).count(_.isInstanceOf[ShuffleDependency[_, _, _]])
+  }
+
+  /** K5 on 1-5 with the tendril 5-6-7-8-9: a 2-core peel drops one
+    * tendril node per round, so rounds 1-4 all differ. */
+  private val tendril = (for (a <- 1L to 5L; b <- (a + 1) to 5L) yield (a, b)) ++
+    Seq((5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
 
   test("symmetric 2-cycle is a fixed point at the initial mass") {
     val got = run(Seq(("a", "b", 1L), ("b", "a", 1L)))
@@ -115,18 +148,24 @@ class GraphSpec extends SparkSpec {
     // rounds 21-25 are all the rank RDD still has to recompute
     def shuffles(iters: Int) = withRanks(edges, iters)((ranks, _) =>
       lineage(ranks).flatMap(_.dependencies).count(_.isInstanceOf[ShuffleDependency[_, _, _]]))
-    assert(shuffles(25) === shuffles(0) + 25 - 2 * Graph.LineageRounds)
+    assert(shuffles(25) === shuffles(0) + 25 - 2 * Loops.LineageRounds)
   }
 
   test("one call leaves exactly one persisted RDD: the returned frame's checkpoint") {
     val sc = spark.sparkContext
     val df = Seq(("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L), ("c", "a", 1L)).toDF("src", "dst", "cnt")
-    for (iters <- Seq(0, 10, 25)) {
+    def leaves(what: String, rows: Long)(f: => org.apache.spark.sql.DataFrame): Unit = {
       val before = sc.getPersistentRDDs.keySet.toSet
-      val out = Graph.pageRankFixedPoint(df, iters = iters)
-      assert((sc.getPersistentRDDs.keySet.toSet -- before).size === 1, s"iters=$iters")
-      assert(out.count() === 3L)
+      val out = f
+      assert((sc.getPersistentRDDs.keySet.toSet -- before).size === 1, what)
+      assert(out.count() === rows, what)
     }
+    for (iters <- Seq(0, 10, 25))
+      leaves(s"pageRank iters=$iters", 3L)(Graph.pageRankFixedPoint(df, iters = iters))
+    for (rounds <- Seq(0, 4, 25))
+      leaves(s"labelPropagation rounds=$rounds", 3L)(Graph.labelPropagation(df, rounds = rounds))
+    leaves("kCore", 3L)(Graph.kCore(df, k = 2))
+    leaves("nearDupClusters", 3L)(Dedup.nearDupClusters(df.toDF("id_a", "id_b", "cnt")))
   }
 
   test("co-partitioned rounds: one ShuffleDependency per round, every join narrow, one loop job") {
@@ -150,6 +189,33 @@ class GraphSpec extends SparkSpec {
     val df = edges.toDF("src", "dst", "cnt")
     assert(jobs(Graph.pageRankFixedPoint(df, iters = 2)) ===
       jobs(Graph.pageRankFixedPoint(df, iters = 10)))
+  }
+
+  test("co-partitioned k-core, label propagation and CC rounds: narrow joins, one job per read round") {
+    // the loops read `undirected` edges: x < y, each pair once
+    val und = tendril.toDF("x", "y")
+    // one shuffle per round: alive nodes count their alive neighbors
+    def kCore(rounds: Int) = roundShuffles(rounds)(Graph.kCoreLoop(_, und, 2))
+    assert(kCore(2) === kCore(0) + 2)
+    // one shuffle per round: the per-node label counts
+    def lpa(rounds: Int) = roundShuffles(rounds)(Graph.labelPropagationLoop(_, und))
+    assert(lpa(3) === lpa(0) + 3)
+    // the neighbor-min shuffle plus the pointer jump's ask and answer
+    val sym = und.union(und.select($"y", $"x")).toDF("src", "dst")
+    def cc(rounds: Int) = roundShuffles(rounds)(Dedup.clusterLoop(_, sym))
+    assert(cc(2) === cc(0) + 2 * 3)
+
+    // a loop without a read adds stages, not jobs ...
+    val edges = tendril.toDF("src", "dst")
+    assert(jobs(Graph.labelPropagation(edges, rounds = 2)) ===
+      jobs(Graph.labelPropagation(edges, rounds = 8)))
+    // ... and one with a read one job per round: k-core peels one
+    // tendril node per round until round 4, so each extra round is a job
+    val peel = (1 to 4).map(r => jobs(Graph.kCore(edges, k = 2, maxRounds = r, strict = false)))
+    assert(peel.sliding(2).forall { case Seq(a, b) => b === a + 1 }, peel)
+    // CC: a pair settles in 2 rounds, a 4-node path in 3
+    def ccJobs(p: Seq[(Long, Long)]) = jobs(Dedup.nearDupClusters(p.toDF("id_a", "id_b")))
+    assert(ccJobs(Seq((1L, 2L), (2L, 3L), (3L, 4L))) === ccJobs(Seq((1L, 2L))) + 1)
   }
 
   test("zero iterations returns the uniform initial vector") {
@@ -275,6 +341,17 @@ class GraphSpec extends SparkSpec {
     val preview = Graph.kCore(path.toDF("src", "dst"), k = 2, maxRounds = 2,
       strict = false).collect().map(_.getAs[Long]("node")).toSet
     assert(preview === (3L to 10L).toSet)
+    // round by round on the tendril: each round peels one more node, and
+    // the partial peel keeps every survivor's degree among the survivors
+    val peeled = (1 to 4).map(r => Graph.kCore(tendril.toDF("src", "dst"), k = 2,
+        maxRounds = r, strict = false)
+      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap)
+    val k5 = (1L to 4L).map(_ -> 4L).toMap
+    assert(peeled === Seq(
+      k5 ++ Map(5L -> 5L, 6L -> 2L, 7L -> 2L, 8L -> 1L),
+      k5 ++ Map(5L -> 5L, 6L -> 2L, 7L -> 1L),
+      k5 ++ Map(5L -> 5L, 6L -> 1L),
+      k5 + (5L -> 4L)))
     // a graph that CONVERGES within budget never throws, even in strict
     // mode — fixed point at round <= maxRounds is the normal exit
     val cyc2 = Seq((1L, 2L), (2L, 3L), (3L, 1L))
@@ -306,6 +383,17 @@ class GraphSpec extends SparkSpec {
     val r0 = Graph.labelPropagation(edges.toDF("src", "dst"), rounds = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r0 === (1L to 6L).map(n => n -> n).toMap)
+    // rounds 2 and 3, as unrolled above
+    def lpa(rounds: Int) = Graph.labelPropagation(edges.toDF("src", "dst"), rounds = rounds)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lpa(2) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 3L, 6L -> 3L))
+    assert(lpa(3) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 3L, 5L -> 3L, 6L -> 3L))
+    // string ids tie-break in Spark SQL's (UTF-8 byte) order: U+FF21 sorts
+    // below U+1F600, though its UTF-16 unit sorts above the surrogate pair
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    val strs = Graph.labelPropagation(Seq(("c", fw), ("c", emoji)).toDF("src", "dst"), rounds = 1)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(strs === Map("c" -> fw, fw -> "c", emoji -> "c"))
   }
 
   test("eventTransitionEdges: consecutive-per-user edges, (ts, event_id) tie-break, weights summed") {

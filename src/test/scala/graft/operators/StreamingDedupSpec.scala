@@ -221,6 +221,53 @@ class StreamingDedupSpec extends SparkSpec {
     buf.synchronized { buf.toArray }
   }
 
+  test("the bucket-owner state encoder compiles: no codegen failure with or without TTL") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.streaming.TTLConfig
+    // a failed compile is logged at ERROR, then Spark silently falls back
+    // to the interpreted path: the log is the only trace it leaves
+    val codegen = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("codegen-failures", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == codegen && e.getLevel.isMoreSpecificThan(Level.ERROR))
+          failures.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.ERROR, null)
+    ctx.updateLoggers()
+    try {
+      org.slf4j.LoggerFactory.getLogger(codegen).error("probe")
+      assert(failures.asScala.toSeq === Seq("probe"), "the appender must see the code generator")
+      failures.clear()
+
+      graft.streaming.Pipelines.configureStateStore(spark)
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      for (ttl <- Seq(TTLConfig.NONE, TTLConfig(java.time.Duration.ofSeconds(60)))) {
+        val stream = MemoryStream[(Long, String)]
+        val ckpt = java.nio.file.Files.createTempDirectory("ckpt-neardup-codegen").toString
+        def phase() = runPhase(StreamingDedup.nearDupVerdicts(
+          stream.toDF().toDF("doc_id", "text"), threshold = 0.5, band = 0, ttl = ttl), ckpt)
+        stream.addData((1L, base))
+        phase() // the claim writes the owner state
+        stream.addData((2L, base))
+        val second = phase() // the refinement reads it back
+        assert(second.map(_.getAs[Boolean]("near_dup")).toSeq === Seq(true), s"ttl=$ttl")
+      }
+      assert(failures.isEmpty, failures.asScala.mkString("\n"))
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   test("TTL: a claimed LSH bucket evicts after the horizon; the bucket re-claims") {
     val pairBuckets = Seq(base, nearDup).toDF("text")
     val collidingBand = (0 until 16).find { b =>
