@@ -595,43 +595,40 @@ object Dedup {
       .union(pairs.select(col(idColB).as("src"), col(idColA).as("dst")))
     val id = edges.schema("src").dataType
     val schema = StructType(Seq(StructField("doc_id", id), StructField("cluster_id", id)))
-    Loops.run(pairs.sparkSession, schema) { loop =>
-      loop.iterate(clusterLoop(loop, edges), maxRounds).map { case (n, (l, _)) => Row(n, l) }
+    Loops.run(edges, schema) { loop =>
+      loop.iterate(clusterLoop(loop), maxRounds).map { case (n, (l, _)) => Row(n, l) }
     }
   }
 
-  /** The CC loop over symmetric (src, dst) `edges`: (label, changed this
-    * round) per node, starting from label = node. */
-  private[operators] def clusterLoop(loop: Loops.Loop, edges: DataFrame)
-      : Loops.FixedPoint[Any, (Any, Boolean)] = {
-    val ord = Loops.idOrdering("nearDupClusters", edges.schema("src").dataType)
+  /** The CC loop over the loop's input, symmetric (src, dst) edges:
+    * (label, changed this round) per node, starting from label = node. */
+  private[operators] def clusterLoop(loop: Loops.Loop): Loops.FixedPoint[Any, (Any, Boolean)] = {
+    val ord = Loops.idOrdering("nearDupClusters", loop.input.schema("src").dataType)
     // SQL's min: nulls skipped
     def least(a: Any, b: Any): Any = if (a == null || (b != null && ord.gt(a, b))) b else a
     val part = loop.part
-    val adj = loop.static(edges.rdd.map(r => (r.get(0), r.get(1))))
+    val adj = loop.static(loop.rows.map(r => (r.get(0), r.get(1))))
     val links = adj.filter(_._1 != null)
     Loops.FixedPoint(
-      adj.mapPartitions(_.map(_._1).distinct.map(n => (n, (n, true))),
-        preservesPartitioning = true),
+      adj.mapPartitions(_.map { case (n, _) => (n, (n, true)) }, preservesPartitioning = true)
+        .reduceByKey(part, (a, _) => a),
       labels => {
         // (a) neighbor-min; (label, label before the round)
-        val nbMin = Loops.combine(Loops.lookup(labels, links) {
-          case ((_, dst), label) => label.map { case (l, _) => (dst, l) }
-        }, part)(least)
-        val stepped = Loops.lookup(nbMin, labels, keep = true) { case ((n, (label, _)), m) =>
-          Some((n, (least(label, m.orNull), label)))
+        val nbMin = links.join(labels, part)
+          .map { case (_, (dst, (l, _))) => (dst, l) }
+          .reduceByKey(part, least(_, _))
+        val stepped = labels.leftOuterJoin(nbMin, part).mapValues { case ((label, _), m) =>
+          (least(label, m.orNull), label)
         }
-        // (b) pointer jump: ask each label's own row, answer the asking node
-        val asks = stepped
-          .flatMap { case (n, (label, _)) => Option(label).map(_ -> n) }
+        // (b) pointer jump: every node asks its label's own row (labels are
+        // node ids), and the answer comes back keyed by the asking node
+        stepped.map { case (n, (label, old)) => (label, (n, old)) }.partitionBy(part)
+          .join(stepped, part)
+          .map { case (label, ((n, old), (jumped, _))) =>
+            val next = if (jumped == null) label else jumped
+            (n, (next, old == null || next != old))
+          }
           .partitionBy(part)
-        val answers = Loops.lookup(stepped, asks) { case ((label, n), own) =>
-          own.map { case (jumped, _) => (n, if (jumped == null) label else jumped) }
-        }.partitionBy(part)
-        Loops.lookup(answers, stepped, keep = true) { case ((n, (label, old)), jumped) =>
-          val next = jumped.getOrElse(label)
-          Some((n, (next, old == null || next != old)))
-        }
       },
       Some(Loops.Read[(Any, Boolean)](
         v => (if (v._2) 1L else 0L, 0L), _._1 == 0L,

@@ -11,8 +11,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * combined propagation shuffle, the same round shape as [[Dedup]]'s
   * connected-components loop. Nothing graph-specific is materialized on the
   * driver: the node set, edge list, and rank vector all stay distributed,
-  * partitioned by node id, so a 10^9-node graph runs the identical plan with
-  * more partitions.
+  * partitioned by node id, and the rounds join and reduce with Spark's
+  * spilling `join`/`reduceByKey`, so a 10^9-node graph runs the identical
+  * plan with more partitions (a loop is as wide as its input, up to the
+  * shuffle width).
   *
   * Determinism: ranks are FIXED-POINT integers (micro-units, `scale` = one).
   * Floating-point PageRank sums per-edge contributions in shuffle order, so
@@ -100,22 +102,22 @@ object Graph {
       StructField("node", e.schema("src").dataType,
         e.schema("src").nullable || e.schema("dst").nullable),
       StructField("rank", LongType, nullable = false)))
-    Loops.run(e.sparkSession, schema) { loop =>
-      loop.iterate(pageRankLoop(loop, e, dampPct, scale), iters)
+    Loops.run(e, schema) { loop =>
+      loop.iterate(pageRankLoop(loop, dampPct, scale), iters)
         .map { case (n, r) => Row(n, r) }
     }
   }
 
-  /** The PageRank loop over the canonical edge frame `e` (src, dst, cnt;
-    * one row per pair): ranks keyed by node, starting at `scale`. */
+  /** The PageRank loop over the loop's input, the canonical edge frame
+    * (src, dst, cnt; one row per pair): ranks keyed by node, starting at
+    * `scale`. */
   private[operators] def pageRankLoop(
       loop: Loops.Loop,
-      e: DataFrame,
       dampPct: Long,
       scale: Long): Loops.FixedPoint[Any, Long] = {
-    Loops.idOrdering("pageRankFixedPoint", e.schema("src").dataType) // refuses binary ids
+    Loops.idOrdering("pageRankFixedPoint", loop.input.schema("src").dataType) // refuses binary ids
     val part = loop.part
-    val adj = e.rdd.map(r => (r.get(0), (r.get(1), r.get(2)))).partitionBy(part)
+    val adj = loop.rows.map(r => (r.get(0), (r.get(1), r.get(2)))).partitionBy(part)
     val nodes = loop.static(adj.flatMap { case (s, (d, _)) => Iterator(s -> (), d -> ()) }
       .reduceByKey(part, (a, _) => a))
     // SQL's sum skips a null weight and its join matches no null src.
@@ -147,8 +149,8 @@ object Graph {
       .distinct()
 
   /** Both directions of every `undirected` row, keyed by the first. */
-  private def symmetric(und: DataFrame): RDD[(Any, Any)] =
-    und.rdd.flatMap(r => Iterator((r.get(0), r.get(1)), (r.get(1), r.get(0))))
+  private def symmetric(und: RDD[Row]): RDD[(Any, Any)] =
+    und.flatMap(r => Iterator((r.get(0), r.get(1)), (r.get(1), r.get(0))))
 
   /** User co-engagement graph over an event log: an undirected edge (src <
     * dst) between users sharing at least `minShared` of their top-`topK`
@@ -276,8 +278,8 @@ object Graph {
       dstCol: String = "dst"): DataFrame = {
     require(k >= 1 && maxRounds >= 1)
     val und = undirected(edges, srcCol, dstCol)
-    Loops.run(edges.sparkSession, nodeSchema(und, "core_degree", LongType)) { loop =>
-      loop.iterate(kCoreLoop(loop, und, k), maxRounds, strict)
+    Loops.run(und, nodeSchema(und, "core_degree", LongType)) { loop =>
+      loop.iterate(kCoreLoop(loop, k), maxRounds, strict)
         .flatMap { case (n, (d, _)) => if (d > 0L) Some(Row(n, d)) else None }
     }
   }
@@ -286,23 +288,22 @@ object Graph {
   private def nodeSchema(und: DataFrame, name: String, dt: DataType): StructType =
     StructType(Seq(StructField("node", und.schema("x").dataType), StructField(name, dt)))
 
-  /** The peeling loop over `undirected` edges: every node's degree among
-    * the surviving nodes, paired with its degree a round earlier (a peeled
-    * node stays, at degree 0). */
-  private[operators] def kCoreLoop(loop: Loops.Loop, und: DataFrame, k: Int)
+  /** The peeling loop over the loop's input, `undirected` edges: every
+    * node's degree among the surviving nodes, paired with its degree a
+    * round earlier (a peeled node stays, at degree 0). */
+  private[operators] def kCoreLoop(loop: Loops.Loop, k: Int)
       : Loops.FixedPoint[Any, (Long, Long)] = {
     val part = loop.part
-    val adj = loop.static(symmetric(und))
+    val adj = loop.static(symmetric(loop.rows))
     Loops.FixedPoint(
-      adj.mapPartitions(edges => Loops.reduceLocal(edges.map(e => (e._1, 1L)))(_ + _)
-        .map { case (n, d) => (n, (d, d)) }, preservesPartitioning = true),
+      adj.mapValues(_ => 1L).reduceByKey(part, _ + _).mapValues(d => (d, d)),
       deg => {
-        val alive = Loops.combine(Loops.lookup(deg, adj) {
-          case ((_, nb), Some((d, _))) if d >= k => Some((nb, 1L))
-          case _ => None
-        }, part)(_ + _)
-        Loops.lookup(alive, deg, keep = true) { case ((n, (d, _)), alive) =>
-          Some((n, (if (d >= k) alive.getOrElse(0L) else 0L, d)))
+        // alive nodes count their alive neighbors
+        val alive = adj.join(deg, part)
+          .flatMap { case (_, (nb, (d, _))) => if (d >= k) Some((nb, 1L)) else None }
+          .reduceByKey(part, _ + _)
+        deg.leftOuterJoin(alive, part).mapValues { case ((d, _), a) =>
+          (if (d >= k) a.getOrElse(0L) else 0L, d)
         }
       },
       // sums: (edge ends left, edge ends removed this round)
@@ -341,30 +342,29 @@ object Graph {
       dstCol: String = "dst"): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val und = undirected(edges, srcCol, dstCol)
-    Loops.run(edges.sparkSession, nodeSchema(und, "community", und.schema("x").dataType)) { loop =>
-      loop.iterate(labelPropagationLoop(loop, und), rounds).map { case (n, l) => Row(n, l) }
+    Loops.run(und, nodeSchema(und, "community", und.schema("x").dataType)) { loop =>
+      loop.iterate(labelPropagationLoop(loop), rounds).map { case (n, l) => Row(n, l) }
     }
   }
 
-  /** The label loop over `undirected` edges, starting from label = node. */
-  private[operators] def labelPropagationLoop(loop: Loops.Loop, und: DataFrame)
-      : Loops.FixedPoint[Any, Any] = {
-    val ord = Loops.idOrdering("labelPropagation", und.schema("x").dataType)
+  /** The label loop over the loop's input, `undirected` edges, starting
+    * from label = node. */
+  private[operators] def labelPropagationLoop(loop: Loops.Loop): Loops.FixedPoint[Any, Any] = {
+    val ord = Loops.idOrdering("labelPropagation", loop.input.schema("x").dataType)
     val part = loop.part
-    val adj = loop.static(symmetric(und))
+    val adj = loop.static(symmetric(loop.rows))
     def merge(a: Map[Any, Long], b: Map[Any, Long]) =
       b.foldLeft(a) { case (m, (l, n)) => m.updated(l, m.getOrElse(l, 0L) + n) }
     Loops.FixedPoint(
-      adj.mapPartitions(_.map(_._1).distinct.map(n => (n, n)), preservesPartitioning = true),
-      labels => {
-        val counts = Loops.combine(Loops.lookup(labels, adj) {
-          case ((_, nb), label) => label.map(l => (nb, Map(l -> 1L)))
-        }, part)(merge)
+      adj.mapPartitions(_.map { case (n, _) => (n, n) }, preservesPartitioning = true)
+        .reduceByKey(part, (a, _) => a),
+      labels => adj.join(labels, part)
+        .map { case (_, (nb, l)) => (nb, Map(l -> 1L)) }
+        .reduceByKey(part, merge(_, _))
         // the most frequent neighbor label, ties to the lowest
-        counts.mapValues(_.reduce { (a, b) =>
+        .mapValues(_.reduce { (a, b) =>
           if (a._2 > b._2 || (a._2 == b._2 && ord.lt(a._1, b._1))) a else b
-        }._1)
-      })
+        }._1))
   }
 
   /** Per-node triangle counts + degrees + clustering coefficient over an

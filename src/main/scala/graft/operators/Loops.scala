@@ -1,9 +1,8 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
-import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructType}
@@ -16,11 +15,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Round shape: the co-partitioned join of the RDD paper (Zaharia et al.,
   * NSDI'12 §3.2.2). A [[Loop]] hash-partitions its static inputs ONCE,
-  * under one partitioner of `spark.sql.shuffle.partitions` width, and
-  * persists them; every frontier keeps that partitioner, so a round's
-  * joins against the static inputs are narrow and its only shuffles are
-  * the propagation itself. No round plans a SQL join, so no runtime join
-  * choice (and no broadcast of a loop input) can differ between two runs.
+  * under one partitioner as wide as its input after AQE coalesced it (at
+  * most `spark.sql.shuffle.partitions`), and persists them; every
+  * frontier keeps that partitioner, so a round's joins against the static
+  * inputs are narrow and its only shuffles are the propagation itself.
+  * Rounds are written with Spark's own `join` and `reduceByKey` (which
+  * spill), and no round plans a SQL join, so no runtime join choice (and
+  * no broadcast of a loop input) can differ between two runs.
   *
   * A loop without a convergence read materializes its frontier every
   * [[LineageRounds]] rounds, so a run of up to that many rounds is one
@@ -59,12 +60,6 @@ object Loops {
     on
   }
 
-  /** How loop inputs and frontiers are cached: serialized, because
-    * caching deserialized values size-samples them as they are stored, a
-    * fixed cost per partition that dominated the rounds of small graphs
-    * at full shuffle width. */
-  private val Store = StorageLevel.MEMORY_AND_DISK_SER
-
   /** Rounds between materializations of a frontier in a loop without a
     * convergence read. A run of at most this many rounds is one Spark
     * job; a longer one builds a DAG of at most this many rounds per job
@@ -87,16 +82,17 @@ object Loops {
       step: RDD[(K, V)] => RDD[(K, V)],
       read: Option[Read[V]] = None)
 
-  /** Runs `body` on a fresh [[Loop]] and returns the rows it builds as a
-    * frame with fresh attribute ids, materialized once (reliable
-    * checkpoint storage when the session asks for it). The loop's
-    * persisted RDDs are released after, or when `body` throws. */
-  private[operators] def run(spark: SparkSession, schema: StructType)(
+  /** Runs `body` on a fresh [[Loop]] over `input` and returns the rows it
+    * builds as a frame with fresh attribute ids, materialized once
+    * (reliable checkpoint storage when the session asks for it). The
+    * loop's persisted RDDs are released after, or when `body` throws. */
+  private[operators] def run(input: DataFrame, schema: StructType)(
       body: Loop => RDD[Row]): DataFrame = {
-    val loop = new Loop(spark)
+    val loop = new Loop(input)
     try {
-      val df = spark.createDataFrame(body(loop), schema)
-      if (reliable(spark)) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+      val df = input.sparkSession.createDataFrame(body(loop), schema)
+      if (reliable(df.sparkSession)) df.checkpoint(eager = true)
+      else df.localCheckpoint(eager = true)
     } finally loop.release()
   }
 
@@ -115,51 +111,28 @@ object Loops {
     case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 
-  /** Joins `rows` with `table` partition by partition: both are keyed
-    * under the loop's partitioner, so a key's rows and its table entry sit
-    * in the same partition and one hash lookup joins them. `f` sees each
-    * row with its key's table value, if any. `keep` marks the output as
-    * still keyed by the rows' keys (it keeps `table`'s partitioner).
-    *
-    * Rounds join and combine through local hash maps rather than
-    * cogroup/combineByKey: those size-sample their maps in every task, a
-    * fixed cost per partition that dwarfs a round's work on small graphs
-    * at full shuffle width. */
-  private[operators] def lookup[T, R: ClassTag, O: ClassTag](
-      table: RDD[(Any, T)], rows: RDD[(Any, R)], keep: Boolean = false)(
-      f: ((Any, R), Option[T]) => Option[O]): RDD[O] =
-    table.zipPartitions(rows, keep) { (entries, rs) =>
-      val at = new java.util.HashMap[Any, T]()
-      entries.foreach { case (k, v) => at.put(k, v) }
-      rs.flatMap(r => f(r, if (at.containsKey(r._1)) Some(at.get(r._1)) else None))
-    }
+  /** The state of one loop run over `input`: its partitioner, and the
+    * static inputs and last materialized frontier it holds until
+    * [[release]]. */
+  private[operators] final class Loop(val input: DataFrame) {
+    /** The input's rows. Building them runs the input's plan up to its
+      * last shuffle, whose partitions AQE has coalesced to the data's size
+      * by then. */
+    val rows: RDD[Row] = input.rdd
 
-  /** Reduces `msgs` by key with `f`: combined within each partition,
-    * shuffled once to `part`, combined again. */
-  private[operators] def combine[M: ClassTag](msgs: RDD[(Any, M)], part: Partitioner)(
-      f: (M, M) => M): RDD[(Any, M)] =
-    msgs.mapPartitions(reduceLocal(_)(f)).partitionBy(part)
-      .mapPartitions(reduceLocal(_)(f), preservesPartitioning = true)
+    /** As many partitions as the input has, at most the session's shuffle
+      * width: a small graph's rounds run in few tasks, a large one's at
+      * full width. */
+    val part = new HashPartitioner(math.max(1, math.min(rows.getNumPartitions,
+      input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)))
 
-  /** Reduces one partition's rows by key with `f`, in one hash map. */
-  private[operators] def reduceLocal[M](rows: Iterator[(Any, M)])(
-      f: (M, M) => M): Iterator[(Any, M)] = {
-    val acc = new java.util.HashMap[Any, M]()
-    rows.foreach { case (k, v) => acc.put(k, if (acc.containsKey(k)) f(acc.get(k), v) else v) }
-    acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))
-  }
-
-  /** The state of one loop run: its partitioner, and the static inputs
-    * and last materialized frontier it holds until [[release]]. */
-  private[operators] final class Loop(val spark: SparkSession) {
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     private var statics = List.empty[RDD[_]]
     private var frontier: Option[RDD[_]] = None
 
     /** `rdd` under the loop's partitioner, persisted for the whole loop. */
     def static[K: ClassTag, V: ClassTag](rdd: RDD[(K, V)]): RDD[(K, V)] = {
       val p = if (rdd.partitioner.contains(part)) rdd else rdd.partitionBy(part)
-      p.persist(Store)
+      p.persist(StorageLevel.MEMORY_AND_DISK)
       statics ::= p
       p
     }
@@ -180,14 +153,11 @@ object Loops {
         round += 1
         fp.read match {
           case Some(r) =>
-            sums = materialize(cur)(cur.aggregate((0L, 0L))({ case ((a, b), (_, v)) =>
-              val (x, y) = r.measure(v)
-              (a + x, b + y)
-            }, { case ((a, b), (x, y)) => (a + x, b + y) }))
+            sums = materialize(cur)(cur.map(kv => r.measure(kv._2))
+              .fold((0L, 0L)) { case ((a, b), (x, y)) => (a + x, b + y) })
             done = r.done(sums)
-          case None if round % LineageRounds == 0 && round < maxRounds =>
+          case None => if (round % LineageRounds == 0 && round < maxRounds)
             materialize(cur)(cur.count())
-          case None =>
         }
       }
       for (r <- fp.read if !done) {
@@ -200,13 +170,15 @@ object Loops {
 
     /** Makes `rdd` the loop's lineage truncation point, materialized by
       * `action`, and releases the frontier materialized before it, which
-      * nothing can reach any more. The blocks are stored serialized (see
-      * [[Store]]); reliable mode keeps them cached too, so the
-      * checkpoint-writing job copies the blocks `action` filled instead of
-      * RECOMPUTING the round. */
+      * nothing can reach any more. Reliable mode persists before marking,
+      * so the checkpoint-writing job copies the blocks `action` filled
+      * instead of RECOMPUTING the round (`localCheckpoint` is a persist
+      * itself). */
     private def materialize[T](rdd: RDD[_])(action: => T): T = {
-      rdd.persist(Store)
-      if (reliable(spark)) rdd.checkpoint() else rdd.localCheckpoint()
+      if (reliable(input.sparkSession)) {
+        rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        rdd.checkpoint()
+      } else rdd.localCheckpoint()
       val out = action
       frontier.foreach(_.unpersist(blocking = true))
       frontier = Some(rdd)

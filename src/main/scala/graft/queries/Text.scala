@@ -87,32 +87,6 @@ object Text extends QueryModule {
     s"""CASE WHEN len($wsSql) < 3 THEN CAST([] AS VARCHAR[])
         ELSE list_distinct(list_transform(range(1, len($wsSql) - 1),
           i -> $wsSql[i] || ' ' || $wsSql[i+1] || ' ' || $wsSql[i+2])) END"""
-  // The near-dup cluster oracle shared by q58/q59/q101/q115/q116: the
-  // MinHash pairs at Jaccard >= 0.5 recomputed exactly, then `mins`, each
-  // paired doc's component minimum by recursive reachability.
-  private val nearDupMinsSql =
-    s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-        jp AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
-            len(a.sh) AS la, len(b.sh) AS lb
-          FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        pairs AS (
-          SELECT id_a, id_b FROM jp
-          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-        reach AS (
-          SELECT src AS node, dst AS r FROM edges
-          UNION
-          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
-        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)"""
-  // Every doc's cluster id: its component minimum, or itself if unpaired.
-  private val nearDupClusterIdsSql = s"""$nearDupMinsSql
-        SELECT d.doc_id,
-          COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_id
-        FROM documents d LEFT JOIN mins m ON d.doc_id = m.node
-        ORDER BY d.doc_id"""
   // DuckDB fragments mirroring HeuristicFilters.qualityProfile (q77/q78).
   // Every gate is integer arithmetic on both sides (see HeuristicFilters) —
   // no float-boundary risk in the keep decisions.
@@ -445,7 +419,26 @@ object Text extends QueryModule {
             coalesce($"cluster_id", $"doc_id").as("cluster_id"))
           .orderBy($"doc_id")
       },
-      Some(nearDupClusterIdsSql)),
+      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
+        jp AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
+            len(a.sh) AS la, len(b.sh) AS lb
+          FROM s a JOIN s b ON a.doc_id < b.doc_id),
+        pairs AS (
+          SELECT id_a, id_b FROM jp
+          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
+        reach AS (
+          SELECT src AS node, dst AS r FROM edges
+          UNION
+          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
+        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)
+        SELECT d.doc_id,
+          COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_id
+        FROM documents d LEFT JOIN mins m ON d.doc_id = m.node
+        ORDER BY d.doc_id""")),
 
     // ---------------------------------------------------------------- q59
     // The deduplicated corpus: near-dup clusters (q58's machinery) filtered
@@ -463,7 +456,22 @@ object Text extends QueryModule {
           .select($"doc_id", TextFunctions.tokenCount($"text").as("n_tokens"))
           .orderBy($"doc_id")
       },
-      Some(s"""$nearDupMinsSql
+      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
+        jp AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
+            len(a.sh) AS la, len(b.sh) AS lb
+          FROM s a JOIN s b ON a.doc_id < b.doc_id),
+        pairs AS (
+          SELECT id_a, id_b FROM jp
+          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
+        reach AS (
+          SELECT src AS node, dst AS r FROM edges
+          UNION
+          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
+        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)
         SELECT d.doc_id, CAST(len($wsSql) AS BIGINT) AS n_tokens
         FROM documents d LEFT JOIN mins m ON d.doc_id = m.node
         WHERE COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) = d.doc_id
@@ -2006,7 +2014,22 @@ object Text extends QueryModule {
             $"quality")
         Dedup.canonicalByScore(members, "quality").orderBy($"doc_id")
       },
-      Some(s"""$nearDupMinsSql,
+      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
+        jp AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
+            len(a.sh) AS la, len(b.sh) AS lb
+          FROM s a JOIN s b ON a.doc_id < b.doc_id),
+        pairs AS (
+          SELECT id_a, id_b FROM jp
+          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
+        reach AS (
+          SELECT src AS node, dst AS r FROM edges
+          UNION
+          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
+        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node),
         m AS (SELECT d.doc_id,
             COALESCE(LEAST(d.doc_id, mm.mn), d.doc_id) AS cluster_id,
             $qualitySql AS quality
@@ -2542,7 +2565,22 @@ object Text extends QueryModule {
           .agg(count(lit(1)).as("crossing_pairs"))
         perSplit.crossJoin(crossing).orderBy($"split")
       },
-      Some(s"""$nearDupMinsSql,
+      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
+        jp AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
+            len(a.sh) AS la, len(b.sh) AS lb
+          FROM s a JOIN s b ON a.doc_id < b.doc_id),
+        pairs AS (
+          SELECT id_a, id_b FROM jp
+          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
+        reach AS (
+          SELECT src AS node, dst AS r FROM edges
+          UNION
+          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
+        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node),
         lab AS (SELECT d.doc_id,
             COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_id
           FROM documents d LEFT JOIN mins m ON d.doc_id = m.node),
@@ -2598,7 +2636,26 @@ object Text extends QueryModule {
           .select($"doc_id", coalesce($"cluster_id", $"doc_id").as("cluster_id"))
           .orderBy($"doc_id")
       },
-      Some(nearDupClusterIdsSql)),
+      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
+        jp AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
+            len(a.sh) AS la, len(b.sh) AS lb
+          FROM s a JOIN s b ON a.doc_id < b.doc_id),
+        pairs AS (
+          SELECT id_a, id_b FROM jp
+          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
+        reach AS (
+          SELECT src AS node, dst AS r FROM edges
+          UNION
+          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
+        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)
+        SELECT d.doc_id,
+          COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_id
+        FROM documents d LEFT JOIN mins m ON d.doc_id = m.node
+        ORDER BY d.doc_id""")),
 
     // --------------------------------------------------------------- q117
     // Temperature-scaled mixture plan (the multilingual-upsampling scheme:

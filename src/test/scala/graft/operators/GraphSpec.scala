@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.{HashPartitioner, OneToOneDependency, Partitioner, ShuffleDependency}
 import org.apache.spark.rdd.{CoGroupedRDD, RDD}
+import org.apache.spark.sql.DataFrame
 
 /** Fixed-point PageRank pinned against a single-threaded reference
   * implementation of the same integer recurrence, plus its structural
@@ -37,23 +38,19 @@ class GraphSpec extends SparkSpec {
   private def canonical(edges: Seq[(String, String, Long)]): Seq[(String, String, Long)] =
     edges.groupBy(e => (e._1, e._2)).map { case ((s, d), es) => (s, d, es.map(_._3).sum) }.toSeq
 
-  /** Runs `f` on a fresh loop, releasing what the loop persisted after. */
-  private def withLoop[T](f: Loops.Loop => T): T = {
-    val loop = new Loops.Loop(spark)
+  /** Runs `f` on a fresh loop over `input`, releasing what the loop
+    * persisted after. */
+  private def withLoop[T](input: DataFrame)(f: Loops.Loop => T): T = {
+    val loop = new Loops.Loop(input)
     try f(loop) finally loop.release()
   }
 
-  /** The partitioner every loop should use: session width. */
-  private def sessionPart: Partitioner =
-    new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-
   /** Runs the loop on canonical edges and hands its rank RDD and the
-    * partitioner the loop should use to `f`, releasing the loop's
-    * persisted inputs after. */
+    * loop's partitioner to `f`, releasing the loop's persisted inputs
+    * after. */
   private def withRanks[T](edges: Seq[(String, String, Long)], iters: Int)(
-      f: (RDD[(Any, Long)], Partitioner) => T): T = withLoop { loop =>
-    val fp = Graph.pageRankLoop(loop, edges.toDF("src", "dst", "cnt"), 85L, 1000000L)
-    f(loop.iterate(fp, iters), sessionPart)
+      f: (RDD[(Any, Long)], Partitioner) => T): T = withLoop(edges.toDF("src", "dst", "cnt")) {
+    loop => f(loop.iterate(Graph.pageRankLoop(loop, 85L, 1000000L), iters), loop.part)
   }
 
   /** Every RDD the given one's lineage reaches, each once. */
@@ -68,21 +65,21 @@ class GraphSpec extends SparkSpec {
   }
 
   /** Shuffles `rounds` unmaterialized rounds of the loop `build` makes
-    * leave in the frontier's lineage, after checking that every join on
-    * the way (an RDD with more than one parent, one of them keyed) reads
-    * all its parents narrowly under the session-width partitioner and
-    * that the frontier keeps it. */
-  private def roundShuffles[K, V](rounds: Int)(
-      build: Loops.Loop => Loops.FixedPoint[K, V]): Int = withLoop { loop =>
+    * over `input` leave in the frontier's lineage, after checking that
+    * every join on the way (a `CoGroupedRDD`) reads all its parents
+    * narrowly under the loop's partitioner and that the frontier keeps
+    * it. */
+  private def roundShuffles[K, V](input: DataFrame, rounds: Int)(
+      build: Loops.Loop => Loops.FixedPoint[K, V]): Int = withLoop(input) { loop =>
     val fp = build(loop)
     val out = (1 to rounds).foldLeft(fp.init)((f, _) => fp.step(f))
     val rdds = lineage(out)
-    val joins = rdds.filter(r => r.dependencies.size > 1 &&
-      r.dependencies.exists(_.rdd.partitioner.isDefined)) // not the input plan's unions
-    assert(joins.nonEmpty == rounds > 0 && joins.forall(_.dependencies.forall(d =>
-        d.isInstanceOf[OneToOneDependency[_]] && d.rdd.partitioner.contains(sessionPart))),
+    val joins = rdds.collect { case c: CoGroupedRDD[_] => c }
+    assert(joins.nonEmpty == rounds > 0 && joins.forall(c =>
+        c.partitioner.contains(loop.part) &&
+          c.dependencies.forall(_.isInstanceOf[OneToOneDependency[_]])),
       "every join must be narrow on the loop partitioner")
-    assert(out.partitioner.contains(sessionPart))
+    assert(out.partitioner.contains(loop.part))
     rdds.flatMap(_.dependencies).count(_.isInstanceOf[ShuffleDependency[_, _, _]])
   }
 
@@ -195,14 +192,14 @@ class GraphSpec extends SparkSpec {
     // the loops read `undirected` edges: x < y, each pair once
     val und = tendril.toDF("x", "y")
     // one shuffle per round: alive nodes count their alive neighbors
-    def kCore(rounds: Int) = roundShuffles(rounds)(Graph.kCoreLoop(_, und, 2))
+    def kCore(rounds: Int) = roundShuffles(und, rounds)(Graph.kCoreLoop(_, 2))
     assert(kCore(2) === kCore(0) + 2)
     // one shuffle per round: the per-node label counts
-    def lpa(rounds: Int) = roundShuffles(rounds)(Graph.labelPropagationLoop(_, und))
+    def lpa(rounds: Int) = roundShuffles(und, rounds)(Graph.labelPropagationLoop(_))
     assert(lpa(3) === lpa(0) + 3)
     // the neighbor-min shuffle plus the pointer jump's ask and answer
     val sym = und.union(und.select($"y", $"x")).toDF("src", "dst")
-    def cc(rounds: Int) = roundShuffles(rounds)(Dedup.clusterLoop(_, sym))
+    def cc(rounds: Int) = roundShuffles(sym, rounds)(Dedup.clusterLoop(_))
     assert(cc(2) === cc(0) + 2 * 3)
 
     // a loop without a read adds stages, not jobs ...
@@ -216,6 +213,17 @@ class GraphSpec extends SparkSpec {
     // CC: a pair settles in 2 rounds, a 4-node path in 3
     def ccJobs(p: Seq[(Long, Long)]) = jobs(Dedup.nearDupClusters(p.toDF("id_a", "id_b")))
     assert(ccJobs(Seq((1L, 2L), (2L, 3L), (3L, 4L))) === ccJobs(Seq((1L, 2L))) + 1)
+  }
+
+  test("a loop is as wide as its input after AQE, at most the shuffle width") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // a few edges, aggregated: AQE coalesces the shuffle to one partition
+    val small = Seq(("a", "b", 1L), ("b", "c", 2L)).toDF("src", "dst", "cnt")
+      .groupBy("src", "dst").sum("cnt")
+    assert(withLoop(small)(_.part) === new HashPartitioner(1))
+    // more input partitions than the shuffle width: capped at the width
+    val wide = spark.range(0, 1000, 1, width * 4).toDF("src")
+    assert(withLoop(wide)(_.part) === new HashPartitioner(width))
   }
 
   test("zero iterations returns the uniform initial vector") {
