@@ -33,38 +33,14 @@ object TextFunctions {
     * the native codegen [[org.apache.spark.sql.graft.WordShingles]] kernel:
     * one byte walk per row, one exact-size copy per shingle, inside
     * whole-stage codegen. NULL text keeps the "no shingles" = empty-array
-    * contract. The interpreted zip_with form it replaced survives as
-    * [[wordShinglesHof]] so TextFunctionsSpec can pin bit-parity (the HOF
-    * chain was correct but paid the lambda-interpreter constant on every
-    * corpus byte of the shingle family: q35/q36 directly, and the
-    * minhash/ensemble signature scans through [[distinctShingles]]). */
+    * contract. TextFunctionsSpec pins bit-parity with the interpreted
+    * zip_with form it replaced (the HOF chain was correct but paid the
+    * lambda-interpreter constant on every corpus byte of the shingle
+    * family: q35/q36 directly, and the minhash/ensemble signature scans
+    * through [[distinctShingles]]). */
   def wordShingles(text: Column, n: Int): Column =
     coalesce(org.apache.spark.sql.graft.ArrayExpressions.wordShingles(text, n),
       array().cast("array<string>"))
-
-  /** The interpreted-HOF reference implementation of [[wordShingles]], kept
-    * ONLY for the native kernel's bit-parity spec.
-    *
-    * Implementation note: built from `zip_with` over shifted slices, NOT
-    * `transform(sequence(...), i => element_at(ws, i+k))`. Lambda bodies in
-    * higher-order functions re-evaluate captured subtrees per ELEMENT, so
-    * the element_at form re-runs the whole `split` for every shingle slot —
-    * O(tokens^2) string splits per row (measured 3 ms/doc on 54-token docs).
-    * Here lambdas touch only their element arguments; `ws` is evaluated a
-    * constant number of times per row. */
-  private[graft] def wordShinglesHof(text: Column, n: Int): Column = {
-    val ws = tokens(text)
-    def shifted(k: Int) = slice(ws, lit(k + 1), greatest(size(ws) - k, lit(0)))
-    // zip_with pads the shorter side with nulls; concat propagates them so
-    // incomplete tail shingles become null and are filtered out.
-    val joined = (1 until n).foldLeft(ws) { (acc, k) =>
-      zip_with(acc, shifted(k), (a, b) => concat(a, lit(" "), b))
-    }
-    // NULL text propagates a null array through zip_with/filter; the
-    // contract is "no shingles" = empty array (pinned in TextFunctionsSpec),
-    // so null docs don't surface null jaccard/signature rows downstream.
-    coalesce(filter(joined, _.isNotNull), array().cast("array<string>"))
-  }
 
   def distinctShingles(text: Column, n: Int): Column =
     array_distinct(wordShingles(text, n))

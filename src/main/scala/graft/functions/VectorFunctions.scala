@@ -10,19 +10,12 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Dot product — the native codegen expression (FloatDot);
-    * same index-ordered double arithmetic as [[dotHof]], compiled instead of
-    * interpreted per element. */
+  /** Dot product — the native codegen expression (FloatDot): the
+    * index-ordered double arithmetic of a `zip_with` + `aggregate` fold,
+    * compiled instead of interpreted per element (SimilaritySpec pins
+    * bit-parity with that fold). */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VectorExpressions.floatDot(a, b)
-
-  /** The declarative higher-order form (kept for the parity test and for
-    * inputs that are not array<float>). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   def norm2(a: Column): Column = dot(a, a)
 
@@ -77,17 +70,10 @@ object VectorFunctions {
     *
     * Native single-kernel form (graft.LshBucket): all planes accumulate in
     * one pass with ONE compact generated loop — the composed per-plane form
-    * ([[lshBucketHof]]) blew past the JVM's JIT huge-method limit at
-    * auto-scaled plane counts and ran interpreted, 80x slower. Bit-identical
-    * to the HOF composition in every case (parity property in
-    * SimilaritySpec). */
+    * (one [[planeProjection]] sign bit per plane) blew past the JVM's JIT
+    * huge-method limit at auto-scaled plane counts and ran interpreted, 80x
+    * slower. Bit-identical to that composition in every case (parity
+    * property in SimilaritySpec). */
   def lshBucket(vec: Column, nPlanes: Int, dim: Int, table: Int = 0): Column =
     org.apache.spark.sql.graft.VectorExpressions.lshBucket(vec, table, nPlanes, dim)
-
-  /** The composed per-plane form — kept as the executable spec for the
-    * native kernel's parity property. */
-  def lshBucketHof(vec: Column, nPlanes: Int, dim: Int, table: Int = 0): Column =
-    (0 until nPlanes).map { p =>
-      when(planeProjection(vec, table, p, dim) >= 0.0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
 }

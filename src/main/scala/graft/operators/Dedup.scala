@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import org.apache.spark.sql.graft.ArrayExpressions
 
@@ -132,6 +133,49 @@ object Dedup {
       .drop("occ_rank")
   }
 
+  /** The one bucket join behind every LSH and signature candidate
+    * generator: `bands` (an `id` column plus the bucket `keys`) joins
+    * itself on the keys with `l.id < r.id`, or, given `other`, joins
+    * `other` on the keys (a cross-side join; only `bands` is capped).
+    * `pairs` turns the joined rows, aliased `l` and `r`, into the
+    * generator's output.
+    *
+    * The fill rule, once for all generators. With the cap on, `bands` has
+    * two readers, the cap's occupancy check and the join: it is persisted,
+    * the check is the action that fills it before either join side runs,
+    * the pairs are materialized, and the cache is released in a `finally`.
+    * With the cap off nothing is persisted and the pairs stay lazy, so the
+    * call runs no job: each side of a cross join reads its frame once, and
+    * the self-join is a sort-merge join whose two sides are one reused
+    * exchange (a broadcast join would compute the frame once for the
+    * broadcast and again on the streamed side). Either way the band frame
+    * is computed once per action, and the returned frame's checkpoint is
+    * the only storage a call leaves behind. */
+  private[operators] def bucketPairs(
+      bands: DataFrame,
+      keys: Seq[String],
+      cap: Int,
+      opName: String,
+      other: Option[DataFrame] = None)(pairs: DataFrame => DataFrame): DataFrame = {
+    val cached = if (cap > 0) Some(bands.persist(StorageLevel.MEMORY_AND_DISK)) else None
+    try {
+      val capped = capBuckets(bands, keys, cap, opName)
+      val on = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+      val l = capped.as("l")
+      val joined = other match {
+        case Some(o) => l.join(o.as("r"), on)
+        case None =>
+          // cached: the planner picks (a forced sort-merge join over the
+          // cache measured one job more per call: its sides read it as two
+          // stages, not one reused exchange)
+          val side = if (cached.isEmpty) l.hint("shuffle_merge") else l
+          side.join(capped.as("r"), on && col("l.id") < col("r.id"))
+      }
+      val out = pairs(joined)
+      if (cached.isEmpty) out else out.localCheckpoint(true)
+    } finally cached.foreach(_.unpersist(blocking = false))
+  }
+
   /** Exact duplicate groups by normalized-content fingerprint. */
   def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     docs
@@ -247,27 +291,14 @@ object Dedup {
     * Native [[org.apache.spark.sql.graft.MinHashSignature]] kernel: one
     * tokenize + one O(shingles x k) primitive loop inside whole-stage
     * codegen — the per-row form is now corpus-safe, which matters where
-    * per-row is the only available shape (streaming ingestion). The former
-    * interpreted-aggregate form survives as [[minhashSignatureHof]] so
-    * DedupSpec can pin bit-parity; the explode/groupBy corpus form is
-    * still [[minhashSignatureTable]] (identical values). */
+    * per-row is the only available shape (streaming ingestion). DedupSpec
+    * pins bit-parity with the former interpreted-aggregate form; the
+    * explode/groupBy corpus form is still [[minhashSignatureTable]]
+    * (identical values). */
   def minhashSignature(text: Column, k: Int, shingle: Int = 3): Column =
     coalesce(
       org.apache.spark.sql.graft.ArrayExpressions.minhashSignature(text, shingle, k),
       array((0 until k).map(_ => lit(Long.MaxValue)): _*))
-
-  /** The interpreted-HOF reference implementation of [[minhashSignature]],
-    * kept ONLY for the native kernel's bit-parity spec: k `aggregate` folds
-    * re-walk the hash array through the lambda interpreter per row. */
-  private[graft] def minhashSignatureHof(text: Column, k: Int, shingle: Int = 3): Column = {
-    val hashes = transform(
-      TextFunctions.distinctShingles(text, shingle), sh => xxhash64(sh))
-    val mins = (0 until k).map { seed =>
-      aggregate(hashes, lit(Long.MaxValue),
-        (acc, h) => least(acc, familyHash(h, seed)))
-    }
-    array(mins: _*)
-  }
 
   /** MinHash signatures for a whole corpus: one explode pass over shingles,
     * ONE string hash per shingle, k codegen'd `min(familyHash)` aggregates
@@ -304,20 +335,11 @@ object Dedup {
         array((0 until k).map(i => coalesce(col(s"h$i"), lit(Long.MaxValue))): _*).as("sig"))
   }
 
-  /** MinHash + LSH banding: emits candidate near-duplicate pairs (a < b).
-    *
-    * Scale note: the self-join would otherwise expand the signature-table
-    * subtree on both sides of the plan (corpus scanned + hashed twice), so
-    * the signature table — one tiny (id, k longs) row per doc, ~1e-3 of
-    * corpus bytes — is persisted MEMORY_AND_DISK and computed once, and the
-    * candidate pairs (orders of magnitude smaller still at these parameters)
-    * are eagerly materialized via localCheckpoint so the signature cache is
-    * released before this returns: repeated calls don't pin per-call storage
-    * for the session lifetime, and checkpoint blocks are freed by Spark's
-    * ContextCleaner once the returned frame is unreferenced. The shingle
-    * arrays for the Jaccard refinement are NOT cached: they are corpus-sized,
-    * and re-scanning columnar parquet twice beats spilling a corpus-sized
-    * cache at scale.
+  /** MinHash + LSH banding: emits candidate near-duplicate pairs (a < b),
+    * the [[bucketPairs]] self-join over [[bandedSignatures]] (its fill
+    * rule and lifecycle). The shingle arrays for the Jaccard refinement
+    * are NOT cached: they are corpus-sized, and re-scanning columnar
+    * parquet twice beats spilling a corpus-sized cache at scale.
     *
     * @param bands  number of LSH bands; each band hashes `r = k/bands`
     *               signature slots into one bucket key. Pairs agreeing on any
@@ -345,43 +367,15 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       shingle: Int = 3,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    val rows = k / bands
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
     // batch self-dedup: spread the (id, text) rows so the shingle hash walk
     // and the k partial mins run at conf width, not the scan's split count
     // (q46 profile: the whole signature build ran 321 ms in 1 of 32 tasks)
-    val sig = minhashSignatureTable(Layout.spread(docs, col(idCol)), textCol, idCol, k,
-        shingle)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // No explicit eager fill here (r18, measured): capBuckets' sampled
-    // occupancy probe below is the first action and already materializes
-    // the cache SEQUENTIALLY before the self-join's concurrent sides read
-    // it — an extra count() job only re-reads the cache (~350 ms of pure
-    // job floor at fixture scale, verified as a q58 regression).
-    // EXCEPT when the cap is disabled (r19, advisor): capBuckets' cap <= 0
-    // path returns immediately with no action, which would reintroduce the
-    // unfilled-cache race (both self-join sides concurrently re-deriving
-    // the signature table). Fill explicitly on that path only.
-    if (maxBucket <= 0) sig.count()
-    // one row per (band, bucket): bucket = hash of the band's signature slice
-    val banded = sig.select(col("id"), posexplode(
-      array((0 until bands).map { b =>
-        xxhash64((lit(b) +: (0 until rows).map(r => element_at(col("sig"), b * rows + r + 1))): _*)
-      }: _*)).as(Seq("band", "bucket")))
-    // self-join within (band, bucket); dedupe pairs that collide in >1 band
-    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucket, "minhashCandidates")
-    val l = capped.as("l")
-    val r = capped.as("r")
-    val cands = l.join(r,
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-      .localCheckpoint(true) // eager: lets sig be unpersisted before return
-    sig.unpersist(blocking = false)
-    cands
-  }
+    bucketPairs(bandedSignatures(Layout.spread(docs, col(idCol)), textCol, idCol, k, bands,
+        shingle), Seq("band", "bucket"), maxBucket, "minhashCandidates") {
+      // pairs that collide in more than one band are emitted once
+      _.select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
+    }
 
   /** Exact shingle-Jaccard refinement of a candidate-pair set, keeping
     * pairs at or above `threshold` — shared by the minhash/simhash/ensemble
@@ -398,9 +392,10 @@ object Dedup {
     * the shingle arrays exist only for candidate docs. No checkpoint is
     * added here — everything stays one lazy plan (the former inline form's
     * job structure, minus the corpus-wide shingle compute and shuffle) —
-    * so `candidatePairs` MUST be cheap to re-evaluate: it is referenced
-    * several times (both id projections and the pair join), and callers
-    * pass an eagerly-checkpointed frame. */
+    * so `candidatePairs` should be cheap to re-evaluate: the shingle
+    * checkpoint's id set and the pair join each read it. The generators
+    * hand over their checkpoint when the bucket cap is on (the default);
+    * with it off the candidate plan runs once for each of the two. */
   private def refineByJaccard(
       docs: DataFrame,
       candidatePairs: DataFrame,
@@ -657,9 +652,8 @@ object Dedup {
     * pass, O(grams) total. (The former interpreted
     * `transform(sequence(...), j -> array_min(slice(gh, j, w)))` form paid
     * the lambda-interpreter constant x w per gram on every byte of the
-    * corpus; it survives as [[winnowingFingerprintTableHof]] solely so
-    * DedupSpec can pin bit-parity.) SlidingMin clamps the window to
-    * min(w, n) and maps empty to empty, so all three size regimes —
+    * corpus; DedupSpec pins bit-parity with it.) SlidingMin clamps the
+    * window to min(w, n) and maps empty to empty, so all three size regimes —
     * n >= w, 0 < n < w (whole doc is the window), n == 0 — collapse into
     * one branch-free expression.
     *
@@ -674,27 +668,6 @@ object Dedup {
     grams.select(col("id"),
       array_distinct(ArrayExpressions.slidingMin(col("gh"), w)).as("fingerprints"),
       size(col("gh")).as("n_grams"))
-  }
-
-  /** The interpreted-HOF form of [[winnowingFingerprintTable]], kept ONLY as
-    * the independent reference implementation for DedupSpec's bit-parity
-    * test of the native SlidingMin kernel. Not for corpus scans. */
-  private[graft] def winnowingFingerprintTableHof(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      k: Int = 8,
-      w: Int = 8): DataFrame = {
-    val grams = charGramHashesHof(docs, textCol, idCol, k)
-    grams.select(col("id"), size(col("gh")).as("n_grams"),
-      when(size(col("gh")) >= w,
-        array_distinct(transform(
-          sequence(lit(1), size(col("gh")) - (w - 1)),
-          j => array_min(slice(col("gh"), j, lit(w))))))
-        // fewer grams than one window: the whole doc is the window
-        .when(size(col("gh")) > 0, array(array_min(col("gh"))))
-        .otherwise(array().cast("array<bigint>")).as("fingerprints"))
-      .select(col("id"), col("fingerprints"), col("n_grams"))
   }
 
   /** Hashed character k-grams of the normalized text: (id, gh:
@@ -752,10 +725,8 @@ object Dedup {
     * LSH band buckets, with the same degenerate-bucket guard (a boilerplate
     * passage shared by millions of docs is THE common pathology here; drops
     * are logged, recall-only). The exploded frame — one (id, long) row per
-    * fingerprint, ~1/w of the gram count — is persisted so the guard's
-    * stats pass and both self-join sides share one computation, and the
-    * pair aggregate is eagerly checkpointed so the cache releases before
-    * return (the [[minhashCandidates]] lifecycle).
+    * fingerprint, ~1/w of the gram count — is the [[bucketPairs]] band
+    * frame (its fill rule and lifecycle).
     *
     * Returns (id_a, id_b, n_shared_fp) with id_a < id_b. */
   def sharedFingerprintPairs(
@@ -768,21 +739,19 @@ object Dedup {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     // batch self-dedup: spread so the char-gram walk + SlidingMin kernel
-    // run at conf width, not on the scan's splits
+    // run at conf width, not on the scan's splits. explode_outer + the null
+    // filter, not explode: the optimizer infers `size(fingerprints) > 0`
+    // from a plain explode of the column and pushes it below the spread,
+    // which ran the winnowing kernel twice per doc
     val fps = winnowingFingerprintTable(Layout.spread(docs, col(idCol)), textCol, idCol,
         k, w)
-      .select(col("id"), explode(col("fingerprints")).as("fph"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fps.count() // eager fill (r18) — see exactSubstrSpans
-    val capped = capBuckets(fps, Seq("fph"), maxBucket, "sharedFingerprintPairs")
-    val pairs = capped.as("a").join(capped.as("b"),
-        col("a.fph") === col("b.fph") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("n_shared_fp"))
-      .filter(col("n_shared_fp") >= minShared)
-      .localCheckpoint(true) // eager: lets fps be unpersisted before return
-    fps.unpersist(blocking = false)
-    pairs
+      .select(col("id"), explode_outer(col("fingerprints")).as("fph"))
+      .filter(col("fph").isNotNull)
+    bucketPairs(fps, Seq("fph"), maxBucket, "sharedFingerprintPairs") {
+      _.groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
+        .agg(count(lit(1)).as("n_shared_fp"))
+        .filter(col("n_shared_fp") >= minShared)
+    }
   }
 
   /** EXACT cross-document substring dedup (the Lee-et-al ExactSubstr
@@ -1321,7 +1290,9 @@ object Dedup {
     * reuse the same pigeonhole machinery instead of reinventing it. Returns
     * (id_a, id_b, hamming) with id_a < id_b. Completeness: every pair at
     * hamming <= blocks - matchBlocks is guaranteed present (Manku et al.
-    * multi-index pigeonhole); `maxHamming` within that bound is exact. */
+    * multi-index pigeonhole); `maxHamming` within that bound is exact. The
+    * join is [[bucketPairs]] over [[hammingBands]] (its fill rule and
+    * lifecycle). */
   def signatureHammingPairs(
       sigs: DataFrame,
       idCol: String,
@@ -1329,7 +1300,57 @@ object Dedup {
       blocks: Int = 4,
       maxBucket: Int = 0,
       matchBlocks: Int = 1,
-      maxHamming: Int = Int.MaxValue): DataFrame = {
+      maxHamming: Int = Int.MaxValue): DataFrame =
+    bucketPairs(hammingBands(sigs, idCol, sigCol, blocks, matchBlocks), Seq("block", "key"),
+        maxBucket, "signatureHammingPairs") {
+      hammingWithin(_, "id_a", "id_b", maxHamming)
+    }
+
+  /** Cross-frame variant of [[signatureHammingPairs]]: hamming-bounded
+    * (probe_id, index_id) matches between a PROBE batch and a (typically
+    * persisted) INDEX frame — the incremental-ingest shape. Both sides band
+    * at lookup time (banding is a cheap per-row bit projection; what index
+    * persistence saves is the expensive signature COMPUTATION — the
+    * decode/hash pass over the historical corpus). Work is O(probe rows x
+    * bucket occupancy), never O(index^2): only buckets a probe row touches
+    * are read. Same pigeonhole completeness bound as the self-join
+    * (hamming <= blocks - matchBlocks). Both frames must carry
+    * (idCol, sigCol). `maxBucket` caps the INDEX side (the corpus, whose
+    * degenerate buckets would blow up the join); the probe batch is
+    * small. */
+  def signatureHammingJoin(
+      probe: DataFrame,
+      index: DataFrame,
+      idCol: String,
+      sigCol: String,
+      blocks: Int = 4,
+      maxBucket: Int = 0,
+      matchBlocks: Int = 1,
+      maxHamming: Int = Int.MaxValue): DataFrame =
+    bucketPairs(hammingBands(index, idCol, sigCol, blocks, matchBlocks), Seq("block", "key"),
+        maxBucket, "signatureHammingJoin",
+        Some(hammingBands(probe, idCol, sigCol, blocks, matchBlocks))) {
+      hammingWithin(_, "index_id", "probe_id", maxHamming)
+        .select("probe_id", "index_id", "hamming")
+    }
+
+  /** The multi-index band table of a 64-bit signature frame: one (id, sim,
+    * block, key) row per table. matchBlocks = 1: classic single-block
+    * banding ("block" = block index, "key" = that block's bits).
+    * matchBlocks = r > 1: the multi-index Hamming scheme (the simhash-dedup
+    * table construction of Manku et al., WWW'07 §3): one table per
+    * r-combination of blocks, key = the combination's bits packed side by
+    * side. Pigeonhole: hamming <= blocks - r touches at most blocks - r
+    * blocks, so some r untouched blocks — i.e. some table — matches
+    * exactly. Same recall bound as single-block banding with
+    * (blocks - r + 1) blocks, but the key is r x width bits WIDE:
+    * background-collision occupancy drops from n/2^width to
+    * n/2^(r*width), which is what keeps the self-join sub-quadratic on
+    * corpora big enough that 2^width << n (measured at n = 100k docs:
+    * blocks=6/r=1 generates ~29M background pairs, 3.7 s; blocks=7/r=2
+    * ~0.4M, sub-second — same hamming<=5 guarantee). */
+  private def hammingBands(sigs: DataFrame, idCol: String, sigCol: String,
+      blocks: Int, matchBlocks: Int): DataFrame = {
     val width = 64 / blocks
     require(matchBlocks >= 1 && matchBlocks <= blocks,
       s"matchBlocks must be in [1, $blocks], got $matchBlocks")
@@ -1339,34 +1360,8 @@ object Dedup {
     // shift arithmetic cannot produce.
     require(matchBlocks * width <= 64,
       s"combined key width ${matchBlocks * width} exceeds 64 bits")
-    // Persisted for the same reason as minhashCandidates' signature table
-    // (computed once instead of on both join sides), and released the same
-    // way: candidates are eagerly materialized, then the cache is dropped so
-    // repeated calls don't pin storage for the session lifetime.
-    val withSim = sigs.select(col(idCol).as("id"), col(sigCol).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Fill the cache EAGERLY (r18, guide §1/§5): the candidate join's two
-    // self-join sides materialize as independent AQE query stages, and both
-    // racing an UNFILLED cache re-run the signature subtree — for media
-    // signatures that is the decode pass itself (q172's profile: two
-    // back-to-back 660 ms audio-fingerprint stages for one table). One
-    // count() job fills the cache once; the join sides then read it.
-    withSim.count()
     val blockKey = (b: Int) =>
       shiftrightunsigned(col("sim"), b * width).bitwiseAND(lit((1L << width) - 1))
-    // matchBlocks = 1: classic single-block banding ("block" = block index,
-    // "key" = that block's bits). matchBlocks = r > 1: the multi-index
-    // Hamming scheme (the simhash-dedup table construction of Manku et al.,
-    // WWW'07 §3): one table per r-combination of blocks, key = the
-    // combination's bits packed side by side. Pigeonhole: hamming <= blocks
-    // - r touches at most blocks - r blocks, so some r untouched blocks —
-    // i.e. some table — matches exactly. Same recall bound as single-block
-    // banding with (blocks - r + 1) blocks, but the key is r x width bits
-    // WIDE: background-collision occupancy drops from n/2^width to
-    // n/2^(r*width), which is what keeps the self-join sub-quadratic on
-    // corpora big enough that 2^width << n (measured at n = 100k docs:
-    // blocks=6/r=1 generates ~29M background pairs, 3.7 s; blocks=7/r=2
-    // ~0.4M, sub-second — same hamming<=5 guarantee).
     val tables: Seq[Column] =
       if (matchBlocks == 1)
         (0 until blocks).map(b => struct(lit(b).as("block"), blockKey(b).as("key")))
@@ -1378,86 +1373,27 @@ object Dedup {
             }.reduce(_.bitwiseOR(_))
             struct(lit(ci).as("block"), packed.as("key"))
         }
-    val banded = withSim
+    sigs.select(col(idCol).as("id"), col(sigCol).as("sim"))
       .select(col("id"), col("sim"), explode(array(tables: _*)).as("t"))
       .select(col("id"), col("sim"), col("t.block").as("block"), col("t.key").as("key"))
-    val capped = capBuckets(banded, Seq("block", "key"), maxBucket, "signatureHammingPairs")
-    val l = capped.as("l")
-    val r = capped.as("r")
-    // hamming is computed BEFORE the distinct and the optional maxHamming
-    // predicate is applied there too: bit_count per joined row is trivial,
-    // while the distinct is a full shuffle of the candidate set — at
-    // n = 100k docs the multi-index background pair volume is ~0.4M rows,
-    // of which only a few thousand survive a hamming <= blocks-r cut. A
-    // caller that wants hamming-bounded pairs (the ensemble does) should
-    // pass maxHamming so the shuffle sees the few thousand, not the 0.4M.
-    // hamming is a pure function of the pair, so distinct over
-    // (id_a, id_b, hamming) dedups exactly as over (id_a, id_b).
-    val cands = l.join(r,
-        col("l.block") === col("r.block") && col("l.key") === col("r.key") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
+  }
+
+  /** The Hamming pair step over band-joined rows: (l.id as `lId`, r.id as
+    * `rId`, hamming) at hamming <= maxHamming, each pair once. hamming is
+    * computed BEFORE the distinct and the bound applied there too: bit_count
+    * per joined row is trivial, while the distinct is a full shuffle of the
+    * candidate set — at n = 100k docs the multi-index background pair
+    * volume is ~0.4M rows, of which only a few thousand survive a
+    * hamming <= blocks-r cut, so a caller that wants hamming-bounded pairs
+    * (the ensemble does) passes maxHamming and the shuffle sees the few
+    * thousand. hamming is a pure function of the pair, so distinct over
+    * (id_a, id_b, hamming) dedups exactly as over (id_a, id_b). */
+  private def hammingWithin(joined: DataFrame, lId: String, rId: String,
+      maxHamming: Int): DataFrame =
+    joined.select(col("l.id").as(lId), col("r.id").as(rId),
         bit_count(col("l.sim").bitwiseXOR(col("r.sim"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-      .localCheckpoint(true) // eager: lets the simhash cache be released
-    withSim.unpersist(blocking = false)
-    cands
-  }
-
-  /** Cross-frame variant of [[signatureHammingPairs]]: hamming-bounded
-    * (probe_id, index_id) matches between a PROBE batch and a (typically
-    * persisted) INDEX frame — the incremental-ingest shape. Both sides band
-    * at lookup time (banding is a cheap per-row bit projection; what index
-    * persistence saves is the expensive signature COMPUTATION — the
-    * decode/hash pass over the historical corpus). Work is O(probe rows x
-    * bucket occupancy), never O(index^2): only buckets a probe row touches
-    * are read. Same pigeonhole completeness bound as the self-join
-    * (hamming <= blocks - matchBlocks). Both frames must carry
-    * (idCol, sigCol). */
-  def signatureHammingJoin(
-      probe: DataFrame,
-      index: DataFrame,
-      idCol: String,
-      sigCol: String,
-      blocks: Int = 4,
-      maxBucket: Int = 0,
-      matchBlocks: Int = 1,
-      maxHamming: Int = Int.MaxValue): DataFrame = {
-    val width = 64 / blocks
-    require(matchBlocks >= 1 && matchBlocks <= blocks,
-      s"matchBlocks must be in [1, $blocks], got $matchBlocks")
-    require(matchBlocks * width <= 64,
-      s"combined key width ${matchBlocks * width} exceeds 64 bits")
-    def banded(df: DataFrame): DataFrame = {
-      val in = df.select(col(idCol).as("id"), col(sigCol).as("sim"))
-      val blockKey = (b: Int) =>
-        shiftrightunsigned(col("sim"), b * width).bitwiseAND(lit((1L << width) - 1))
-      val tables: Seq[Column] =
-        if (matchBlocks == 1)
-          (0 until blocks).map(b => struct(lit(b).as("block"), blockKey(b).as("key")))
-        else
-          (0 until blocks).combinations(matchBlocks).toSeq.zipWithIndex.map {
-            case (combo, ci) =>
-              val packed = combo.zipWithIndex.map { case (b, pos) =>
-                shiftleft(blockKey(b), pos * width)
-              }.reduce(_.bitwiseOR(_))
-              struct(lit(ci).as("block"), packed.as("key"))
-          }
-      in.select(col("id"), col("sim"), explode(array(tables: _*)).as("t"))
-        .select(col("id"), col("sim"), col("t.block").as("block"), col("t.key").as("key"))
-    }
-    // the cap applies to the INDEX side (the corpus — the side whose
-    // degenerate buckets would blow up the join); the probe batch is small
-    val idx = capBuckets(banded(index), Seq("block", "key"), maxBucket,
-      "signatureHammingJoin")
-    banded(probe).as("p").join(idx.as("i"),
-        col("p.block") === col("i.block") && col("p.key") === col("i.key"))
-      .select(col("p.id").as("probe_id"), col("i.id").as("index_id"),
-        bit_count(col("p.sim").bitwiseXOR(col("i.sim"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
 
   /** Sequence near-dup pairs over per-frame 64-bit signatures (video dedup):
     * two sequences match iff they have the SAME length and EVERY aligned
@@ -1489,14 +1425,13 @@ object Dedup {
     // The signature table is referenced THREE times (frame-0 candidates +
     // both refinement sides); computing frame signatures usually means
     // decoding media, so the table persists once and the (tiny) pair
-    // result materializes eagerly before the cache is released — the same
-    // persist/checkpoint/unpersist shape as minhashCandidates.
+    // result materializes eagerly before the cache is released.
     val cached = frames.select(col(idCol).as("fid"), col(frameCol).as("fno"),
         col(nCol).as("nf"), col(sigCol).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill, same reason as signatureHammingPairs (r18): the three
-    // consumers otherwise race the unfilled cache and re-run the frame
-    // decode per concurrent query stage
+    // eager fill (r18): the three consumers run as concurrent query stages
+    // of one job and would otherwise race the unfilled cache, re-running
+    // the frame decode per stage
     cached.count()
     val cand = signatureHammingPairs(
         cached.filter(col("fno") === 0), "fid", "sig",
@@ -1554,10 +1489,10 @@ object Dedup {
   // -------------------------------------------------- incremental ingest
 
   /** One (id, band, bucket) row per MinHash band of each document — the
-    * LSH bucketing shared by [[crossCandidates]] and the streaming fuzzy
-    * gate ([[Decontamination.fuzzyHits]]). Pure per-row expressions
-    * (signature kernel + per-band xxhash64 + posexplode), so it is legal
-    * on STREAMING frames too. */
+    * LSH bucketing shared by [[minhashCandidates]], [[crossCandidates]]
+    * and the streaming fuzzy gate ([[Decontamination.fuzzyHits]]). Pure
+    * per-row expressions (signature kernel + per-band xxhash64 +
+    * posexplode), so it is legal on STREAMING frames too. */
   private[operators] def bandedSignatures(docs: DataFrame, textCol: String,
       idCol: String, k: Int, bands: Int, shingle: Int): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
@@ -1575,7 +1510,8 @@ object Dedup {
     * side is banded separately and joined corpus-against-incoming only —
     * the candidate set scales with |incoming| × collision rate, never with
     * |corpus|², which is what makes re-deduplicating a 100 TB corpus on
-    * every ingest batch unnecessary. */
+    * every ingest batch unnecessary. The join is [[bucketPairs]] (its fill
+    * rule and lifecycle). */
   def crossCandidates(
       corpus: DataFrame,
       incoming: DataFrame,
@@ -1584,17 +1520,13 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       shingle: Int = 3,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
     // cap only the corpus side: it is the one that grows without bound
-    val l = capBuckets(
-      bandedSignatures(corpus, textCol, idCol, k, bands, shingle),
-      Seq("band", "bucket"), maxBucket, "crossCandidates").as("l")
-    val r = bandedSignatures(incoming, textCol, idCol, k, bands, shingle).as("r")
-    l.join(r, col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-      .localCheckpoint(true)
-  }
+    bucketPairs(bandedSignatures(corpus, textCol, idCol, k, bands, shingle),
+        Seq("band", "bucket"), maxBucket, "crossCandidates",
+        Some(bandedSignatures(incoming, textCol, idCol, k, bands, shingle))) {
+      _.select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
+    }
 
   /** Cross-corpus near-dup PAIRS at `threshold`: candidates from
     * [[crossCandidates]] (corpus×incoming only), refined with exact

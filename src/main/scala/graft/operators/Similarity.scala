@@ -662,16 +662,11 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs above `threshold`, bucketed by
     * multi-table LSH so the pair join never goes cartesian and bucket count
-    * grows with the corpus. Pairs are (a < b).
-    *
-    * With the occupancy guard on (the default), the bucketed projection
-    * (planes x dim dot products per row) is persisted and computed once —
-    * it is referenced by both self-join sides plus the occupancy-stats
-    * aggregate — then released after the (tiny) near-dup pair set is eagerly
-    * materialized: the same persist/checkpoint/unpersist shape as
-    * [[graft.operators.Dedup.minhashCandidates]]. The drop accounting is
-    * necessarily eager (it runs Spark jobs at call time); pass
-    * `maxBucket = 0` to get the former fully-lazy zero-plan-time-jobs plan.
+    * grows with the corpus. Pairs are (a < b). The bucketed projection
+    * (planes x dim dot products per row) is the [[Dedup.bucketPairs]] band
+    * frame (its fill rule and lifecycle): with the guard on, the drop
+    * accounting runs Spark jobs at call time; `maxBucket = 0` keeps the
+    * plan lazy (zero plan-time jobs).
     *
     * @param maxBucket degenerate-bucket guard: at most this many members per
     *                  (table, bucket) join the self-join (see
@@ -693,28 +688,24 @@ object Similarity {
     val d = dimOf(corpus, vecCol, dim)
     val planes = if (nPlanes > 0) nPlanes
       else autoPlanes(sizeOf(corpus, corpusSize), targetBucketSize)
-    val guarded = maxBucket > 0
-    val b0 = bucketed(corpus, "id", "vec", vecCol, idCol, planes, d, tables)
-    val b = if (guarded) b0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            else b0
-    val capped = Dedup.capBuckets(b, Seq("tbl", "bucket"), maxBucket, "embeddingNearDups")
-    val l = capped.as("l")
-    val r = capped.as("r")
-    val pairs = l.join(r, col("l.tbl") === col("r.tbl") && col("l.bucket") === col("r.bucket") &&
-              col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
+    Dedup.bucketPairs(bucketed(corpus, "id", "vec", vecCol, idCol, planes, d, tables),
+        Seq("tbl", "bucket"), maxBucket, "embeddingNearDups") {
+      cosinePairs(_, threshold)
+        // threshold BEFORE the pair-dedup: sim is deterministic per pair, so
+        // the dedup shuffle carries only the (rare) near-dup pairs instead of
+        // every multi-table candidate collision.
+        .dropDuplicates("id_a", "id_b")
+    }
+  }
+
+  /** The cosine pair step over bucket-joined rows (aliased `l` and `r`,
+    * each with id, vec and vec_nrm): (id_a, id_b, sim) at sim =
+    * round(cosine, 6) >= threshold. */
+  private def cosinePairs(joined: DataFrame, threshold: Double): DataFrame =
+    joined.select(col("l.id").as("id_a"), col("r.id").as("id_b"),
         round(dot(col("l.vec"), col("r.vec")) /
           (col("l.vec_nrm") * col("r.vec_nrm")), 6).as("sim"))
-      // threshold BEFORE the pair-dedup: sim is deterministic per pair, so
-      // the dedup shuffle carries only the (rare) near-dup pairs instead of
-      // every multi-table candidate collision.
       .filter(col("sim") >= threshold)
-      .dropDuplicates("id_a", "id_b")
-    if (!guarded) return pairs
-    val out = pairs.localCheckpoint(true) // eager: lets the bucketed cache be released
-    b.unpersist(blocking = false)
-    out
-  }
 
   /** SemDeDup-style semantic near-duplicate pairs: a Lloyd-trained coarse
     * quantizer ([[ivfCentroidsTrained]]) partitions the corpus into cells
@@ -737,7 +728,9 @@ object Similarity {
     * cell; the occupancy guard ([[Dedup.capBuckets]]) bounds the
     * degenerate cell (m near-identical embeddings) with logged, never
     * silent, drops. Assignment is the same broadcast-argmin mapPartitions
-    * kernel as [[ivfKnnJoin]] — O(C·d) per row, corpus never moves.
+    * kernel as [[ivfKnnJoin]] — O(C·d) per row, corpus never moves. The
+    * cell frame is the [[Dedup.bucketPairs]] band frame (its fill rule
+    * and lifecycle).
     *
     * @param centroids pass a precomputed quantizer to amortize training
     *                  across calls; otherwise Lloyd-trains one here.
@@ -763,29 +756,14 @@ object Similarity {
         ivfCentroidsTrained(corpus, c, trainIterations, idCol, vecCol)
       }
     val bc = corpus.sparkSession.sparkContext.broadcast(cents)
-    val cells0 = corpus
+    val cells = corpus
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .as[(Long, Array[Float])]
       .mapPartitions(_.map { case (id, v) =>
         (nearestCells(bc.value, v, 1).head, id, v)
       }).toDF("cell", "id", "vec")
       .withColumn("vec_nrm", norm(col("vec")))
-    val guarded = maxCell > 0
-    val cells =
-      if (guarded) cells0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else cells0
-    val capped = Dedup.capBuckets(cells, Seq("cell"), maxCell, "semanticNearDups")
-    val l = capped.as("l")
-    val r = capped.as("r")
-    val pairs = l.join(r, col("l.cell") === col("r.cell") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        round(dot(col("l.vec"), col("r.vec")) /
-          (col("l.vec_nrm") * col("r.vec_nrm")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
-    if (!guarded) return pairs
-    val out = pairs.localCheckpoint(true) // eager: lets the cell cache be released
-    cells.unpersist(blocking = false)
-    out
+    Dedup.bucketPairs(cells, Seq("cell"), maxCell, "semanticNearDups")(cosinePairs(_, threshold))
   }
 
   /** Semantic deduplication: drop every corpus row whose embedding is a

@@ -87,6 +87,27 @@ object Text extends QueryModule {
     s"""CASE WHEN len($wsSql) < 3 THEN CAST([] AS VARCHAR[])
         ELSE list_distinct(list_transform(range(1, len($wsSql) - 1),
           i -> $wsSql[i] || ' ' || $wsSql[i+1] || ' ' || $wsSql[i+2])) END"""
+  // The near-dup CC oracle of q58, q59, q101, q115 and q116: exhaustive
+  // shingle-Jaccard pairs at >= 0.5 (`pairs`) and, per doc in some pair,
+  // the minimum doc id it reaches by a recursive transitive closure
+  // (`mins`: node, mn). Callers append their own CTEs and final SELECT.
+  private val nearDupMinsSql =
+    s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
+        jp AS (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
+            len(a.sh) AS la, len(b.sh) AS lb
+          FROM s a JOIN s b ON a.doc_id < b.doc_id),
+        pairs AS (
+          SELECT id_a, id_b FROM jp
+          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
+        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
+        reach AS (
+          SELECT src AS node, dst AS r FROM edges
+          UNION
+          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
+        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)"""
   // DuckDB fragments mirroring HeuristicFilters.qualityProfile (q77/q78).
   // Every gate is integer arithmetic on both sides (see HeuristicFilters) —
   // no float-boundary risk in the keep decisions.
@@ -419,22 +440,7 @@ object Text extends QueryModule {
             coalesce($"cluster_id", $"doc_id").as("cluster_id"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-        jp AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
-            len(a.sh) AS la, len(b.sh) AS lb
-          FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        pairs AS (
-          SELECT id_a, id_b FROM jp
-          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-        reach AS (
-          SELECT src AS node, dst AS r FROM edges
-          UNION
-          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
-        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)
+      Some(s"""$nearDupMinsSql
         SELECT d.doc_id,
           COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_id
         FROM documents d LEFT JOIN mins m ON d.doc_id = m.node
@@ -456,22 +462,7 @@ object Text extends QueryModule {
           .select($"doc_id", TextFunctions.tokenCount($"text").as("n_tokens"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-        jp AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
-            len(a.sh) AS la, len(b.sh) AS lb
-          FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        pairs AS (
-          SELECT id_a, id_b FROM jp
-          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-        reach AS (
-          SELECT src AS node, dst AS r FROM edges
-          UNION
-          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
-        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)
+      Some(s"""$nearDupMinsSql
         SELECT d.doc_id, CAST(len($wsSql) AS BIGINT) AS n_tokens
         FROM documents d LEFT JOIN mins m ON d.doc_id = m.node
         WHERE COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) = d.doc_id
@@ -2014,22 +2005,7 @@ object Text extends QueryModule {
             $"quality")
         Dedup.canonicalByScore(members, "quality").orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-        jp AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
-            len(a.sh) AS la, len(b.sh) AS lb
-          FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        pairs AS (
-          SELECT id_a, id_b FROM jp
-          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-        reach AS (
-          SELECT src AS node, dst AS r FROM edges
-          UNION
-          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
-        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node),
+      Some(s"""$nearDupMinsSql,
         m AS (SELECT d.doc_id,
             COALESCE(LEAST(d.doc_id, mm.mn), d.doc_id) AS cluster_id,
             $qualitySql AS quality
@@ -2565,22 +2541,7 @@ object Text extends QueryModule {
           .agg(count(lit(1)).as("crossing_pairs"))
         perSplit.crossJoin(crossing).orderBy($"split")
       },
-      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-        jp AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
-            len(a.sh) AS la, len(b.sh) AS lb
-          FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        pairs AS (
-          SELECT id_a, id_b FROM jp
-          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-        reach AS (
-          SELECT src AS node, dst AS r FROM edges
-          UNION
-          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
-        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node),
+      Some(s"""$nearDupMinsSql,
         lab AS (SELECT d.doc_id,
             COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_id
           FROM documents d LEFT JOIN mins m ON d.doc_id = m.node),
@@ -2636,22 +2597,7 @@ object Text extends QueryModule {
           .select($"doc_id", coalesce($"cluster_id", $"doc_id").as("cluster_id"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE s AS (SELECT doc_id, $shinglesSql AS sh FROM documents),
-        jp AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS i,
-            len(a.sh) AS la, len(b.sh) AS lb
-          FROM s a JOIN s b ON a.doc_id < b.doc_id),
-        pairs AS (
-          SELECT id_a, id_b FROM jp
-          WHERE round(CASE WHEN la + lb - i > 0 THEN i * 1.0 / (la + lb - i) ELSE 0.0 END, 6) >= 0.5),
-        edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-        reach AS (
-          SELECT src AS node, dst AS r FROM edges
-          UNION
-          SELECT e.src AS node, t.r FROM edges e JOIN reach t ON e.dst = t.node),
-        mins AS (SELECT node, MIN(r) AS mn FROM reach GROUP BY node)
+      Some(s"""$nearDupMinsSql
         SELECT d.doc_id,
           COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS cluster_id
         FROM documents d LEFT JOIN mins m ON d.doc_id = m.node

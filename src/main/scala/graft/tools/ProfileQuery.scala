@@ -2,6 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 import graft.Sessions
@@ -11,7 +12,9 @@ import graft.Sessions
   * SparkListener and prints, for the measured rep, every job (wall,
   * description) and every stage (wall, task count, executor-run/GC sums,
   * shuffle bytes, callsite) sorted by submission — the local-mode stand-in
-  * for the Stages tab of the UI, which the bench keeps disabled.
+  * for the Stages tab of the UI, which the bench keeps disabled. Each rep's
+  * header also counts the generated classes Spark compiled during the rep
+  * (codegen cache misses).
   *
   * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ProfileQuery <query>"`
   */
@@ -81,14 +84,17 @@ object ProfileQuery {
       val sc = spark.sparkContext
       sc.addSparkListener(listener)
       sc.setLocalProperty(RepKey, repId)
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       finally sc.setLocalProperty(RepKey, null)
       val wall = (System.nanoTime() - t0) / 1e9
+      // generated classes Spark compiled this rep (its codegen cache missed)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       Sessions.drainListeners(sc)
       sc.removeSparkListener(listener)
       println(f"\n=== $name rep $rep: wall $wall%.2f s, " +
-        f"${jobs.size} jobs, ${stages.size} stages ===")
+        f"${jobs.size} jobs, ${stages.size} stages, $compiled classes compiled ===")
       println(f"${"job"}%4s ${"ms"}%7s  description")
       jobs.sortBy(_._1).foreach { case (id, ms, d) =>
         println(f"$id%4d $ms%7d  ${d.take(90)}")

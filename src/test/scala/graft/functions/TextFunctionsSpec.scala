@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 
 class TextFunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -60,7 +60,7 @@ class TextFunctionsSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val native = df.select($"id", TextFunctions.wordShingles($"t", n).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      val hof = df.select($"id", TextFunctions.wordShinglesHof($"t", n).as("sh"))
+      val hof = df.select($"id", ReferenceForms.wordShingles($"t", n).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       assert(native === hof, s"native/HOF shingle divergence at n=$n")
     }

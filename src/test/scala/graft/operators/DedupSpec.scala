@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 import graft.tools.PlanSnap
 import graft.tools.PlanSnap.planNodes
 
@@ -287,7 +287,7 @@ class DedupSpec extends SparkSpec {
     for (w <- Seq(4, 8, 13)) {
       val native = Dedup.winnowingFingerprintTable(d, k = 8, w = w)
         .collect().map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getInt(2))).toMap
-      val hof = Dedup.winnowingFingerprintTableHof(d, k = 8, w = w)
+      val hof = ReferenceForms.winnowingFingerprintTable(d, k = 8, w = w)
         .collect().map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getInt(2))).toMap
       assert(native === hof, s"native/HOF divergence at w=$w")
     }
@@ -429,7 +429,7 @@ class DedupSpec extends SparkSpec {
     for (k <- Seq(4, 16)) {
       val native = d.select($"doc_id", Dedup.minhashSignature($"text", k).as("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val hof = d.select($"doc_id", Dedup.minhashSignatureHof($"text", k).as("sig"))
+      val hof = d.select($"doc_id", ReferenceForms.minhashSignature($"text", k).as("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(native === hof, s"native/HOF signature divergence at k=$k")
     }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ReferenceForms, SparkSpec}
 import graft.sources.Tables
 
 class SimilaritySpec extends SparkSpec {
@@ -15,7 +15,7 @@ class SimilaritySpec extends SparkSpec {
     val pairs = emb.as("a").join(emb.as("b"), col("b.vec_id") === col("a.vec_id") + 7)
     val rows = pairs.select(
       VectorFunctions.dot(col("a.embedding"), col("b.embedding")).as("native"),
-      VectorFunctions.dotHof(col("a.embedding"), col("b.embedding")).as("hof")).collect()
+      ReferenceForms.dot(col("a.embedding"), col("b.embedding")).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
@@ -66,7 +66,7 @@ class SimilaritySpec extends SparkSpec {
       .unionByName(edge.select($"embedding".cast("array<float>"), $"vec_id"))
     val cols = for (t <- 0 until 4; p <- Seq(5, 9, 13)) yield
       (VectorFunctions.lshBucket($"embedding", p, d, t).as(s"n_${t}_$p"),
-        VectorFunctions.lshBucketHof($"embedding", p, d, t).as(s"h_${t}_$p"))
+        ReferenceForms.lshBucket($"embedding", p, d, t).as(s"h_${t}_$p"))
     def check(): Unit = {
       val rows = vecs.select(cols.flatMap(c => Seq(c._1, c._2)): _*).collect()
       assert(rows.nonEmpty)
@@ -104,7 +104,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("a", "b")
     val got = rows.select(
       VectorFunctions.dot($"a", $"b").as("k"),
-      VectorFunctions.dotHof($"a", $"b").as("h"),
+      ReferenceForms.dot($"a", $"b").as("h"),
       doubleDot(transform($"a", v => v.cast("double")),
         transform($"b", v => v.cast("double"))).as("kd")).collect()
     got.foreach { r =>
