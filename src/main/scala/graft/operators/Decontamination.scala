@@ -15,9 +15,9 @@ import graft.functions.TextFunctions
   * broadcast hash table and the corpus side streams through a broadcast
   * semi-join WITHOUT shuffling a single corpus row — the only corpus-keyed
   * shuffle is the final per-document count of matched grams, carried as
-  * map-side-combined partials. If the gram set ever outgrows the broadcast
-  * threshold, pass `broadcastEval = false` and Catalyst plans a regular
-  * shuffled join instead.
+  * map-side-combined partials. The eval side is always broadcast: a gram
+  * set too large for that is a corpus-to-corpus join, which the Dedup
+  * operators serve.
   */
 object Decontamination {
 
@@ -48,7 +48,6 @@ object Decontamination {
       n: Int = 3,
       idCol: String = "doc_id",
       textCol: String = "text",
-      broadcastEval: Boolean = true,
       hashGrams: Boolean = false): DataFrame = {
     def gramsOf(df: DataFrame): Column =
       if (hashGrams)
@@ -57,10 +56,9 @@ object Decontamination {
       else
         explode(TextFunctions.distinctShingles(col(textCol), n))
     val evalGrams = evalDocs.select(gramsOf(evalDocs).as("gram")).distinct()
-    val ev = if (broadcastEval) broadcast(evalGrams) else evalGrams
     corpus
       .select(col(idCol), gramsOf(corpus).as("gram"))
-      .join(ev, "gram")
+      .join(broadcast(evalGrams), "gram")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shared"))
   }
@@ -85,15 +83,13 @@ object Decontamination {
       evalDocs: DataFrame,
       n: Int = 3,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      broadcastEval: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val evalGrams = evalDocs.select(col(idCol).as("eval_id"),
       explode(TextFunctions.distinctShingles(col(textCol), n)).as("gram"))
-    val ev = if (broadcastEval) broadcast(evalGrams) else evalGrams
     val matched = corpus
       .select(col(idCol).as("corpus_id"),
         explode(TextFunctions.distinctShingles(col(textCol), n)).as("gram"))
-      .join(ev, "gram")
+      .join(broadcast(evalGrams), "gram")
       .groupBy(col("eval_id"))
       .agg(countDistinct(col("gram")).as("n_leaked_grams"),
         countDistinct(col("corpus_id")).as("n_tainted_docs"))
@@ -119,10 +115,9 @@ object Decontamination {
       n: Int = 3,
       idCol: String = "doc_id",
       textCol: String = "text",
-      broadcastEval: Boolean = true,
       hashGrams: Boolean = false): DataFrame =
     corpus.join(
-      overlap(corpus, evalDocs, n, idCol, textCol, broadcastEval, hashGrams)
+      overlap(corpus, evalDocs, n, idCol, textCol, hashGrams)
         .select(col(idCol)),
       Seq(idCol), "left_anti")
 

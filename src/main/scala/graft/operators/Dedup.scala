@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import org.apache.spark.sql.graft.ArrayExpressions
 
@@ -140,40 +139,36 @@ object Dedup {
     * `pairs` turns the joined rows, aliased `l` and `r`, into the
     * generator's output.
     *
-    * The fill rule, once for all generators. With the cap on, `bands` has
-    * two readers, the cap's occupancy check and the join: it is persisted,
-    * the check is the action that fills it before either join side runs,
-    * the pairs are materialized, and the cache is released in a `finally`.
-    * With the cap off nothing is persisted and the pairs stay lazy, so the
-    * call runs no job: each side of a cross join reads its frame once, and
-    * the self-join is a sort-merge join whose two sides are one reused
-    * exchange (a broadcast join would compute the frame once for the
-    * broadcast and again on the streamed side). Either way the band frame
-    * is computed once per action, and the returned frame's checkpoint is
-    * the only storage a call leaves behind. */
+    * With the cap on, `bands` has two readers, the cap's occupancy check
+    * and the join: the call runs in a [[Materialize.shared]] scope over it,
+    * whose first action is the check. With the cap off nothing is
+    * persisted and the pairs stay lazy, so the call runs no job: each side
+    * of a cross join reads its frame once, and the self-join is a
+    * sort-merge join whose two sides are one reused exchange (a broadcast
+    * join would compute the frame once for the broadcast and again on the
+    * streamed side). Either way the band frame is computed once per
+    * action. */
   private[operators] def bucketPairs(
       bands: DataFrame,
       keys: Seq[String],
       cap: Int,
       opName: String,
       other: Option[DataFrame] = None)(pairs: DataFrame => DataFrame): DataFrame = {
-    val cached = if (cap > 0) Some(bands.persist(StorageLevel.MEMORY_AND_DISK)) else None
-    try {
+    def join(): DataFrame = {
       val capped = capBuckets(bands, keys, cap, opName)
       val on = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
       val l = capped.as("l")
-      val joined = other match {
+      pairs(other match {
         case Some(o) => l.join(o.as("r"), on)
         case None =>
           // cached: the planner picks (a forced sort-merge join over the
           // cache measured one job more per call: its sides read it as two
           // stages, not one reused exchange)
-          val side = if (cached.isEmpty) l.hint("shuffle_merge") else l
+          val side = if (cap > 0) l else l.hint("shuffle_merge")
           side.join(capped.as("r"), on && col("l.id") < col("r.id"))
-      }
-      val out = pairs(joined)
-      if (cached.isEmpty) out else out.localCheckpoint(true)
-    } finally cached.foreach(_.unpersist(blocking = false))
+      })
+    }
+    if (cap > 0) Materialize.shared(bands)(join()) else join()
   }
 
   /** Exact duplicate groups by normalized-content fingerprint. */
@@ -796,73 +791,59 @@ object Dedup {
       minLen: Int = 40,
       textCol: String = "text",
       idCol: String = "doc_id",
-      maxBucket: Int = 0): DataFrame = {
-    require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    val grams = exactSubstrGrams(Layout.spread(docs, col(idCol)), minLen, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill (r18): the shared-hash aggregate and both pair-join sides
-    // otherwise race the unfilled cache and each re-derive the gram frame
-    // from the scan (q195 profile: ~6 single-task re-derivations per run)
-    grams.count()
-    val spans = exactSubstrSpansFromGrams(grams, minLen, maxBucket)
-    grams.unpersist(blocking = false)
-    spans
-  }
+      maxBucket: Int = 0): DataFrame =
+    exactSubstrSpansFromGrams(
+      exactSubstrGrams(Layout.spread(docs, col(idCol)), minLen, textCol, idCol),
+      minLen, maxBucket)
 
-  /** [[exactSubstrSpans]] over a CALLER-provided gram frame (the
-    * [[exactSubstrGrams]] shape: id, pos, gh) — for callers that need the
-    * gram frame for their own accounting beside the spans (q195's drop
-    * ledger) without paying the explode twice. The caller owns the
-    * frame's lifecycle: persist it first (it is read by the shared-hash
-    * aggregate and both pair-join sides), unpersist after this returns
-    * (the result is eagerly materialized). */
+  /** [[exactSubstrSpans]] over a gram frame of the [[exactSubstrGrams]]
+    * shape (id, pos, gh), for callers that read the gram frame for their
+    * own accounting beside the spans (q195's drop ledger) without paying
+    * the explode twice: such a caller shares `grams` in its own
+    * [[Materialize.shared]] scope around this call, which then leaves the
+    * frame's cache to it. The result is materialized. */
   def exactSubstrSpansFromGrams(
       grams: DataFrame,
       minLen: Int,
       maxBucket: Int = 0): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    val L = minLen
-    // gram hashes present in >= 2 distinct docs: min != max avoids a
-    // count(distinct) expansion; partial aggregation collapses each
-    // partition's repeats before the shuffle
-    val shared = grams.groupBy(col("gh"))
-      .agg(min(col("id")).as("mn"), max(col("id")).as("mx"))
-      .filter(col("mn") =!= col("mx"))
-      .select(col("gh"))
-    // The candidate frame is PERSISTED before the self-join (r15): both
-    // join sides referencing the un-materialized `cand` re-plan its whole
-    // subtree — the shared-hash aggregate (a full gh shuffle of the gram
-    // frame, the heaviest exchange here) and the prefilter join each ran
-    // TWICE (verified in the executed plan: two ShuffleQueryStages for the
-    // same min/max aggregate). Materializing cand runs each once; the
-    // cache holds only duplicated-gram rows (a tiny fraction of any real
-    // corpus, and cap-bounded on degenerate ones). At sf0.1 the A/B is a
-    // wash (3.74 vs 3.73 s min-of-3 — the duplicate aggregate hides inside
-    // host noise at fixture scale); the win is the structural one: one
-    // full-corpus-frame shuffle removed, which is what survives a 100x
-    // scale-up.
-    val cand = capBuckets(grams.join(shared, Seq("gh")), Seq("gh"),
-      maxBucket, "exactSubstrSpans", tiebreakers = Seq("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill (r18): both self-join sides materialize as concurrent AQE
-    // query stages; racing the unfilled cache re-runs the shared-hash
-    // aggregate subtree once per side
-    cand.count()
-    val m = cand.as("a").join(cand.as("b"),
-        col("a.gh") === col("b.gh") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-        col("a.pos").as("pos_a"), (col("a.pos") - col("b.pos")).as("diag"))
-    val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-      .orderBy(col("pos_a"))
-    val spans = m.withColumn("run_id", col("pos_a") - row_number().over(w))
-      .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("run_id"))
-      .agg(min(col("pos_a")).as("start_a"), count(lit(1)).as("n_anchor"))
-      .select(col("doc_a"), col("doc_b"), col("start_a"),
-        (col("start_a") - col("diag")).as("start_b"),
-        (col("n_anchor") + (L - 1)).as("span_len"))
-      .localCheckpoint(true) // eager: lets the gram + cand caches release now
-    cand.unpersist(blocking = false)
-    spans
+    Materialize.shared(grams) {
+      // gram hashes present in >= 2 distinct docs: min != max avoids a
+      // count(distinct) expansion; partial aggregation collapses each
+      // partition's repeats before the shuffle
+      val shared = grams.groupBy(col("gh"))
+        .agg(min(col("id")).as("mn"), max(col("id")).as("mx"))
+        .filter(col("mn") =!= col("mx"))
+        .select(col("gh"))
+      // The candidate frame is shared by the self-join (r15): both join
+      // sides referencing an un-materialized `cand` re-plan its whole
+      // subtree — the shared-hash aggregate (a full gh shuffle of the gram
+      // frame, the heaviest exchange here) and the prefilter join each ran
+      // TWICE (verified in the executed plan: two ShuffleQueryStages for the
+      // same min/max aggregate). Materializing cand runs each once; the
+      // cache holds only duplicated-gram rows (a tiny fraction of any real
+      // corpus, and cap-bounded on degenerate ones). At sf0.1 the A/B is a
+      // wash (3.74 vs 3.73 s min-of-3 — the duplicate aggregate hides inside
+      // host noise at fixture scale); the win is the structural one: one
+      // full-corpus-frame shuffle removed, which is what survives a 100x
+      // scale-up.
+      val cand = capBuckets(grams.join(shared, Seq("gh")), Seq("gh"),
+        maxBucket, "exactSubstrSpans", tiebreakers = Seq("pos"))
+      Materialize.shared(cand) {
+        val m = cand.as("a").join(cand.as("b"),
+            col("a.gh") === col("b.gh") && col("a.id") < col("b.id"))
+          .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+            col("a.pos").as("pos_a"), (col("a.pos") - col("b.pos")).as("diag"))
+        val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
+          .orderBy(col("pos_a"))
+        m.withColumn("run_id", col("pos_a") - row_number().over(w))
+          .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("run_id"))
+          .agg(min(col("pos_a")).as("start_a"), count(lit(1)).as("n_anchor"))
+          .select(col("doc_a"), col("doc_b"), col("start_a"),
+            (col("start_a") - col("diag")).as("start_b"),
+            (col("n_anchor") + (minLen - 1)).as("span_len"))
+      }
+    }
   }
 
   /** The positional L-gram hash frame behind [[exactSubstrSpans]]: one row
@@ -955,33 +936,26 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     val L = minLen
     val grams = exactSubstrGrams(Layout.spread(docs, col(idCol)), L, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grams.count() // eager fill (r18) — see exactSubstrSpans
     val rep = grams.groupBy(col("id"), col("gh"))
       .agg(count(lit(1)).as("c")).filter(col("c") > 1)
       .select(col("id"), col("gh"))
-    // persisted for the same reason as exactSubstrSpans' cand: both self-
+    // shared for the same reason as exactSubstrSpans' cand: both self-
     // join sides would otherwise re-run the repeated-gram aggregate
     val cand = grams.join(rep, Seq("id", "gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cand.count() // eager fill (r18) — see exactSubstrSpans
-    val m = cand.as("a").join(cand.as("b"),
-        col("a.id") === col("b.id") && col("a.gh") === col("b.gh") &&
-          col("a.pos") < col("b.pos"))
-      .select(col("a.id").as("id"), col("a.pos").as("pos_a"),
-        (col("b.pos") - col("a.pos")).as("diag"))
-    val w = Window.partitionBy(col("id"), col("diag")).orderBy(col("pos_a"))
-    val spans = m
-      .withColumn("run_id", col("pos_a") - row_number().over(w))
-      .groupBy(col("id"), col("diag"), col("run_id"))
-      .agg(min(col("pos_a")).as("start_1"), count(lit(1)).as("n_anchor"))
-      .select(col("id").as(idCol), col("start_1"),
-        (col("start_1") + col("diag")).as("start_2"),
-        (col("n_anchor") + (L - 1)).as("span_len"))
-      .localCheckpoint(true) // eager: lets grams be unpersisted before return
-    cand.unpersist(blocking = false)
-    grams.unpersist(blocking = false)
-    spans
+    Materialize.shared(grams, cand) {
+      val m = cand.as("a").join(cand.as("b"),
+          col("a.id") === col("b.id") && col("a.gh") === col("b.gh") &&
+            col("a.pos") < col("b.pos"))
+        .select(col("a.id").as("id"), col("a.pos").as("pos_a"),
+          (col("b.pos") - col("a.pos")).as("diag"))
+      val w = Window.partitionBy(col("id"), col("diag")).orderBy(col("pos_a"))
+      m.withColumn("run_id", col("pos_a") - row_number().over(w))
+        .groupBy(col("id"), col("diag"), col("run_id"))
+        .agg(min(col("pos_a")).as("start_1"), count(lit(1)).as("n_anchor"))
+        .select(col("id").as(idCol), col("start_1"),
+          (col("start_1") + col("diag")).as("start_2"),
+          (col("n_anchor") + (L - 1)).as("span_len"))
+    }
   }
 
   /** Map-side existence test for an internal verbatim repeat: TRUE iff some
@@ -1424,37 +1398,32 @@ object Dedup {
         s"${blocks - matchBlocks}; raise blocks or lower maxHamming")
     // The signature table is referenced THREE times (frame-0 candidates +
     // both refinement sides); computing frame signatures usually means
-    // decoding media, so the table persists once and the (tiny) pair
-    // result materializes eagerly before the cache is released.
-    val cached = frames.select(col(idCol).as("fid"), col(frameCol).as("fno"),
-        col(nCol).as("nf"), col(sigCol).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill (r18): the three consumers run as concurrent query stages
-    // of one job and would otherwise race the unfilled cache, re-running
-    // the frame decode per stage
-    cached.count()
-    val cand = signatureHammingPairs(
-        cached.filter(col("fno") === 0), "fid", "sig",
-        blocks, maxBucket, matchBlocks, maxHamming)
-      .select(col("id_a"), col("id_b"))
-    val a = cached.select(col("fid").as("id_a"), col("fno"),
-      col("sig").as("sig_a"), col("nf").as("nf_a"))
-    val b = cached.select(col("fid").as("id_b"), col("fno"),
-      col("sig").as("sig_b"), col("nf").as("nf_b"))
-    val out = cand.join(a, "id_a").join(b, Seq("id_b", "fno"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(
-        max(bit_count(col("sig_a").bitwiseXOR(col("sig_b")))).as("max_hamming"),
-        count(lit(1)).as("aligned"),
-        max(col("nf_a")).as("nf_a"), max(col("nf_b")).as("nf_b"))
-      // equal length AND every frame aligned AND every aligned pair close
-      .filter(col("nf_a") === col("nf_b") && col("aligned") === col("nf_a") &&
-        col("max_hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("nf_a").as("n_frames"),
-        col("max_hamming"))
-      .localCheckpoint(true)
-    cached.unpersist(blocking = false)
-    out
+    // decoding media, so the table is shared.
+    val sigs = frames.select(col(idCol).as("fid"), col(frameCol).as("fno"),
+      col(nCol).as("nf"), col(sigCol).as("sig"))
+    Materialize.shared(sigs) {
+      // materialized first, so the band scan is the one reader that fills
+      // the table: three readers in one plan would each run a fill job
+      val cand = Materialize.shared()(signatureHammingPairs(
+          sigs.filter(col("fno") === 0), "fid", "sig",
+          blocks, maxBucket, matchBlocks, maxHamming))
+        .select(col("id_a"), col("id_b"))
+      val a = sigs.select(col("fid").as("id_a"), col("fno"),
+        col("sig").as("sig_a"), col("nf").as("nf_a"))
+      val b = sigs.select(col("fid").as("id_b"), col("fno"),
+        col("sig").as("sig_b"), col("nf").as("nf_b"))
+      cand.join(a, "id_a").join(b, Seq("id_b", "fno"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(
+          max(bit_count(col("sig_a").bitwiseXOR(col("sig_b")))).as("max_hamming"),
+          count(lit(1)).as("aligned"),
+          max(col("nf_a")).as("nf_a"), max(col("nf_b")).as("nf_b"))
+        // equal length AND every frame aligned AND every aligned pair close
+        .filter(col("nf_a") === col("nf_b") && col("aligned") === col("nf_a") &&
+          col("max_hamming") <= maxHamming)
+        .select(col("id_a"), col("id_b"), col("nf_a").as("n_frames"),
+          col("max_hamming"))
+    }
   }
 
   /** Incremental near-dup cluster maintenance: fold a new batch's pairs

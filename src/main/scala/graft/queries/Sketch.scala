@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Graph, Layout, Sketches}
+import graft.operators.{Graph, Layout, Materialize, Sketches}
 
 /** Probabilistic-sketch queries over the documents corpus. Unlike
   * `approx_count_distinct`/t-digest (engine-private internals, only
@@ -133,8 +133,7 @@ object Sketch extends QueryModule {
         // (cmsCellsWeighted — bit-identical to counting raw occurrences),
         // so the former corpus-sized MEMORY_AND_DISK token cache and the
         // d-way corpus explode are gone (r19, guide §2.3). The counts frame
-        // feeds two consumers; vocabulary-sized, it persists cheaply and is
-        // filled sequentially by `top`'s checkpoint before `cells` reads it.
+        // feeds two consumers; vocabulary-sized, it is shared cheaply.
         // spread (r19, guide §2.5 input parallelism): the tokenize +
         // explode + map-side partial agg would otherwise run on the scan's
         // splits — ONE task on the single-row-group fixture file (q87
@@ -144,22 +143,19 @@ object Sketch extends QueryModule {
           .select(explode(graft.functions.TextFunctions.tokens($"text")).as("token"))
           .filter(length($"token") > 0)
           .groupBy($"token").agg(count(lit(1)).as("exact_n"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // top feeds two consumers (probe build + the final join); the eager
-        // checkpoint pins its 20 rows so the corpus-wide aggregate runs
-        // once for it, not once per consumer (q69/q72 lifecycle pattern)
-        val top = counts.orderBy($"exact_n".desc, $"token").limit(20)
-          .localCheckpoint(true)
-        val cells = Sketches.cmsCellsWeighted(
+        Materialize.shared(counts) {
+          // top feeds two consumers (probe build + the final join); the
+          // eager checkpoint pins its 20 rows
+          val top = counts.orderBy($"exact_n".desc, $"token").limit(20)
+            .localCheckpoint(true)
+          val cells = Sketches.cmsCellsWeighted(
             counts, Seq.empty, $"token", $"exact_n", D, W)
-          .localCheckpoint(true)
-        counts.unpersist(blocking = false)
-        Sketches.cmsQuery(cells, Seq.empty, top, $"token", D, W)
-          .select($"__item".as("token"), $"cms_estimate")
-          .join(top, "token")
-          .select($"token", $"exact_n", $"cms_estimate",
-            ($"cms_estimate" - $"exact_n").as("overcount"))
-          .orderBy($"token")
+          Sketches.cmsQuery(cells, Seq.empty, top, $"token", D, W)
+            .select($"__item".as("token"), $"cms_estimate")
+            .join(top, "token")
+            .select($"token", $"exact_n", $"cms_estimate",
+              ($"cms_estimate" - $"exact_n").as("overcount"))
+        }.orderBy($"token")
       },
       Some(s"""WITH tk AS (SELECT token FROM ($tokSql) WHERE len(token) > 0),
           cnt AS (SELECT token, count(*) AS exact_n FROM tk GROUP BY 1),

@@ -1,11 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{CorpusStats, Decontamination, Dedup, HeuristicFilters, Layout, Multimodal,
-  Sampling}
+import graft.operators.{CorpusStats, Decontamination, Dedup, HeuristicFilters, Layout, Materialize,
+  Multimodal, Sampling}
 
 /** Text-analysis + dedup surface over the `documents` fixture (the
   * training-data-pipeline operators from BASELINE.json's north star).
@@ -31,36 +32,34 @@ object Text extends QueryModule {
     "GRAFT STANDARD LICENSE HEADER DO NOT REMOVE THIS " +
       "BLOCK IS IDENTICAL ACROSS EVERY EXPORTED DOCUMENT"
 
-  /** q189's interior, exposed PRE-localCheckpoint so the
-    * single-materialization property is visible evidence, not an assertion
-    * (r14 verdict #3: the committed plan was the post-checkpoint
-    * `Scan ExistingRDD`, which cannot show it). TWO materialization
-    * points, mirroring `Dedup.exactSubstrSpansFromGrams` exactly (r15):
-    * the gram explode (read by the shared-hash aggregate and the
-    * prefilter join — Catalyst's InlineCTE would re-explode per consumer,
-    * the r14 1.6x), and the prefiltered CANDIDATE frame (read by both
-    * pair-join sides — an un-materialized candidate re-plans its whole
-    * subtree per side, running the gh-shuffle aggregate twice). Returns
-    * (caches-to-unpersist, span frame); the span plan must hold exactly
-    * two InMemoryTableScans (the candidate cache on both join sides) and
-    * zero Generate nodes. Callers own the lifecycle: the QueryDef eagerly
-    * checkpoints the spans then unpersists; PlanDump dumps the span plan
-    * as committed evidence; CatalogSpec pins the counts mechanically. */
-  private[graft] def sqlSubstrSpanParts(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): (Seq[org.apache.spark.sql.DataFrame], org.apache.spark.sql.DataFrame) = {
+  /** q189's exact-substring spans from plain SQL over `documents_v`, built
+    * in two [[Materialize.shared]] frames, mirroring
+    * `Dedup.exactSubstrSpansFromGrams` exactly (r15): the gram explode
+    * (read by the shared-hash aggregate and the prefilter join —
+    * Catalyst's InlineCTE would re-explode per consumer, the r14 1.6x),
+    * and the prefiltered CANDIDATE frame (read by both pair-join sides —
+    * an un-materialized candidate re-plans its whole subtree per side,
+    * running the gh-shuffle aggregate twice). `use` receives the span
+    * frame inside the scope, before its checkpoint, so the
+    * single-materialization property is visible evidence, not an
+    * assertion (r14 verdict #3: the committed plan was the
+    * post-checkpoint `Scan ExistingRDD`, which cannot show it): the span
+    * plan holds exactly two InMemoryTableScans (the candidate cache on
+    * both join sides) and zero Generate nodes. The QueryDef returns the
+    * spans; PlanDump dumps the span plan as committed evidence;
+    * CatalogSpec pins the counts mechanically. */
+  private[graft] def sqlSubstrSpans(s: SparkSession, dir: String)(
+      use: DataFrame => DataFrame): DataFrame = {
     graft.GraftSql.registerTables(s, dir, Seq("documents"))
     val grams = s.sql("""SELECT doc_id, pos,
           xxhash64(substring(text, pos, 40)) AS gh
         FROM (SELECT doc_id, text FROM documents_v
               WHERE length(text) >= 40)
         LATERAL VIEW explode(sequence(1, length(text) - 39)) t AS pos""")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     grams.createOrReplaceTempView("substr_grams_v")
     val cand = s.sql("""SELECT g.* FROM substr_grams_v g
         JOIN (SELECT gh FROM substr_grams_v
               GROUP BY gh HAVING min(doc_id) <> max(doc_id)) s USING (gh)""")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cand.createOrReplaceTempView("substr_cand_v")
     val spans = s.sql("""WITH
       m AS (
@@ -78,7 +77,54 @@ object Text extends QueryModule {
         CAST(count(*) + 39 AS BIGINT) AS span_len
       FROM r GROUP BY doc_a, doc_b, diag, run_id
       ORDER BY doc_a, doc_b, start_a, start_b""")
-    (Seq(grams, cand), spans)
+    Materialize.shared(grams, cand)(use(spans))
+  }
+
+  /** q72's corpus build, also ramped by `ScaleRamp`'s funnel family: hold
+    * out an eval slice (`doc_id % 97 == 0`) and decontaminate against it ->
+    * language/quality gates -> near-dup CLUSTER survivors -> mixture
+    * resampling to target language shares -> deterministic split ->
+    * per-(split, lang) document and token counts.
+    *
+    * NOT spread before the decontamination gate (r19, measured): the
+    * gate's distinctShingles probe + the langId/qualityScore kernels run
+    * on the scan's splits (557 ms single-task at fixture scale — the gate
+    * is map-only by design). A Layout.spread of (id, text) here A/B-benched
+    * NEUTRAL (5-rep q72 min 4.52 -> 4.36 s, inside the day's ±0.5 s host
+    * band) because the fill overlaps the pipeline's other jobs, and at
+    * production scan parallelism the exchange is a pure extra corpus pass
+    * (guide §8 anti-pattern) — unlike the Dedup signature spreads, nothing
+    * downstream of this gate shuffles more bytes than the exchange itself
+    * would.
+    *
+    * `gated` (decontamination + gates) feeds the near-dup pipeline and the
+    * cluster join; left lazy it re-runs per consumer (measured 8.0 s at
+    * sf0.1 vs 5.4 s materialized). It is shared across the survivor-id
+    * computation only: the cheap tail stages re-derive text from `docs`
+    * (a fresh pushdown parquet scan) keyed by the TINY survivor-id frame,
+    * one (id, lang) row per survivor. */
+  private[graft] def curationFunnel(docs: DataFrame): DataFrame = {
+    val clean = Decontamination.clean(
+      docs.filter(col("doc_id") % 97 =!= 0),
+      docs.filter(col("doc_id") % 97 === 0))
+    val gated = clean.select(col("doc_id"), col("text"),
+        TextFunctions.langId(col("text")).as("lang_pred"),
+        TextFunctions.qualityScore(col("text")).as("quality"))
+      .filter(col("lang_pred") =!= "unknown" && col("quality") >= 0.4)
+    val survIds = Materialize.shared(gated) {
+      val clusters = Dedup.nearDupClusters(
+        Dedup.minhashNearDups(gated, threshold = 0.5))
+      gated.join(clusters, Seq("doc_id"), "left")
+        .filter(coalesce(col("cluster_id"), col("doc_id")) === col("doc_id"))
+        .select(col("doc_id"), col("lang_pred"))
+    }
+    val surv = docs.select(col("doc_id"), col("text")).join(survIds, "doc_id")
+    val mixed = Sampling.resampleToMixture(surv, "lang_pred",
+      shares = Map("en" -> 0.4, "de" -> 0.25, "fr" -> 0.2, "es" -> 0.15))
+    Sampling.deterministicSplit(mixed, valFraction = 0.1)
+      .groupBy(col("split"), col("lang_pred"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(TextFunctions.tokenCount(col("text"))).as("n_tokens"))
   }
 
   // DuckDB fragments mirroring TextFunctions
@@ -918,53 +964,8 @@ object Text extends QueryModule {
     // non-sub-quadratic work (exhaustive pairs, recursive closure) exists
     // oracle-side.
     QueryDef("q72_full_pipeline",
-      (s, dir) => {
-        import s.implicits._
-        val docs = t(s, dir, "documents")
-        // NOT spread before the decontamination gate (r19, measured): the
-        // gate's distinctShingles probe + the langId/qualityScore kernels
-        // run on the scan's splits (557 ms single-task at fixture scale —
-        // the gate is map-only by design). A Layout.spread of (id, text)
-        // here A/B-benched NEUTRAL (5-rep q72 min 4.52 -> 4.36 s, inside
-        // the day's ±0.5 s host band) because the fill overlaps the
-        // pipeline's other jobs, and at production scan parallelism the
-        // exchange is a pure extra corpus pass (guide §8 anti-pattern) —
-        // unlike the Dedup signature spreads, nothing downstream of this
-        // gate shuffles more bytes than the exchange itself would.
-        val clean = Decontamination.clean(
-          docs.filter($"doc_id" % 97 =!= 0),
-          docs.filter($"doc_id" % 97 === 0))
-        // Stage materialization — the production shape for a multi-stage
-        // funnel: `gated` (decontamination + gates) feeds the near-dup
-        // pipeline, the cluster join, the mixture counts, AND the final
-        // accounting; left lazy it re-runs per consumer (measured 8.0 s at
-        // sf0.1 vs 5.4 s materialized). Persist it across the eager
-        // survivor-id computation, release it, and re-derive text for the
-        // cheap tail stages from a fresh pushdown parquet scan keyed by the
-        // TINY survivor-id frame (one (id, lang) row per survivor) — the
-        // minhashCandidates persist/checkpoint lifecycle, applied at the
-        // pipeline level.
-        val gated = clean.select($"doc_id", $"text",
-            TextFunctions.langId($"text").as("lang_pred"),
-            TextFunctions.qualityScore($"text").as("quality"))
-          .filter($"lang_pred" =!= "unknown" && $"quality" >= 0.4)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val clusters = Dedup.nearDupClusters(
-          Dedup.minhashNearDups(gated, threshold = 0.5))
-        val survIds = gated.join(clusters, Seq("doc_id"), "left")
-          .filter(coalesce($"cluster_id", $"doc_id") === $"doc_id")
-          .select($"doc_id", $"lang_pred")
-          .localCheckpoint(true)
-        gated.unpersist(blocking = false)
-        val surv = docs.select($"doc_id", $"text").join(survIds, "doc_id")
-        val mixed = Sampling.resampleToMixture(surv, "lang_pred",
-          shares = Map("en" -> 0.4, "de" -> 0.25, "fr" -> 0.2, "es" -> 0.15))
-        Sampling.deterministicSplit(mixed, valFraction = 0.1)
-          .groupBy($"split", $"lang_pred")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(TextFunctions.tokenCount($"text")).as("n_tokens"))
-          .orderBy($"split", $"lang_pred")
-      },
+      (s, dir) => curationFunnel(t(s, dir, "documents"))
+        .orderBy(col("split"), col("lang_pred")),
       Some(s"""WITH RECURSIVE
         sh3 AS (SELECT doc_id, $shinglesSql AS s FROM documents),
         ev AS (SELECT DISTINCT unnest(s) AS gram FROM sh3 WHERE doc_id % 97 = 0),
@@ -3216,24 +3217,18 @@ object Text extends QueryModule {
     // Scala operator returns (and plans the same shape — gram shuffle,
     // shared-hash prefilter, bounded per-pair window, no all-pairs).
     //
-    // The gram frame AND the prefiltered candidate frame are MATERIALIZED
-    // as persisted temp views before the span SQL runs (r13 verdict #2 +
-    // r15): Catalyst's InlineCTE expands a deterministic CTE into every
-    // consumer, so the 24-byte-per-character gram explode ran three times
-    // (1.6x), and an un-materialized candidate CTE re-plans the shared-
-    // hash aggregate into both pair-join sides (a second full gh shuffle
-    // of the gram frame). Registering each once mirrors
-    // `Dedup.exactSubstrSpansFromGrams`' persist lifecycle exactly — the
-    // span construction itself stays pure SQL, and at 100 TB a recompute
-    // of the corpus's every character is the difference that matters.
+    // The gram frame AND the prefiltered candidate frame are shared temp
+    // views under the span SQL (r13 verdict #2 + r15): Catalyst's
+    // InlineCTE expands a deterministic CTE into every consumer, so the
+    // 24-byte-per-character gram explode ran three times (1.6x), and an
+    // un-materialized candidate CTE re-plans the shared-hash aggregate
+    // into both pair-join sides (a second full gh shuffle of the gram
+    // frame). Sharing each once mirrors `Dedup.exactSubstrSpansFromGrams`
+    // exactly — the span construction itself stays pure SQL, and at
+    // 100 TB a recompute of the corpus's every character is the
+    // difference that matters.
     QueryDef("q189_sql_substr_spans",
-      (s, dir) => {
-        val (caches, spans) = Text.sqlSubstrSpanParts(s, dir)
-        val out = spans
-          .localCheckpoint(true) // eager: lets the caches release now
-        caches.foreach(_.unpersist(blocking = false))
-        out
-      },
+      (s, dir) => Text.sqlSubstrSpans(s, dir)(identity),
       Some("""WITH g AS (
           SELECT doc_id, CAST(pos AS BIGINT) AS pos,
             substr(text, CAST(pos AS INT), 40) AS gram
@@ -3565,40 +3560,34 @@ object Reshape extends QueryModule {
           when($"doc_id" % 3 === 0, concat(lit(bp), lit(" "), $"text"))
             .otherwise($"text").as("text"))
         // ONE gram explode serves both consumers (the q189 lesson): the
-        // persisted frame feeds the operator's span construction AND the
+        // shared frame feeds the operator's span construction AND the
         // independent drop-ledger audit — recomputed exactly as capBuckets
         // accounts it (occupancy of each >=2-distinct-doc gram), with the
         // oracle recomputing it a third way from gram STRINGS.
         val grams = Dedup.exactSubstrGrams(Layout.spread(synth, $"doc_id"), minLen = 40)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // eager fill (r18): four consumers (ledger, shared-hash prefilter,
-        // both pair-join sides) otherwise race the unfilled cache and each
-        // re-derive the gram frame single-task from the scan
-        grams.count()
-        val ledger = grams.groupBy($"gh")
-          .agg(min($"id").as("mn"), max($"id").as("mx"),
-            count(lit(1)).as("occ"))
-          .filter($"mn" =!= $"mx")
-          .agg(
-            coalesce(sum(when($"occ" > cap, $"occ" - cap)), lit(0L))
-              .as("dropped_gram_rows"),
-            count_if($"occ" > cap).as("capped_buckets"))
-        val spans =
-          Dedup.exactSubstrSpansFromGrams(grams, minLen = 40, maxBucket = cap)
-        val checked = spans
-          .join(synth.select($"doc_id".as("doc_a"), $"text".as("ta")), "doc_a")
-          .join(synth.select($"doc_id".as("doc_b"), $"text".as("tb")), "doc_b")
-          .select(
-            expr("substring(ta, CAST(start_a AS INT), CAST(span_len AS INT))")
-              .as("sa"),
-            expr("substring(tb, CAST(start_b AS INT), CAST(span_len AS INT))")
-              .as("sb"))
-          .agg(count_if($"sa" =!= $"sb").as("exactness_violations"),
-            (count_if($"sa".contains(bp)) > 0L).as("boilerplate_recall"))
-        val out = ledger.crossJoin(checked)
-          .localCheckpoint(true) // eager: the ledger must read the cache
-        grams.unpersist(blocking = false)
-        out
+        Materialize.shared(grams) {
+          val ledger = grams.groupBy($"gh")
+            .agg(min($"id").as("mn"), max($"id").as("mx"),
+              count(lit(1)).as("occ"))
+            .filter($"mn" =!= $"mx")
+            .agg(
+              coalesce(sum(when($"occ" > cap, $"occ" - cap)), lit(0L))
+                .as("dropped_gram_rows"),
+              count_if($"occ" > cap).as("capped_buckets"))
+          val spans =
+            Dedup.exactSubstrSpansFromGrams(grams, minLen = 40, maxBucket = cap)
+          val checked = spans
+            .join(synth.select($"doc_id".as("doc_a"), $"text".as("ta")), "doc_a")
+            .join(synth.select($"doc_id".as("doc_b"), $"text".as("tb")), "doc_b")
+            .select(
+              expr("substring(ta, CAST(start_a AS INT), CAST(span_len AS INT))")
+                .as("sa"),
+              expr("substring(tb, CAST(start_b AS INT), CAST(span_len AS INT))")
+                .as("sb"))
+            .agg(count_if($"sa" =!= $"sb").as("exactness_violations"),
+              (count_if($"sa".contains(bp)) > 0L).as("boilerplate_recall"))
+          ledger.crossJoin(checked)
+        }
       },
       Some("""WITH synth AS (
           SELECT doc_id, CASE WHEN doc_id % 3 = 0
@@ -3650,33 +3639,30 @@ object Reshape extends QueryModule {
         // ONE index-side gram explode serves the ledger audit, the cap's
         // occupancy pass, and the join (q189/q195 lifecycle)
         val ixGrams = Dedup.exactSubstrGrams(Layout.spread(ixDocs, $"doc_id"), minLen = 40)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ixGrams.count() // eager fill (r18) — see q195
-        val ledger = ixGrams.groupBy($"gh")
-          .agg(count(lit(1)).as("occ"))
-          .agg(
-            coalesce(sum(when($"occ" > cap, $"occ" - cap)), lit(0L))
-              .as("dropped_index_rows"),
-            count_if($"occ" > cap).as("capped_buckets"))
-        val spans = Dedup.exactSubstrSpansAgainstIndex(
-            ixGrams, Dedup.exactSubstrGrams(Layout.spread(pbDocs, $"doc_id"), minLen = 40),
-            minLen = 40, maxBucket = cap)
-        val checked = spans
-          .join(synth.select($"doc_id".as("index_id"), $"text".as("ti")),
-            "index_id")
-          .join(synth.select($"doc_id".as("probe_id"), $"text".as("tp")),
-            "probe_id")
-          .select(
-            expr("substring(ti, CAST(start_i AS INT), CAST(span_len AS INT))")
-              .as("si"),
-            expr("substring(tp, CAST(start_p AS INT), CAST(span_len AS INT))")
-              .as("sp"))
-          .agg(count_if($"si" =!= $"sp").as("exactness_violations"),
-            (count_if($"si".contains(bp)) > 0L).as("boilerplate_recall"))
-        val out = ledger.crossJoin(checked)
-          .localCheckpoint(true) // eager: the ledger must read the cache
-        ixGrams.unpersist(blocking = false)
-        out
+        Materialize.shared(ixGrams) {
+          val ledger = ixGrams.groupBy($"gh")
+            .agg(count(lit(1)).as("occ"))
+            .agg(
+              coalesce(sum(when($"occ" > cap, $"occ" - cap)), lit(0L))
+                .as("dropped_index_rows"),
+              count_if($"occ" > cap).as("capped_buckets"))
+          val spans = Dedup.exactSubstrSpansAgainstIndex(
+              ixGrams, Dedup.exactSubstrGrams(Layout.spread(pbDocs, $"doc_id"), minLen = 40),
+              minLen = 40, maxBucket = cap)
+          val checked = spans
+            .join(synth.select($"doc_id".as("index_id"), $"text".as("ti")),
+              "index_id")
+            .join(synth.select($"doc_id".as("probe_id"), $"text".as("tp")),
+              "probe_id")
+            .select(
+              expr("substring(ti, CAST(start_i AS INT), CAST(span_len AS INT))")
+                .as("si"),
+              expr("substring(tp, CAST(start_p AS INT), CAST(span_len AS INT))")
+                .as("sp"))
+            .agg(count_if($"si" =!= $"sp").as("exactness_violations"),
+              (count_if($"si".contains(bp)) > 0L).as("boilerplate_recall"))
+          ledger.crossJoin(checked)
+        }
       },
       Some("""WITH synth AS (
           SELECT doc_id, CASE WHEN doc_id % 3 = 0

@@ -224,14 +224,12 @@ object PlanDump {
       // q189's committed frame is post-localCheckpoint (Scan ExistingRDD) —
       // dump its PRE-checkpoint interior instead, where the single-
       // materialization evidence lives (r14 verdict #3)
-      val (df, cleanup): (org.apache.spark.sql.DataFrame, () => Unit) =
-        if (name == "q189_sql_substr_spans") {
-          val (caches, spans) = graft.queries.Text.sqlSubstrSpanParts(spark, dir)
-          (spans, () => { caches.foreach(_.unpersist(blocking = true)); () })
-        } else (byName(name).fn(spark, dir), () => ())
-      val plan = df.queryExecution.explainString(
+      def formatted(df: org.apache.spark.sql.DataFrame) = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      cleanup()
+      var plan = ""
+      if (name == "q189_sql_substr_spans")
+        graft.queries.Text.sqlSubstrSpans(spark, dir) { spans => plan = formatted(spans); spans }
+      else plan = formatted(byName(name).fn(spark, dir))
       sb.append(s"\n## $name\n\n")
       sb.append(s"**Must hold at scale:** $why\n\n")
       sb.append("```\n").append(plan.trim).append("\n```\n")

@@ -203,36 +203,11 @@ object ScaleRamp {
     // mixture resample -> split accounting, end to end on 1x/3x/10x
     // corpora. scaledDocs keeps dup structure per copy with no cross-copy
     // pairs, so near-dup pair count and CC component count grow linearly —
-    // "10x the corpus at equal dup rate". Eval split mirrors q72
-    // (doc_id % 97), which survives the per-copy id shift (1e9 % 97 != 0
+    // "10x the corpus at equal dup rate". The row runs q72's own body; its
+    // eval split (doc_id % 97) survives the per-copy id shift (1e9 % 97 != 0
     // rotates the residue per copy — same eval fraction, different docs).
-    def funnel(docs: DataFrame): DataFrame = {
-      import graft.operators.{Decontamination, Sampling}
-      import graft.functions.TextFunctions
-      val clean = Decontamination.clean(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0))
-      val gated = clean.select(col("doc_id"), col("text"),
-          TextFunctions.langId(col("text")).as("lang_pred"),
-          TextFunctions.qualityScore(col("text")).as("quality"))
-        .filter(col("lang_pred") =!= "unknown" && col("quality") >= 0.4)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val clusters = Dedup.nearDupClusters(
-        Dedup.minhashNearDups(gated, threshold = 0.5))
-      val survIds = gated.join(clusters, Seq("doc_id"), "left")
-        .filter(coalesce(col("cluster_id"), col("doc_id")) === col("doc_id"))
-        .select(col("doc_id"), col("lang_pred"))
-        .localCheckpoint(true)
-      gated.unpersist(blocking = false)
-      val surv = docs.select(col("doc_id"), col("text")).join(survIds, "doc_id")
-      val mixed = Sampling.resampleToMixture(surv, "lang_pred",
-        shares = Map("en" -> 0.4, "de" -> 0.25, "fr" -> 0.2, "es" -> 0.15))
-      Sampling.deterministicSplit(mixed, valFraction = 0.1)
-        .groupBy(col("split"), col("lang_pred"))
-        .agg(count(lit(1)).as("n_docs"))
-    }
     ramp("funnel", scaledDocs(spark, sfDir, _), Seq(
-      "q72_funnel" -> (d => funnel(d))), corpusVia = "parquet")
+      "q72_funnel" -> (d => graft.queries.Text.curationFunnel(d))), corpusVia = "parquet")
 
     // The maxBucket lever under a DEGENERATE corpus (q195's shape): one
     // shared 98-char block on every third doc puts ~60 gram buckets at

@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.util.LongAccumulator
 
 import graft.SparkSpec
@@ -10,19 +8,13 @@ import graft.SparkSpec
 /** The one bucket join's lifecycle, for each of the seven candidate
   * generators built on it: a call computes its band frame's rows once,
   * and leaves at most its returned checkpoint persisted. */
-class BucketPairsSpec extends SparkSpec {
+class BucketPairsSpec extends SparkSpec with CountedRows {
   import spark.implicits._
 
   private val texts = Seq(
     "the quick brown fox jumps over the lazy dog near the river bank today",
     "spark joins partitions by key and shuffles rows between executors fast",
     "near duplicate detection bands minhash signatures into hashed buckets")
-
-  // RDD-backed, not local relations: the optimizer evaluates a udf over a
-  // local relation at plan time, once per plan copy
-  private def frame[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](
-      rows: Seq[T], cols: String*) =
-    spark.createDataset(spark.sparkContext.parallelize(rows, 2)).toDF(cols: _*)
 
   // three templates, each with several near copies differing in one token
   private def docs(from: Long) = frame((0L until 24L).map { i =>
@@ -40,16 +32,6 @@ class BucketPairsSpec extends SparkSpec {
   private val emb = frame((0L until 24L).map { i =>
     (i, centers((i % 3).toInt).map(_ + (i / 3 % 2) * 0.01f).toSeq)
   }, "vec_id", "embedding")
-
-  /** `df` with `c` routed through an identity udf that counts its calls. */
-  private def counted(df: DataFrame, c: String, acc: LongAccumulator) = {
-    val f = df.schema(c).dataType match {
-      case StringType => udf((s: String) => { acc.add(1); s })
-      case LongType => udf((x: Long) => { acc.add(1); x })
-      case _ => udf((v: Seq[Float]) => { acc.add(1); v })
-    }
-    df.withColumn(c, f(col(c)))
-  }
 
   test("each generator fills its band frame once and leaves only its result persisted, " +
       "cap on, off and firing") {

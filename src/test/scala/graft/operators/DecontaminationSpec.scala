@@ -35,10 +35,6 @@ class DecontaminationSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"eval side must broadcast:\n$plan")
-    val shuffled = Decontamination.overlap(corpus, evalDocs, n = 3, broadcastEval = false)
-    // still correct without the hint (plan choice is Catalyst's)
-    val got = shuffled.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === Map(1L -> 2L, 2L -> 1L))
   }
 
   test("overlap against an empty eval set flags nothing") {

@@ -96,8 +96,7 @@ class CatalogSpec extends SparkSpec {
       "(2 InMemoryTableScans, both pair-join sides) and re-runs neither " +
       "the gram explode nor the shared-hash aggregate — the r14 1.6x " +
       "CTE-inlining regression guard, pinned mechanically") {
-    val (caches, spans) = Text.sqlSubstrSpanParts(spark, sf0001)
-    try {
+    Text.sqlSubstrSpans(spark, sf0001) { spans =>
       // walk the OPERATOR TREE, not its string form: an InMemoryTableScan
       // leaf's toString renders the whole cached-build plan (explode
       // included), so substring counting over-counts. sparkPlan is the
@@ -116,7 +115,8 @@ class CatalogSpec extends SparkSpec {
         // final+partial span extents only — a shared-hash min/max pair
         // reappearing here would mean the prefilter re-planned per side
         s"unexpected aggregates in the span plan:\n${names.mkString(" ")}")
-    } finally caches.foreach(_.unpersist(blocking = true))
+      spans
+    }
   }
 
   test("q197 gate plan: the eval gram index broadcasts and the corpus side " +
