@@ -433,23 +433,22 @@ object CorpusStats {
   /** BPE trainer: `merges` rounds of argmax-pair + merge over the vocab
     * table. Returns the ordered merge list (left, right, weighted count).
     * Driver pulls exactly ONE row per round (the argmax pair — bounded by
-    * construction); each round's vocab is checkpointed eagerly so lineage
-    * depth stays constant, and the previous rounds' vocab-sized blocks are
-    * released asynchronously by the ContextCleaner once the loop drops its
-    * references (Dataset-level unpersist cannot reach localCheckpoint
-    * blocks — see nearDupClusters for the RDD-level variant; at vocab
-    * scale the async release is sufficient). Stops early when no pair
-    * reaches `minPairCount` (merging singletons is tokenizer noise). */
+    * construction); the vocab is materialized ([[Materialize.shared]])
+    * every 4th merge so lineage depth stays bounded, and the previous
+    * vocab-sized blocks are released asynchronously by the ContextCleaner
+    * once the loop drops its references (at vocab scale the async release
+    * is sufficient). Stops early when no pair reaches `minPairCount`
+    * (merging singletons is tokenizer noise). */
   def bpeTrain(
       docs: DataFrame,
       merges: Int,
       textCol: String = "text",
       minPairCount: Long = 2L): Seq[(String, String, Long)] = {
-    var vocab = bpeVocab(docs, textCol).localCheckpoint(true)
+    var vocab = Materialize.shared()(bpeVocab(docs, textCol))
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var done = false
     var round = 0
-    // Checkpoint CADENCE (r18, guide §1.2 per-round fixed costs): the
+    // Materialization CADENCE (r18, guide §1.2 per-round fixed costs): the
     // per-merge eager checkpoint paid one extra materialization job per
     // round (q146 profiled at 54 jobs of 10-50 ms — pure job-floor
     // stacking). The merge fold is a cheap vocabulary-sized projection, so
@@ -482,7 +481,7 @@ object CorpusStats {
           .select(col("word"), bpeMergeSymbols(col("symbols"), a, b).as("symbols"),
             col("freq"))
         sinceCkpt += 1
-        if (sinceCkpt == 4) { vocab = vocab.localCheckpoint(true); sinceCkpt = 0 }
+        if (sinceCkpt == 4) { vocab = Materialize.shared()(vocab); sinceCkpt = 0 }
       }
       round += 1
     }

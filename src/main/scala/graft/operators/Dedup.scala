@@ -384,13 +384,11 @@ object Dedup {
     * pure waste for the overwhelming majority of rows that touch no
     * candidate. With the semi-join, the corpus scan projects only
     * (id, text), AQE broadcast-converts the tiny id set when it fits, and
-    * the shingle arrays exist only for candidate docs. No checkpoint is
-    * added here — everything stays one lazy plan (the former inline form's
-    * job structure, minus the corpus-wide shingle compute and shuffle) —
-    * so `candidatePairs` should be cheap to re-evaluate: the shingle
-    * checkpoint's id set and the pair join each read it. The generators
-    * hand over their checkpoint when the bucket cap is on (the default);
-    * with it off the candidate plan runs once for each of the two. */
+    * the shingle arrays exist only for candidate docs. `candidatePairs`
+    * should be cheap to re-evaluate: the shingle frame's id set and the
+    * pair join each read it. The generators hand over their checkpoint
+    * when the bucket cap is on (the default); with it off the candidate
+    * plan runs once for each of the two. */
   private def refineByJaccard(
       docs: DataFrame,
       candidatePairs: DataFrame,
@@ -410,21 +408,14 @@ object Dedup {
     // that shuffled the ENTIRE corpus (id, text) by id — twice, once per
     // pair-join side. The hint removes both full-corpus exchanges; the
     // corpus is now never shuffled here at any scale.
-    //
-    // The shingle frame is then materialized ONCE (r19, guide §2.4/§5): it
-    // feeds BOTH pair joins, and un-materialized it re-planned its whole
-    // subtree per side — two corpus scans, two semi-joins, and two runs of
-    // the distinctShingles kernel (the dominant CPU of the q46 profile:
-    // 5.7 core-seconds per run at sf0.1). Shingles exist only for candidate
-    // docs, so the checkpoint holds the small refined working set, not the
-    // corpus; blocks release via ContextCleaner when the result frame is
-    // dropped (same lifecycle as the candidate checkpoint feeding this).
-    val sh = docs
+    // Both pair joins read the shingle frame, which holds only candidate
+    // docs (the distinctShingles kernel is the dominant CPU of the q46
+    // profile: 5.7 core-seconds per run at sf0.1).
+    val sh = Materialize.shared()(docs
       .select(col(idCol).as("sid"), col(textCol))
       .join(broadcast(ids), Seq("sid"), "left_semi")
       .select(col("sid"),
-        TextFunctions.distinctShingles(col(textCol), shingle).as("sh"))
-      .localCheckpoint(true)
+        TextFunctions.distinctShingles(col(textCol), shingle).as("sh")))
     cands
       .join(sh.withColumnRenamed("sid", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("sid", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -482,21 +473,14 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen, s"need 0 < tau <= 1: $tauNum/$tauDen")
-    // The shingle explode feeds sizes, df, the rank window AND both
-    // refinement probes — materialize it once (the signature-cache
-    // discipline ensembleNearDups uses). At cluster scale this is the
-    // SSJoin index build's temp-table materialization; partition-local
-    // checkpoint is the single-JVM analog and spills.
-    //
-    // Spread first (always: this operator is a batch self-join): the
-    // distinctShingles kernel — its dominant CPU — would otherwise run on
-    // the scan's splits, and the eager checkpoint would materialize it
-    // sequentially.
-    val sh = Layout.spread(docs.select(col(idCol).as("id"), col(textCol).as("__t")),
-        col("id"))
+    // The shingle explode feeds sizes, df, the rank window and both
+    // refinement probes: the SSJoin index build's temp table. Spread first
+    // (always: this operator is a batch self-join): the distinctShingles
+    // kernel, its dominant CPU, would otherwise run on the scan's splits.
+    val sh = Materialize.shared()(Layout.spread(
+        docs.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
       .select(col("id"),
-        explode(TextFunctions.distinctShingles(col("__t"), shingle)).as("sh"))
-      .localCheckpoint(true)
+        explode(TextFunctions.distinctShingles(col("__t"), shingle)).as("sh")))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
     val dfx = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     // Every shingle ranked within its doc under ONE global (df, shingle)
@@ -851,16 +835,15 @@ object Dedup {
     * pipeline can PERSIST a corpus's gram index once (8-byte hashes, no
     * text) and run incremental cross-side span detection against it
     * ([[exactSubstrSpansAgainstIndex]]) — the exact-substring member of
-    * the incremental-ingest family (q100 minhash, q161 media). `sequence`
-    * DESCENDS when stop < 1, so sub-L docs are filtered before the
-    * explode. Both sides of a cross-side join must use the SAME minLen. */
+    * the incremental-ingest family (q100 minhash, q161 media). A doc
+    * shorter than minLen, or with a null text, has no gram row. Both sides
+    * of a cross-side join must use the SAME minLen. */
   def exactSubstrGrams(
       docs: DataFrame,
       minLen: Int = 40,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    val L = minLen
     // Gram hashing is the native CharGramHashes kernel (one byte walk per
     // doc, codegen, bit-identical to xxhash64(substring(t, pos, L))): the
     // former explode(sequence) + per-gram substring form paid
@@ -876,9 +859,8 @@ object Dedup {
     // the whole gram derivation running ~500-800 ms single-task per
     // consumer, and the ~1 byte/char text exchange is small next to the
     // ~24 byte/char gram frame they shuffle downstream anyway.
-    docs.filter(length(col(textCol)) >= L)
-      .select(col(idCol).cast("long").as("id"),
-        posexplode(ArrayExpressions.charGramHashes(col(textCol), L)))
+    docs.select(col(idCol).cast("long").as("id"),
+        posexplode(ArrayExpressions.charGramHashes(col(textCol), minLen)))
       .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("gh"))
   }
@@ -1164,10 +1146,8 @@ object Dedup {
     // — and it removes virtually all random block collisions (hamming ~32
     // for unrelated 64-bit fingerprints) before they ever reach the
     // candidate distinct, let alone the expensive shingle join.
-    val cands = simhashCandidates(docs, textCol, idCol, blocks, maxBucket,
-        maxHamming = blocks - 1)
-      .select(col("id_a"), col("id_b"))
-      .localCheckpoint(true) // refineByJaccard references it several times
+    val cands = Materialize.shared()(simhashCandidates(docs, textCol, idCol, blocks,
+        maxBucket, maxHamming = blocks - 1).select(col("id_a"), col("id_b")))
     refineByJaccard(docs, cands, threshold, textCol, idCol, shingle)
   }
 
@@ -1219,11 +1199,9 @@ object Dedup {
     val sh = simhashCandidates(docs, textCol, idCol, blocks, simhashMaxBucket,
         blockMatches, maxHamming = blocks - blockMatches)
       .select(col("id_a"), col("id_b"))
-    // one eager materialization: the union-distinct is referenced several
-    // times by the refinement, and the simhash bucket self-join behind it
-    // must not re-run per reference (the minhash side is already
-    // checkpointed by its generator)
-    val cands = mh.union(sh).distinct().localCheckpoint(true)
+    // the minhash side is already checkpointed by its generator; the
+    // simhash bucket self-join must not re-run per refinement reader
+    val cands = Materialize.shared()(mh.union(sh).distinct())
     refineByJaccard(docs, cands, threshold, textCol, idCol, shingle)
   }
 
@@ -1523,14 +1501,6 @@ object Dedup {
         maxBucket),
       threshold, textCol, idCol, shingle)
 
-  /** Ingest-time verdict for each incoming document against an existing
-    * corpus: `exact_dup` (verbatim text already present — md5 semi-join),
-    * `near_dup` (shares a band bucket with a corpus doc and refines to
-    * Jaccard >= threshold; the max such Jaccard is reported), else
-    * `accepted`. The shape a production pipeline runs per batch: every
-    * join is keyed by content hash or LSH bucket, the corpus is never
-    * pairwise-compared with itself, and the text of corpus docs is only
-    * read for the (tiny) candidate set. */
   /** Flag the canonical member of each near-dup cluster: the member a
     * production pipeline KEEPS. Highest score wins; ascending id breaks
     * ties deterministically. `members` = (id, cluster, score, ...); one
@@ -1545,6 +1515,14 @@ object Dedup {
     members.withColumn("is_canonical", row_number().over(w) === 1)
   }
 
+  /** Ingest-time verdict for each incoming document against an existing
+    * corpus: `exact_dup` (verbatim text already present — md5 semi-join),
+    * `near_dup` (shares a band bucket with a corpus doc and refines to
+    * Jaccard >= threshold; the max such Jaccard is reported), else
+    * `accepted`. The shape a production pipeline runs per batch: every
+    * join is keyed by content hash or LSH bucket, the corpus is never
+    * pairwise-compared with itself, and the text of corpus docs is only
+    * read for the (tiny) candidate set. */
   def incrementalVerdicts(
       corpus: DataFrame,
       incoming: DataFrame,
@@ -1559,12 +1537,8 @@ object Dedup {
       .join(corpus.select(md5(col(textCol)).as("__h")).distinct(),
         md5(incoming(textCol)) === col("__h"), "left_semi")
       .select(col(idCol), lit("exact_dup").as("__verdict"))
-    val near = refineByJaccard(
-        corpus.select(col(idCol), col(textCol))
-          .unionByName(incoming.select(col(idCol), col(textCol))),
-        crossCandidates(corpus, incoming, textCol, idCol, k, bands, shingle,
-          maxBucket),
-        threshold, textCol, idCol, shingle)
+    val near = crossNearDups(corpus, incoming, threshold, textCol, idCol, k, bands,
+        shingle, maxBucket)
       .groupBy(col("id_b").as(idCol))
       .agg(max(col("jaccard")).as("best_jaccard"))
     incoming.select(col(idCol))

@@ -218,14 +218,14 @@ object Graph {
     // (Σ C(deg, 2) wedges), and the q167 profile showed the whole wedge
     // stage + partial aggregate running 5.6 s in ONE task (21.8 MB of
     // partial-agg output from a 0.1 MB input). Spreading on the apex
-    // directly over the checkpointed adjacency — whose Scan ExistingRDD
+    // directly over the materialized adjacency — whose Scan ExistingRDD
     // carries no known partitioning, so the optimizer cannot elide the
     // exchange as redundant — gives every apex-keyed consumer below (degree
     // agg, weight join, both wedge sides) that ONE exchange at full width
     // instead of its own coalescible one.
-    val sym = Layout.spread(und.select(col("x").as("node"), col("y").as("nb"))
-      .union(und.select(col("y").as("node"), col("x").as("nb")))
-      .localCheckpoint(true), // adjacency: wedge sides + anti-join + degrees
+    val sym = Layout.spread(Materialize.shared()(
+        und.select(col("x").as("node"), col("y").as("nb"))
+          .union(und.select(col("y").as("node"), col("x").as("nb")))),
       col("node"))
     val deg = sym.groupBy("node").agg(count(lit(1)).as("d"))
     // d >= 2: a degree-1 node can never be a wedge apex, and ln(1) = 0
@@ -387,9 +387,7 @@ object Graph {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val und = undirected(edges, srcCol, dstCol)
-      // referenced by degrees, orientation, and the wedge-closing join
-      .localCheckpoint(true)
+    val und = Materialize.shared()(undirected(edges, srcCol, dstCol))
     val deg = und.select(explode(array(col("x"), col("y"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
     val withDeg = und
@@ -397,13 +395,12 @@ object Graph {
       .join(deg.select(col("node").as("y"), col("degree").as("dy")), "y")
     // same wedge fan-out guard as adamicAdar (r18): spread the self-join's
     // input so the quadratic-output wedge enumeration is not one task
-    val oriented = Layout.spread(withDeg.select(
+    val oriented = Layout.spread(Materialize.shared()(withDeg.select(
         when(col("dx") < col("dy") ||
             (col("dx") === col("dy") && col("x") < col("y")),
           struct(col("x").as("s"), col("y").as("t")))
           .otherwise(struct(col("y").as("s"), col("x").as("t"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"))
-      .localCheckpoint(true), // both wedge sides read it
+      .select(col("e.s").as("s"), col("e.t").as("t"))),
       col("s"))
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.s") === col("e2.s") && col("e1.t") < col("e2.t"))

@@ -154,20 +154,17 @@ object Layout {
       s"exactNtile: input columns ${clash.mkString(", ")} collide with its reserved " +
         s"working columns (${NtileReserved.mkString(", ")}); rename them first")
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // The range exchange is materialized ONCE (eager localCheckpoint, the
-    // repo's single-JVM stand-in for a temp-table write) and BOTH consumers
-    // read that one physical layout. Without it, column pruning gives the
-    // counts subtree and the ranked subtree two non-identical
+    // Both consumers must read ONE physical range layout, a correctness
+    // barrier, not a cache. Without it, column pruning gives the counts
+    // subtree and the ranked subtree two non-identical
     // RepartitionByExpression children, ReuseExchange cannot merge them,
     // and each instance's RangePartitioner draws its own boundary SAMPLE
     // (seeded by rdd.id — different per instance and per run): when the two
     // boundary sets disagree, pass-1 counts describe a layout pass-2 never
     // had, ranks go off by the difference, and a tile boundary moves —
     // observed as a 1-in-several-runs q85 files_seq oracle mismatch (57 vs
-    // 58) before this fix. Consistency here is CORRECTNESS, not caching;
-    // the materialization is inside the timed region like every other
-    // construction-time checkpoint in the catalog.
-    val part = df.repartitionByRange(width, sortKeys: _*).localCheckpoint(true)
+    // 58) before this fix.
+    val part = Materialize.shared()(df.repartitionByRange(width, sortKeys: _*))
     val counts = part
       .groupBy(spark_partition_id().as("__pid"))
       .agg(count(lit(1)).as("__cnt"))

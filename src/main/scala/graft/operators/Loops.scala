@@ -4,7 +4,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,35 +30,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * the materialized frontier is the lineage truncation point, and the
   * one before it is released.
   *
-  * Truncation is `localCheckpoint` by default: blocks live in executor
-  * memory/disk with NO lineage behind them — fast, no distributed-
-  * filesystem round-trip, and exactly right on local[k] or short loops.
-  * But on a real cluster a lost executor loses its localCheckpoint blocks
-  * UNRECOVERABLY (the lineage that could recompute them was truncated
-  * away), failing the whole job mid-loop; at 1000 executors over a long
-  * loop, executor churn is routine, not exceptional.
-  *
-  * Setting `graft.loops.reliableCheckpoint=true` (a runtime session conf)
-  * switches every truncation to RELIABLE checkpointing into the context's
-  * checkpoint directory (`SparkContext.setCheckpointDir`, HDFS/object-
-  * store-backed on a cluster), which survives any executor loss. The
-  * results are IDENTICAL either way (LoopsSpec pins this); only the
-  * storage of the frontier changes. The knob is read per call, so a
-  * long-running session can turn it on for a big job and off again.
+  * Truncation follows [[Materialize]]'s one rule: `localCheckpoint` by
+  * default, fast and exactly right on local[k] or short loops, but a lost
+  * executor loses its blocks with no lineage left to recompute them, which
+  * fails the whole job mid-loop; at 1000 executors over a long loop,
+  * executor churn is routine, not exceptional. With
+  * `Materialize.ReliableConfKey` on, every frontier and the loop's result
+  * go to reliable checkpoint storage instead. The results are IDENTICAL
+  * either way (LoopsSpec pins this); only the storage changes. The conf
+  * is read per call, as for every frame `Materialize` checkpoints.
   */
 object Loops {
-
-  /** Session conf key; values "true"/"false" (default false). */
-  val ReliableConfKey = "graft.loops.reliableCheckpoint"
-
-  def reliable(spark: SparkSession): Boolean = {
-    val on = spark.conf.get(ReliableConfKey, "false").toBoolean
-    if (on && spark.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        s"$ReliableConfKey=true requires SparkContext.setCheckpointDir " +
-          "(reliable storage for round frontiers)")
-    on
-  }
 
   /** Rounds between materializations of a frontier in a loop without a
     * convergence read. A run of at most this many rounds is one Spark
@@ -84,16 +66,13 @@ object Loops {
 
   /** Runs `body` on a fresh [[Loop]] over `input` and returns the rows it
     * builds as a frame with fresh attribute ids, materialized once
-    * (reliable checkpoint storage when the session asks for it). The
-    * loop's persisted RDDs are released after, or when `body` throws. */
+    * ([[Materialize.shared]]). The loop's persisted RDDs are released
+    * after, or when `body` throws. */
   private[operators] def run(input: DataFrame, schema: StructType)(
       body: Loop => RDD[Row]): DataFrame = {
     val loop = new Loop(input)
-    try {
-      val df = input.sparkSession.createDataFrame(body(loop), schema)
-      if (reliable(df.sparkSession)) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    } finally loop.release()
+    try Materialize.shared()(input.sparkSession.createDataFrame(body(loop), schema))
+    finally loop.release()
   }
 
   /** The order Spark SQL sorts `dt` values in, for loops that take a min
@@ -175,7 +154,7 @@ object Loops {
       * instead of RECOMPUTING the round (`localCheckpoint` is a persist
       * itself). */
     private def materialize[T](rdd: RDD[_])(action: => T): T = {
-      if (reliable(input.sparkSession)) {
+      if (Materialize.reliable(input.sparkSession)) {
         rdd.persist(StorageLevel.MEMORY_AND_DISK)
         rdd.checkpoint()
       } else rdd.localCheckpoint()

@@ -160,7 +160,7 @@ object Analytics extends QueryModule {
     // inlining would expand the chain EXPONENTIALLY (2^16 base scans —
     // observed as a too-many-open-files explosion). Materializing each
     // round keeps the oracle linear in rounds, like the Spark loop's
-    // per-round localCheckpoint.
+    // per-round frontier checkpoint.
     val loop = (1 to KCoreRounds).map { i =>
       s""", keep${i - 1} AS MATERIALIZED (SELECT n FROM (
             SELECT n, count(*) AS d FROM (

@@ -144,10 +144,8 @@ object Sketch extends QueryModule {
           .filter(length($"token") > 0)
           .groupBy($"token").agg(count(lit(1)).as("exact_n"))
         Materialize.shared(counts) {
-          // top feeds two consumers (probe build + the final join); the
-          // eager checkpoint pins its 20 rows
-          val top = counts.orderBy($"exact_n".desc, $"token").limit(20)
-            .localCheckpoint(true)
+          val top = Materialize.shared()(
+            counts.orderBy($"exact_n".desc, $"token").limit(20))
           val cells = Sketches.cmsCellsWeighted(
             counts, Seq.empty, $"token", $"exact_n", D, W)
           Sketches.cmsQuery(cells, Seq.empty, top, $"token", D, W)
@@ -534,20 +532,19 @@ object Sketch extends QueryModule {
     QueryDef("q164_hyperball_2hop",
       (s, dir) => {
         import s.implicits._
-        val edges = Graph.coEngagementEdges(t(s, dir, "events"))
-          .localCheckpoint(true) // feeds ball-1 items AND the propagation
+        val edges = Materialize.shared()(Graph.coEngagementEdges(t(s, dir, "events")))
         val sym = edges.select($"src".as("node"), $"dst".as("nb"))
           .union(edges.select($"dst".as("node"), $"src".as("nb")))
         val ball1 = sym.select($"node", $"node".as("item"))
           .union(sym.select($"node", $"nb".as("item")))
-        // Spread of the checkpointed register table (r18, guide §2.5): the
+        // Spread of the materialized register table (r18, guide §2.5): the
         // propagation join's INPUT is small, so AQE coalesced it to 2 tasks
         // while its OUTPUT fans out to edges x 64 buckets — profiled at
         // 2.3 s in 2 tasks (13.6 MB of partial-agg output from 7.3 MB in).
         // The spread sits over the checkpoint's Scan ExistingRDD (no known
         // partitioning), so the optimizer cannot elide it.
-        val r1 = Layout.spread(Sketches.hllRegisters(ball1, Seq("node"), $"item", B)
-          .localCheckpoint(true), // self term + per-neighbor term
+        val r1 = Layout.spread(
+          Materialize.shared()(Sketches.hllRegisters(ball1, Seq("node"), $"item", B)),
           $"node")
         val propagated = r1.union(
           sym.join(r1.withColumnRenamed("node", "nb"), "nb")

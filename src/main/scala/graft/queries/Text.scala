@@ -818,15 +818,14 @@ object Text extends QueryModule {
         // inlines a projection into the nested-loop join's filter, so without
         // a barrier every one of the ~125k pairs would recompute BOTH sides'
         // shingle-building (measured 6.7 s -> 1.6 s for the pair scan). The
-        // spread gives the 500 rows the session width before the eager
-        // localCheckpoint (the q72 lifecycle) pins them, so the pair scan
-        // runs one task per core. A widthless repartition would be coalesced
-        // by AQE to one partition, and the scan with it (PROFILING.md, "q69:
-        // the pair scan on one task").
+        // spread gives the 500 rows the session width before they are
+        // materialized, so the pair scan runs one task per core. A widthless
+        // repartition would be coalesced by AQE to one partition, and the
+        // scan with it (PROFILING.md, "q69: the pair scan on one task").
         val shingled = docs
           .select($"doc_id", TextFunctions.distinctShingles($"text", 3).as("sh"))
           .withColumn("ln", size($"sh"))
-        val sh = Layout.spread(shingled, col("doc_id")).localCheckpoint(true)
+        val sh = Materialize.shared()(Layout.spread(shingled, col("doc_id")))
         // The set intersect dominates the exhaustive scan — and left in one
         // plan the optimizer merges the Jaccard filter INTO the nested-loop
         // join condition AHEAD of the cheap predicates (plan-audited), so the
@@ -835,28 +834,24 @@ object Text extends QueryModule {
         // round(j,6) >= 0.9 forces |A∩B| >= 0.8999995·|A∪B|, and
         // min(|A|,|B|) >= |A∩B|, max(|A|,|B|) <= |A∪B|, so any qualifying
         // pair has min >= 0.8999·max (the AllPairs/PPJoin family bound) —
-        // two int compares prune 125k -> ~15k pairs inside the join; (2) an
-        // eager checkpoint of the pruned pair frame as a barrier so the
-        // intersect evaluates ONCE per surviving pair in a codegen'd
-        // projection, never inside the join condition. The oracle needs no
-        // mirror: neither cut can drop a qualifying pair, so both sides
-        // still compute the identical count. high feeds two consumers (its
-        // own count + the anti-join); checkpointing also means the pair scan
-        // runs once, not twice.
-        val pruned = sh.as("a").join(sh.as("b"),
+        // two int compares prune 125k -> ~15k pairs inside the join; (2) a
+        // materialized pruned pair frame as a barrier so the intersect
+        // evaluates ONCE per surviving pair in a codegen'd projection, never
+        // inside the join condition. The oracle needs no mirror: neither cut
+        // can drop a qualifying pair, so both sides still compute the
+        // identical count.
+        val pruned = Materialize.shared()(sh.as("a").join(sh.as("b"),
             col("a.doc_id") < col("b.doc_id") &&
               least(col("a.ln"), col("b.ln")).cast("double") >=
                 greatest(col("a.ln"), col("b.ln")).cast("double") * lit(0.8999))
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
             col("a.sh").as("sh_a"), col("b.sh").as("sh_b"),
-            (col("a.ln") + col("b.ln")).cast("double").as("sz"))
-          .localCheckpoint(true)
-        val high = pruned
+            (col("a.ln") + col("b.ln")).cast("double").as("sz")))
+        val high = Materialize.shared()(pruned
           .withColumn("inter", size(array_intersect($"sh_a", $"sh_b")).cast("double"))
           .filter(round(when($"sz" - $"inter" > 0.0, $"inter" / ($"sz" - $"inter"))
             .otherwise(0.0), 6) >= 0.9)
-          .select($"id_a", $"id_b")
-          .localCheckpoint(true)
+          .select($"id_a", $"id_b"))
         val missed = high.join(cand, Seq("id_a", "id_b"), "left_anti")
         cand.agg((count(lit(1)) > 0).as("has_pairs"))
           .crossJoin(high.agg(count(lit(1)).as("highsim_pairs")))
@@ -2135,10 +2130,9 @@ object Text extends QueryModule {
     QueryDef("q107_split_leakage",
       (s, dir) => {
         import s.implicits._
-        val split = graft.operators.Sampling.deterministicSplit(
+        val split = Materialize.shared()(graft.operators.Sampling.deterministicSplit(
             t(s, dir, "documents"), valFraction = 0.1)
-          .select($"doc_id", $"split", md5($"text").as("fingerprint"))
-          .localCheckpoint(true) // tiny (id, split, fp) triple; feeds 2 aggs
+          .select($"doc_id", $"split", md5($"text").as("fingerprint")))
         val perSplit = split.groupBy($"split")
           .agg(count(lit(1)).as("n_docs"),
             countDistinct($"fingerprint").as("n_fingerprints"))
@@ -2175,11 +2169,10 @@ object Text extends QueryModule {
     QueryDef("q109_source_overlap",
       (s, dir) => {
         import s.implicits._
-        val sg = t(s, dir, "documents")
+        val sg = Materialize.shared()(t(s, dir, "documents")
           .select($"source", explode(
             TextFunctions.distinctShingles($"text", 3)).as("gram"))
-          .distinct()
-          .localCheckpoint(true) // feeds sizes + both join sides: scan once
+          .distinct())
         val sizes = sg.groupBy($"source").agg(count(lit(1)).as("n"))
         val inter = sg.as("a")
           .join(sg.as("b"),
@@ -2253,18 +2246,13 @@ object Text extends QueryModule {
     QueryDef("q111_chunk_dedup",
       (s, dir) => {
         import s.implicits._
-        val chunks = t(s, dir, "documents")
+        val chunks = Materialize.shared()(t(s, dir, "documents")
           .select($"doc_id", TextFunctions.tokens($"text").as("ws"))
           .select($"doc_id",
             explode(sequence(lit(1), greatest(size($"ws"), lit(1)),
               lit(ChunkStride))).as("start_token"), $"ws")
           .select($"doc_id",
-            md5(array_join(slice($"ws", $"start_token", lit(ChunkSize)), " ")).as("fp"))
-          // the expensive stage (window slice + join + md5 over ~1.3x corpus
-          // tokens) feeds BOTH the repeat aggregate and the join-back — pin
-          // the narrow (doc_id, fp) result so it computes once (q107's
-          // two-consumer pattern)
-          .localCheckpoint(true)
+            md5(array_join(slice($"ws", $"start_token", lit(ChunkSize)), " ")).as("fp")))
         val repeats = chunks.groupBy($"fp").agg(count(lit(1)).as("cnt"))
         chunks.join(repeats, "fp")
           .groupBy($"doc_id")
@@ -2524,9 +2512,8 @@ object Text extends QueryModule {
       (s, dir) => {
         import s.implicits._
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.minhashNearDups(docs, threshold = 0.5)
-          .select($"id_a", $"id_b")
-          .localCheckpoint(true) // feeds clustering AND the crossing audit
+        val pairs = Materialize.shared()(
+          Dedup.minhashNearDups(docs, threshold = 0.5).select($"id_a", $"id_b"))
         val clusters = Dedup.nearDupClusters(pairs)
         val labeled = graft.operators.Sampling.deterministicSplit(
           docs.select($"doc_id").join(clusters, Seq("doc_id"), "left")
@@ -2587,9 +2574,8 @@ object Text extends QueryModule {
         // that divergence; on this fixture no bucket approaches the cap. Incremental PAIR generation at O(batch) is q100/
         // crossNearDups' contract; incremental LABEL maintenance is this
         // query's.
-        val allPairs = Dedup.minhashNearDups(docs, threshold = 0.5)
-          .select($"id_a", $"id_b")
-          .localCheckpoint(true) // split three ways below; compute once
+        val allPairs = Materialize.shared()(
+          Dedup.minhashNearDups(docs, threshold = 0.5).select($"id_a", $"id_b"))
         val bothOld = ($"id_a" % 5 =!= 0) && ($"id_b" % 5 =!= 0)
         val oldLabels = Dedup.nearDupClusters(allPairs.filter(bothOld))
         val merged = Dedup.mergeClusters(oldLabels, allPairs.filter(!bothOld))

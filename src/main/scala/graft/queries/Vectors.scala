@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
-import graft.operators.Similarity
+import graft.operators.{Materialize, Similarity}
 
 /** Similarity search over the `embeddings` fixture. Exact variants are
   * oracle-checked with explicit index-ordered double arithmetic on both
@@ -706,8 +706,7 @@ object Vectors extends QueryModule {
         import s.implicits._
         val emb = t(s, dir, "embeddings")
         val wm = Similarity.fitWhitening(emb)
-        val rot = Similarity.rotateForAnn(emb, wm)
-          .localCheckpoint(true) // index + queries + contract all read it
+        val rot = Materialize.shared()(Similarity.rotateForAnn(emb, wm))
         val res = Similarity.ivfPqKnnJoin(rot, rot.filter($"vec_id" < 5),
           k = 3, nProbe = 3, rerank = 12)
         val drift = res

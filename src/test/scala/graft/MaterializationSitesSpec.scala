@@ -14,9 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * old one into a shared rule first. */
 class MaterializationSitesSpec extends AnyFunSuite {
 
-  private val Max = 44
+  private val Max = 21
   private val Site = """\.(persist|localCheckpoint|checkpoint|unpersist|cache)\(""".r
-  private val Persist = """\.(persist|cache)\(""".r
+  // every way an operator or query can store a frame: a cache, or a
+  // checkpoint, local or reliable
+  private val Owned = """\.(persist|cache|localCheckpoint|checkpoint)\(""".r
   private val root = Paths.get("src/main/scala")
 
   /** Lines matching `re` per file under `dir`, files with none left out. */
@@ -40,9 +42,9 @@ class MaterializationSitesSpec extends AnyFunSuite {
   test("operators and queries persist only through Materialize and Loops") {
     val owners = Set("graft/operators/Materialize.scala", "graft/operators/Loops.scala")
     val others = Seq("operators", "queries")
-      .flatMap(d => sites(root.resolve(s"graft/$d"), Persist))
+      .flatMap(d => sites(root.resolve(s"graft/$d"), Owned))
       .filterNot { case (f, _) => owners(f) }
-    assert(others.isEmpty, "persist outside the materialization scope: " +
+    assert(others.isEmpty, "persist or checkpoint outside Materialize and Loops: " +
       others.map { case (f, n) => s"$f $n" }.mkString(", "))
   }
 }

@@ -1,11 +1,16 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Catalog-wide contract: every query runs on sf0.001, returns rows, and
-  * (the driver's hashing requirement) every oracle references only columns
-  * the Spark result actually produces. Value-level equivalence is covered by
-  * the DuckDB gate (tools/check_oracle.py). */
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd}
+
+import graft.{Sessions, SparkEntry, SparkSpec}
+
+/** Catalog-wide contract: every query runs on sf0.001, returns rows, leaves
+  * no cached frame and runs no failed job, and (the oracle gate's hashing
+  * requirement) every oracle references only columns the Spark result
+  * actually produces. Value-level equivalence is covered by the DuckDB gate
+  * (tools/check_oracle.py). */
 class CatalogSpec extends SparkSpec {
 
   test("catalog names are unique and well-formed") {
@@ -76,19 +81,35 @@ class CatalogSpec extends SparkSpec {
     // ONE-ROW exactness/recall aggregate (shape (a))
     "q196_capped_index_spans")
 
+  private lazy val cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
   for (q <- SparkEntry.catalog) {
     test(s"${q.name} executes on sf0.001 with rows > 0 and a scale-safe plan") {
-      val df = q.fn(spark, sf0001)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"),
-        s"${q.name}: CartesianProduct in physical plan — never acceptable " +
-          "at scale; express the pairing as an equi/bucket join")
-      if (!deliberateBnlj(q.name))
-        assert(!plan.contains("BroadcastNestedLoopJoin"),
-          s"${q.name}: unexpected BroadcastNestedLoopJoin — if the loop " +
-            "side is provably bounded (scalar aggregate / capped query " +
-            "set), add the query to deliberateBnlj with a justification")
-      assert(df.count() > 0)
+      // a failed job can hide behind a retry or a caught exception and
+      // still leave rows; count every job end that did not succeed
+      val failed = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          if (e.jobResult != JobSucceeded) failed.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val df = q.fn(spark, sf0001)
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("CartesianProduct"),
+          s"${q.name}: CartesianProduct in physical plan — never acceptable " +
+            "at scale; express the pairing as an equi/bucket join")
+        if (!deliberateBnlj(q.name))
+          assert(!plan.contains("BroadcastNestedLoopJoin"),
+            s"${q.name}: unexpected BroadcastNestedLoopJoin — if the loop " +
+              "side is provably bounded (scalar aggregate / capped query " +
+              "set), add the query to deliberateBnlj with a justification")
+        assert(df.count() > 0)
+        assert(cacheManager.isEmpty, s"${q.name}: a cached frame outlived the query")
+        Sessions.drainListeners(spark.sparkContext)
+        assert(failed.get === 0, s"${q.name}: ${failed.get} jobs failed while it ran")
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 
