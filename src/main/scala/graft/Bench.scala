@@ -534,15 +534,10 @@ object Bench {
     // Rep hygiene (r12 verdict #6, the q59 smear): the iterative operators
     // return frames backed by a persisted final-round RDD (eager
     // localCheckpoint) that no caller can unpersist, so every rep of a
-    // CC-loop query stacked one more frontier into storage. Dropping every
-    // persistent RDD between evaluations is safe — each evaluation
-    // rebuilds its plan from scratch. localCheckpoint RDDs ARE reachable
-    // here: RDD.localCheckpoint persists the source RDD, which registers
-    // it in the context's persistentRdds map (pinned by BenchHygieneSpec).
-    // blocking: removal completes HERE, not inside the next rep's window.
+    // CC-loop query stacked one more frontier into storage. Blocking:
+    // removal completes HERE, not inside the next rep's window.
     def dropPersisted(): Unit =
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      try Sessions.dropPersisted(spark.sparkContext)
       catch { case _: Throwable => () }
 
     val results = names.zipWithIndex.map { case (name, qi) =>

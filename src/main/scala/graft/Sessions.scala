@@ -6,8 +6,9 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** The one place an entry point builds its SparkSession, and the one fence
-  * on the listener bus that its instruments read behind. */
+/** The one place an entry point builds its SparkSession, the one fence on
+  * the listener bus that its instruments read behind, and the one sweep
+  * of persisted RDDs between measured runs. */
 object Sessions {
 
   /** A local session for `app`. The rule, with the environment unset or set:
@@ -60,4 +61,12 @@ object Sessions {
       sc.removeSparkListener(l)
     }
   }
+
+  /** Unpersists every persisted RDD of `sc`, blocking until the blocks are
+    * removed, so the next measured run starts from empty storage. Frames
+    * returned materialized (a `localCheckpoint`, which persists its source
+    * RDD) are among them (BenchHygieneSpec pins this); dropping them is safe
+    * between runs, each of which builds its plan from scratch. */
+  def dropPersisted(sc: SparkContext): Unit =
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
 }

@@ -233,18 +233,15 @@ object Decontamination {
       evalDocs: DataFrame,
       minLen: Int = 40,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      broadcastIndex: Boolean = false): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val d = Dedup.exactSubstrGrams(docs, minLen, textCol, idCol)
       .select(col("id").as("__did"), col("gh"))
     val e = Dedup.exactSubstrGrams(evalDocs, minLen, textCol, idCol)
       .select(col("id").as("eval_id"), col("gh"))
-    // `broadcastIndex`: eval benchmark suites are small and FIXED-size
-    // (they don't grow with the corpus), so at ingest scale the right plan
-    // broadcasts the eval gram index and the 100 TB corpus side stays a
-    // map-only scan — gram projection feeding a BroadcastHashJoin, zero
-    // corpus-side exchange. Left false for corpus-sized eval sets.
-    val ej = if (broadcastIndex) org.apache.spark.sql.functions.broadcast(e) else e
-    d.join(ej, Seq("gh")).select(col("__did").as(idCol), col("eval_id"))
+    // Bound: the eval gram index is broadcast, 16 bytes per eval character.
+    // Eval benchmark suites are small and FIXED-size (they do not grow with
+    // the corpus), so the 100 TB corpus side stays a map-only scan — gram
+    // projection feeding a BroadcastHashJoin, zero corpus-side exchange.
+    d.join(broadcast(e), Seq("gh")).select(col("__did").as(idCol), col("eval_id"))
   }
 }

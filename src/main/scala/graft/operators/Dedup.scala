@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project,
+  Window => LogicalWindow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import org.apache.spark.sql.graft.ArrayExpressions
 
@@ -42,9 +45,9 @@ object Dedup {
   /** Rows dropped by a bucket-occupancy cap, and how many buckets hit it. */
   final case class BucketCapStats(droppedRows: Long, cappedBuckets: Long)
 
-  /** Dropped-row accounting for [[capBuckets]]: one small aggregate over the
-    * banded frame (whose expensive upstream the callers persist), exposed so
-    * cap behavior is observable/testable rather than silent. */
+  /** Dropped-row accounting for the [[bucketPairs]] cap: one small
+    * aggregate over the band frame, exposed so cap behavior is
+    * observable/testable rather than silent. */
   private[operators] def bucketCapStats(
       banded: DataFrame, keys: Seq[String], cap: Int): BucketCapStats = {
     val r = banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("occ"))
@@ -55,15 +58,20 @@ object Dedup {
     BucketCapStats(r.getLong(0), r.getLong(1))
   }
 
-  /** Bound a banded frame against degenerate buckets: keep at most `cap`
-    * members per bucket (the cap first ids — deterministic), so each bucket
-    * contributes at most C(cap, 2) candidate pairs and candidate generation
-    * stays near-linear in n even when a pathological corpus puts millions of
-    * near-identical docs into one bucket. Capping loses only the dropped
-    * members' pairs within that bucket — recall, never precision (candidates
-    * are refined with exact Jaccard downstream); run [[exact]] dedup first so
-    * byte-identical docs collapse to one representative before they can
-    * saturate a bucket. cap <= 0 disables.
+  /** The [[bucketPairs]] cap: keep at most `cap` members per bucket, so
+    * each bucket contributes at most C(cap, 2) candidate pairs and
+    * candidate generation stays near-linear in n even when a pathological
+    * corpus puts millions of near-identical docs into one bucket. Capping
+    * loses only the dropped members' pairs within that bucket — recall,
+    * never precision (candidates are refined exactly downstream); run
+    * [[exact]] dedup first so byte-identical docs collapse to one
+    * representative before they can saturate a bucket. cap <= 0 disables.
+    *
+    * Survivors are the first `cap` rows by `id`, then by the frame's other
+    * non-key columns: a total order on any frame of distinct rows, so
+    * WHICH rows survive never depends on shuffle order, also where one id
+    * holds several rows of a bucket (a doc repeating a shared gram: the
+    * gram frames order by `pos` next).
     *
     * No silent truncation: when any bucket exceeds the cap, the dropped row
     * and bucket counts are computed ([[bucketCapStats]]) and logged at WARN.
@@ -83,34 +91,21 @@ object Dedup {
     * Binomial(m, f) sampled members — mean >= 32 for any m >= cap, so
     * P(probe < 8) < 1e-7 (Chernoff); a healthy bucket (m <= 8, measured 4 on
     * the fixtures) triggers with p < 1e-11. A missed degenerate bucket costs
-    * performance only — candidates are refined with exact Jaccard
-    * downstream, so the cap never affects precision. The sample is
-    * seed-pinned, so a given input always takes the same path. Caps under 64
-    * keep the r6 behavior (exact stats pass first — the probe would need
-    * most of the frame anyway, and spec-sized caps stay deterministic).
+    * performance only. The sample is seed-pinned, so a given input always
+    * takes the same path. Caps under 64 keep the r6 behavior (exact stats
+    * pass first — the probe would need most of the frame anyway, and
+    * spec-sized caps stay deterministic).
     *
-    * `exactGuard = true` skips the sampled probe and always runs the exact
-    * occupancy pass: the probe makes the cap a with-overwhelming-probability
-    * bound, not a hard one (a bucket only modestly over a large cap could in
-    * principle slip the occ>=8 filter) — callers whose CONTRACT promises
-    * "at most cap members per bucket" (coEngagementEdges) opt into the
-    * exact pass; the LSH/signature generators keep the probe (their cap is
-    * a performance guard, and their healthy-path cost matters).
-    *
-    * `tiebreakers` completes the survivor order when `id` alone is not a
-    * key within a bucket (one doc contributing several rows — a doc
-    * repeating a shared gram in the gh-keyed frames): row_number over a
-    * non-total order makes WHICH rows survive the cap run-dependent.
-    * Callers whose frames can repeat ids per bucket pass the disambiguating
-    * columns (the gram frames pass `pos`); the banded LSH/signature/
-    * fingerprint frames are one-row-per-doc-per-bucket by construction. */
-  private[operators] def capBuckets(
+    * `exactGuard` skips the probe and always runs the exact occupancy
+    * pass: the probe makes the cap a with-overwhelming-probability bound,
+    * not a hard one, so a caller whose contract promises "at most cap
+    * members per bucket" (coEngagementEdges) asks for the exact pass. */
+  private def capBuckets(
       banded: DataFrame,
       keys: Seq[String],
       cap: Int,
       opName: String,
-      exactGuard: Boolean = false,
-      tiebreakers: Seq[String] = Nil): DataFrame = {
+      exactGuard: Boolean): DataFrame = {
     if (cap <= 0) return banded
     if (cap >= 64 && !exactGuard) {
       val f = 32.0 / cap
@@ -125,50 +120,67 @@ object Dedup {
     log.warn(s"$opName: bucket occupancy cap $cap dropped ${stats.droppedRows} " +
       s"banded rows across ${stats.cappedBuckets} degenerate buckets " +
       "(recall-only loss; run Dedup.exact first to collapse identical docs)")
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(("id" +: tiebreakers).map(col): _*)
+    val order = "id" +: banded.columns.filterNot(c => c == "id" || keys.contains(c))
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order.map(col): _*)
     banded.withColumn("occ_rank", row_number().over(w))
       .filter(col("occ_rank") <= cap)
       .drop("occ_rank")
   }
 
-  /** The one bucket join behind every LSH and signature candidate
-    * generator: `bands` (an `id` column plus the bucket `keys`) joins
-    * itself on the keys with `l.id < r.id`, or, given `other`, joins
-    * `other` on the keys (a cross-side join; only `bands` is capped).
-    * `pairs` turns the joined rows, aliased `l` and `r`, into the
-    * generator's output.
+  /** The one bucket join behind every candidate generator, span join and
+    * co-engagement edge: `bands` (an `id` column plus the bucket `keys`)
+    * joins itself on the keys with `l.id < r.id`, or, given `other`, joins
+    * `other` on the keys (a cross-side join; only `bands` is capped, see
+    * [[capBuckets]]). `pairs` turns the joined rows, aliased `l` and `r`,
+    * into the caller's output.
     *
     * With the cap on, `bands` has two readers, the cap's occupancy check
     * and the join: the call runs in a [[Materialize.shared]] scope over it,
-    * whose first action is the check. With the cap off nothing is
-    * persisted and the pairs stay lazy, so the call runs no job: each side
-    * of a cross join reads its frame once, and the self-join is a
-    * sort-merge join whose two sides are one reused exchange (a broadcast
-    * join would compute the frame once for the broadcast and again on the
-    * streamed side). Either way the band frame is computed once per
-    * action. */
+    * whose first action is the check. A `bands` that is already cached
+    * belongs to an enclosing scope, which also materializes the result, so
+    * the call opens no scope of its own. With the cap off nothing is
+    * persisted and the pairs stay lazy, so the call runs no job. Each side
+    * of a cross join reads its frame once.
+    *
+    * A self-join is forced to sort-merge, whose two sides are one reused
+    * exchange, unless `bands` is read as it is by both sides of a
+    * broadcast join: a cached frame, or one whose top, under projections
+    * and filters, is a window or an aggregate, so that its rows come
+    * straight off its own exchange. Any other frame would run its map steps
+    * (a scan, an explode, a kernel) once for the broadcast and again on the
+    * streamed side. Where the frame is read as it is the planner picks: a
+    * forced sort-merge join over a cache measured one job more per call
+    * (its sides read the cache as two stages, not one reused exchange), and
+    * over co-engagement's top-K window one stage more (a broadcast join
+    * keeps the window's user partitioning, which the pair count reuses).
+    * Either way the band frame's scan and map steps run once per action. */
   private[operators] def bucketPairs(
       bands: DataFrame,
       keys: Seq[String],
       cap: Int,
       opName: String,
-      other: Option[DataFrame] = None)(pairs: DataFrame => DataFrame): DataFrame = {
+      other: Option[DataFrame] = None,
+      exactGuard: Boolean = false)(pairs: DataFrame => DataFrame): DataFrame = {
+    def cached = bands.storageLevel != StorageLevel.NONE
+    def offExchange(p: LogicalPlan): Boolean = p match {
+      case Project(_, c) => offExchange(c)
+      case Filter(_, c) => offExchange(c)
+      case _: Aggregate | _: LogicalWindow => true
+      case _ => false
+    }
     def join(): DataFrame = {
-      val capped = capBuckets(bands, keys, cap, opName)
+      val capped = capBuckets(bands, keys, cap, opName, exactGuard)
       val on = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
       val l = capped.as("l")
       pairs(other match {
         case Some(o) => l.join(o.as("r"), on)
         case None =>
-          // cached: the planner picks (a forced sort-merge join over the
-          // cache measured one job more per call: its sides read it as two
-          // stages, not one reused exchange)
-          val side = if (cap > 0) l else l.hint("shuffle_merge")
+          val readAsIs = cached || offExchange(bands.queryExecution.analyzed)
+          val side = if (readAsIs) l else l.hint("shuffle_merge")
           side.join(capped.as("r"), on && col("l.id") < col("r.id"))
       })
     }
-    if (cap > 0) Materialize.shared(bands)(join()) else join()
+    if (cap > 0 && !cached) Materialize.shared(bands)(join()) else join()
   }
 
   /** Exact duplicate groups by normalized-content fingerprint. */
@@ -352,7 +364,7 @@ object Dedup {
     *               p=1-0.9^4~=0.34, but misses all 16 with p~=3e-8 (pinned in
     *               DedupSpec's short-doc test).
     * @param maxBucket degenerate-bucket guard: at most this many members per
-    *               (band, bucket) join the self-join (see [[capBuckets]];
+    *               (band, bucket) join the self-join (see [[bucketPairs]];
     *               drops are logged, never silent). <= 0 disables.
     */
   def minhashCandidates(
@@ -791,43 +803,52 @@ object Dedup {
       minLen: Int,
       maxBucket: Int = 0): DataFrame = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    Materialize.shared(grams) {
-      // gram hashes present in >= 2 distinct docs: min != max avoids a
-      // count(distinct) expansion; partial aggregation collapses each
-      // partition's repeats before the shuffle
-      val shared = grams.groupBy(col("gh"))
-        .agg(min(col("id")).as("mn"), max(col("id")).as("mx"))
-        .filter(col("mn") =!= col("mx"))
-        .select(col("gh"))
-      // The candidate frame is shared by the self-join (r15): both join
-      // sides referencing an un-materialized `cand` re-plan its whole
-      // subtree — the shared-hash aggregate (a full gh shuffle of the gram
-      // frame, the heaviest exchange here) and the prefilter join each ran
-      // TWICE (verified in the executed plan: two ShuffleQueryStages for the
-      // same min/max aggregate). Materializing cand runs each once; the
-      // cache holds only duplicated-gram rows (a tiny fraction of any real
-      // corpus, and cap-bounded on degenerate ones). At sf0.1 the A/B is a
-      // wash (3.74 vs 3.73 s min-of-3 — the duplicate aggregate hides inside
-      // host noise at fixture scale); the win is the structural one: one
-      // full-corpus-frame shuffle removed, which is what survives a 100x
-      // scale-up.
-      val cand = capBuckets(grams.join(shared, Seq("gh")), Seq("gh"),
-        maxBucket, "exactSubstrSpans", tiebreakers = Seq("pos"))
-      Materialize.shared(cand) {
-        val m = cand.as("a").join(cand.as("b"),
-            col("a.gh") === col("b.gh") && col("a.id") < col("b.id"))
-          .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-            col("a.pos").as("pos_a"), (col("a.pos") - col("b.pos")).as("diag"))
-        val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("diag"))
-          .orderBy(col("pos_a"))
-        m.withColumn("run_id", col("pos_a") - row_number().over(w))
-          .groupBy(col("doc_a"), col("doc_b"), col("diag"), col("run_id"))
-          .agg(min(col("pos_a")).as("start_a"), count(lit(1)).as("n_anchor"))
-          .select(col("doc_a"), col("doc_b"), col("start_a"),
-            (col("start_a") - col("diag")).as("start_b"),
-            (col("n_anchor") + (minLen - 1)).as("span_len"))
+    // gram hashes present in >= 2 distinct docs: min != max avoids a
+    // count(distinct) expansion; partial aggregation collapses each
+    // partition's repeats before the shuffle
+    val shared = grams.groupBy(col("gh"))
+      .agg(min(col("id")).as("mn"), max(col("id")).as("mx"))
+      .filter(col("mn") =!= col("mx"))
+      .select(col("gh"))
+    // The candidate frame is shared by the self-join (r15): both join
+    // sides referencing an un-materialized `cand` re-plan its whole
+    // subtree — the shared-hash aggregate (a full gh shuffle of the gram
+    // frame, the heaviest exchange here) and the prefilter join each ran
+    // TWICE (verified in the executed plan: two ShuffleQueryStages for the
+    // same min/max aggregate). Caching cand runs each once, and
+    // bucketPairs reads the cache as it is; the cache holds only
+    // duplicated-gram rows (a tiny fraction of any real corpus). At sf0.1
+    // the A/B is a wash (3.74 vs 3.73 s min-of-3 — the duplicate aggregate
+    // hides inside host noise at fixture scale); the win is the structural
+    // one: one full-corpus-frame shuffle removed, which is what survives a
+    // 100x scale-up.
+    val cand = grams.join(shared, Seq("gh"))
+    Materialize.shared(grams, cand) {
+      bucketPairs(cand, Seq("gh"), maxBucket, "exactSubstrSpans") { j =>
+        anchorSpans(j.select(col("l.id").as("doc_a"), col("r.id").as("doc_b"),
+            col("l.pos").as("pos"), (col("l.pos") - col("r.pos")).as("diag")),
+          Seq("doc_a", "doc_b"), minLen, "start_a", "start_b")
       }
     }
+  }
+
+  /** Maximal spans from matching L-gram anchors, the run step of every
+    * exact-substring span operator: `anchors` holds the pair `keys`, `pos`
+    * (a matching gram's start on the first side) and `diag` (`pos` minus
+    * the gram's start on the other side). A shared span of length S is
+    * S-L+1 anchors at consecutive positions on one (keys, diag) diagonal,
+    * so pos - row_number() is constant along it: one window pass, keyed by
+    * the diagonal. Returns the keys, the span's start on each side (named
+    * `start` and `otherStart`) and span_len. */
+  private def anchorSpans(anchors: DataFrame, keys: Seq[String], minLen: Int,
+      start: String, otherStart: String): DataFrame = {
+    val diagonal = (keys :+ "diag").map(col)
+    val w = Window.partitionBy(diagonal: _*).orderBy(col("pos"))
+    anchors.withColumn("run_id", col("pos") - row_number().over(w))
+      .groupBy(diagonal :+ col("run_id"): _*)
+      .agg(min(col("pos")).as(start), count(lit(1)).as("n_anchor"))
+      .select(keys.map(col) ++ Seq(col(start), (col(start) - col("diag")).as(otherStart),
+        (col("n_anchor") + (minLen - 1)).as("span_len")): _*)
   }
 
   /** The positional L-gram hash frame behind [[exactSubstrSpans]]: one row
@@ -871,30 +892,21 @@ object Dedup {
     * incremental ExactSubstr decontamination/dedup at ingestion: work is
     * O(batch grams x bucket occupancy), the historical corpus contributes
     * a scan of 8-byte hash tuples, and NO within-side pairs are computed.
-    * Same diagonal-run construction as [[exactSubstrSpans]]; `maxBucket`
-    * caps the INDEX side's degenerate grams (logged, recall-only, the
-    * [[signatureHammingJoin]] convention). Returns (index_id, probe_id,
-    * start_i, start_p, span_len), offsets 1-based. */
+    * Same diagonal-run construction as [[exactSubstrSpans]], on the
+    * [[bucketPairs]] cross join with the probe as the other side;
+    * `maxBucket` caps the INDEX side's degenerate grams (logged,
+    * recall-only, the [[signatureHammingJoin]] convention). Returns
+    * (index_id, probe_id, start_i, start_p, span_len), offsets 1-based. */
   def exactSubstrSpansAgainstIndex(
       index: DataFrame,
       probe: DataFrame,
       minLen: Int = 40,
-      maxBucket: Int = 0): DataFrame = {
-    val L = minLen
-    val idx = capBuckets(index, Seq("gh"), maxBucket, "exactSubstrSpansAgainstIndex",
-      tiebreakers = Seq("pos"))
-    val m = idx.as("i").join(probe.as("p"), col("i.gh") === col("p.gh"))
-      .select(col("i.id").as("index_id"), col("p.id").as("probe_id"),
-        col("i.pos").as("pos_i"), (col("i.pos") - col("p.pos")).as("diag"))
-    val w = Window.partitionBy(col("index_id"), col("probe_id"), col("diag"))
-      .orderBy(col("pos_i"))
-    m.withColumn("run_id", col("pos_i") - row_number().over(w))
-      .groupBy(col("index_id"), col("probe_id"), col("diag"), col("run_id"))
-      .agg(min(col("pos_i")).as("start_i"), count(lit(1)).as("n_anchor"))
-      .select(col("index_id"), col("probe_id"), col("start_i"),
-        (col("start_i") - col("diag")).as("start_p"),
-        (col("n_anchor") + (L - 1)).as("span_len"))
-  }
+      maxBucket: Int = 0): DataFrame =
+    bucketPairs(index, Seq("gh"), maxBucket, "exactSubstrSpansAgainstIndex", Some(probe)) { j =>
+      anchorSpans(j.select(col("l.id").as("index_id"), col("r.id").as("probe_id"),
+          col("l.pos").as("pos"), (col("l.pos") - col("r.pos")).as("diag")),
+        Seq("index_id", "probe_id"), minLen, "start_i", "start_p")
+    }
 
   /** WITHIN-document exact repeated spans — the self-repetition case of
     * the ExactSubstr family (Lee et al. dedup repeated substrings inside
@@ -925,18 +937,12 @@ object Dedup {
     // join sides would otherwise re-run the repeated-gram aggregate
     val cand = grams.join(rep, Seq("id", "gh"))
     Materialize.shared(grams, cand) {
-      val m = cand.as("a").join(cand.as("b"),
+      val anchors = cand.as("a").join(cand.as("b"),
           col("a.id") === col("b.id") && col("a.gh") === col("b.gh") &&
             col("a.pos") < col("b.pos"))
-        .select(col("a.id").as("id"), col("a.pos").as("pos_a"),
-          (col("b.pos") - col("a.pos")).as("diag"))
-      val w = Window.partitionBy(col("id"), col("diag")).orderBy(col("pos_a"))
-      m.withColumn("run_id", col("pos_a") - row_number().over(w))
-        .groupBy(col("id"), col("diag"), col("run_id"))
-        .agg(min(col("pos_a")).as("start_1"), count(lit(1)).as("n_anchor"))
-        .select(col("id").as(idCol), col("start_1"),
-          (col("start_1") + col("diag")).as("start_2"),
-          (col("n_anchor") + (L - 1)).as("span_len"))
+        .select(col("a.id").as("id"), col("a.pos").as("pos"),
+          (col("a.pos") - col("b.pos")).as("diag"))
+      anchorSpans(anchors, Seq("id"), L, "start_1", "start_2").withColumnRenamed("id", idCol)
     }
   }
 

@@ -159,15 +159,15 @@ object Graph {
     * value, so bucket occupancy is users-per-feature, never all-pairs —
     * but one feature in the top-K of a large user fraction still makes its
     * bucket near-quadratic. `maxUsersPerFeature` is the same degenerate-
-    * bucket lever as the LSH/signature generators ([[Dedup.capBuckets]]):
-    * buckets above the cap keep their `cap` lowest user ids and the drop
-    * count is logged (recall-only loss — edges through the hottest feature
-    * are the least informative, exactly the Adamic-Adar hub argument).
-    * The cap here is a HARD bound (exactGuard — the guard runs the exact
-    * occupancy pass, not capBuckets' sampled fast-path, so the promise
-    * above holds for every bucket, not with-overwhelming-probability).
-    * Default 0 = uncapped, the exhaustive oracle-checkable form; a 100 TB
-    * deployment sets it to a few thousand. */
+    * bucket lever as the LSH/signature generators: the pair stage is a
+    * [[Dedup.bucketPairs]] self-join keyed by the feature, whose buckets
+    * above the cap keep their `cap` lowest user ids and log the drop
+    * count (recall-only loss — edges through the hottest feature are the
+    * least informative, exactly the Adamic-Adar hub argument). The cap
+    * here is a HARD bound (`exactGuard`: the exact occupancy pass, not
+    * the sampled probe, so the promise above holds for every bucket, not
+    * with-overwhelming-probability). Default 0 = uncapped, the exhaustive
+    * oracle-checkable form; a 100 TB deployment sets it to a few thousand. */
   def coEngagementEdges(
       events: DataFrame,
       topK: Int = 5,
@@ -179,19 +179,16 @@ object Graph {
     val uk = events.select(col(userCol).as("user_id"),
         get_json_object(col(propsCol), "$.k").cast("long").as("k"))
       .groupBy(col("user_id"), col("k")).agg(count(lit(1)).as("cnt"))
-    val topUncapped = uk.withColumn("rn", row_number().over(
+    val top = uk.withColumn("rn", row_number().over(
         Window.partitionBy(col("user_id")).orderBy(col("cnt").desc, col("k"))))
-      .filter(col("rn") <= topK).select(col("user_id"), col("k"))
-    val top = Dedup.capBuckets(
-        topUncapped.withColumnRenamed("user_id", "id"), Seq("k"),
-        maxUsersPerFeature, "coEngagementEdges", exactGuard = true)
-      .withColumnRenamed("id", "user_id")
-    top.as("a").join(top.as("b"),
-        col("a.k") === col("b.k") && col("a.user_id") < col("b.user_id"))
-      .groupBy(col("a.user_id").as("src"), col("b.user_id").as("dst"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-      .select(col("src"), col("dst"))
+      .filter(col("rn") <= topK).select(col("user_id").as("id"), col("k"))
+    Dedup.bucketPairs(top, Seq("k"), maxUsersPerFeature, "coEngagementEdges",
+        exactGuard = true) {
+      _.groupBy(col("l.id").as("src"), col("r.id").as("dst"))
+        .agg(count(lit(1)).as("shared"))
+        .filter(col("shared") >= minShared)
+        .select(col("src"), col("dst"))
+    }
   }
 
   /** Adamic-Adar link prediction: for every ORDERED non-adjacent pair

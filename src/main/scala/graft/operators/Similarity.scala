@@ -670,7 +670,7 @@ object Similarity {
     *
     * @param maxBucket degenerate-bucket guard: at most this many members per
     *                  (table, bucket) join the self-join (see
-    *                  [[Dedup.capBuckets]]; drops are logged, never silent).
+    *                  [[Dedup.bucketPairs]]; drops are logged, never silent).
     *                  A bucket of m near-identical embeddings — identical
     *                  boilerplate embedded identically — is otherwise locally
     *                  O(m²). <= 0 disables (and keeps the plan lazy). */
@@ -725,7 +725,7 @@ object Similarity {
     *
     * Scale shape: C cells bound within-cell membership to ~n/C on balanced
     * corpora, so pair work is ~n²/C instead of n²; the one shuffle keys by
-    * cell; the occupancy guard ([[Dedup.capBuckets]]) bounds the
+    * cell; the occupancy guard ([[Dedup.bucketPairs]]' cap) bounds the
     * degenerate cell (m near-identical embeddings) with logged, never
     * silent, drops. Assignment is the same broadcast-argmin mapPartitions
     * kernel as [[ivfKnnJoin]] — O(C·d) per row, corpus never moves. The

@@ -2482,8 +2482,7 @@ object Text extends QueryModule {
         val eval = docs
           .filter($"doc_id" % 97 === 0 && length($"text") >= 130)
           .select($"doc_id", substring($"text", 10, 120).as("text"))
-        Decontamination.substrHits(docs, eval, broadcastIndex = true)
-          .distinct()
+        Decontamination.substrHits(docs, eval).distinct()
           .orderBy($"doc_id", $"eval_id")
       },
       Some("""WITH ev AS (
@@ -2567,7 +2566,7 @@ object Text extends QueryModule {
         // this matches per-epoch generation while computing signatures
         // once instead of three times (measured 9 s → ~4 s at sf0.1).
         // CAVEAT: the identity holds only while no bucket trips the
-        // degenerate-bucket cap — capBuckets caps on WHOLE-CORPUS bucket
+        // degenerate-bucket cap — bucketPairs caps on WHOLE-CORPUS bucket
         // occupancy, so a bucket over-cap in the full corpus could be
         // under-cap in the old-epoch subset and per-epoch generation would
         // keep pairs this split drops. The exhaustive oracle would flag
@@ -3547,7 +3546,7 @@ object Reshape extends QueryModule {
             .otherwise($"text").as("text"))
         // ONE gram explode serves both consumers (the q189 lesson): the
         // shared frame feeds the operator's span construction AND the
-        // independent drop-ledger audit — recomputed exactly as capBuckets
+        // independent drop-ledger audit — recomputed exactly as bucketPairs
         // accounts it (occupancy of each >=2-distinct-doc gram), with the
         // oracle recomputing it a third way from gram STRINGS.
         val grams = Dedup.exactSubstrGrams(Layout.spread(synth, $"doc_id"), minLen = 40)
@@ -3605,7 +3604,7 @@ object Reshape extends QueryModule {
     // the index holds boilerplate docs (id % 6 == 0) at per-gram occupancy
     // ~n/6 >> cap and the probe brings more (id % 6 == 3). Pins, both SFs:
     //   dropped_index_rows / capped_buckets — the index-side cap's drop
-    //     ledger (capBuckets caps EVERY index gh bucket — no >=2-doc
+    //     ledger (bucketPairs caps EVERY index gh bucket — no >=2-doc
     //     prefilter on this path), recomputed by DuckDB from gram STRINGS;
     //   exactness_violations = 0 — every reported span verbatim-equal
     //     between index and probe text (recall-only contract);

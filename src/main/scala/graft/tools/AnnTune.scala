@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.operators.Similarity
+import graft.operators.{Materialize, Similarity}
 
 /** Recall/latency grid for the ANN operating points: every published
   * `ann_recall` number needs its cost measured alongside (a recall column
@@ -95,10 +95,8 @@ object AnnTune {
         ((if (r == q) 1.0 else 0.0) - 2.0 * u * u) * scales(q))
       val skewModel = Similarity.WhiteningModel(
         new Array[Double](d), skewW, scales.map(s => s * s))
-      val skewed = Similarity.whiten(emb, skewModel)
-        .select(c("vec_id"), c("whitened").cast("array<float>").as("embedding"))
-        .persist()
-      skewed.count()
+      val skewed = Materialize.shared()(Similarity.whiten(emb, skewModel)
+        .select(c("vec_id"), c("whitened").cast("array<float>").as("embedding")))
       val sq = skewed.filter(c("vec_id") < nQ)
       val exactS = pairs(Similarity.knnJoin(skewed, sq, k))
       def recallS(s: Set[(Long, Long)]): Double =
@@ -135,7 +133,6 @@ object AnnTune {
             rerank = pool))
         println(f"skewed_ivfpq_rot m=$m%-2d nProbe=16 rerank=$pool%-3d recall=$rr%.3f minSec=$tr%.2f")
       }
-      skewed.unpersist()
     }
     spark.stop()
   }

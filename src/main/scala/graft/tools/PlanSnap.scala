@@ -101,7 +101,7 @@ object PlanSnap {
       val (plan, exchanges) = snapshot(spark, q, sfDir)
       // release anything the query construction persisted/checkpointed so
       // successive snapshots don't accumulate cached blocks
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Sessions.dropPersisted(spark.sparkContext)
       val f = outDir.resolve(s"${name}_$tag.txt")
       Files.write(f, plan.getBytes(StandardCharsets.UTF_8))
       Files.write(outDir.resolve(s"${name}_$tag.exchanges.txt"),

@@ -34,13 +34,9 @@ object ProfileQuery {
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query: $name"))
 
-    def dropPersisted(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-
     // warm-up rep (codegen/JIT/parquet footers), unmeasured
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    dropPersisted()
+    Sessions.dropPersisted(spark.sparkContext)
 
     (1 to reps).foreach { rep =>
       // Each rep gets its own listener and buffers, and keeps only the jobs
@@ -109,7 +105,7 @@ object ProfileQuery {
       val sumWall = stages.filter(_.wallMs > 0).map(_.wallMs).sum
       println(f"sum of stage walls: $sumWall ms (overlap makes this > job " +
         "wall when independent stages run concurrently)")
-      dropPersisted()
+      Sessions.dropPersisted(spark.sparkContext)
     }
     spark.stop()
   }

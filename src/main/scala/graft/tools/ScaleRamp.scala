@@ -258,8 +258,7 @@ object ScaleRamp {
       .localCheckpoint(true)
     ramp("decontam", scaledDocs(spark, sfDir, _), Seq(
       "substr_gate_bcast" -> (d =>
-        graft.operators.Decontamination.substrHits(d, evalSet,
-          broadcastIndex = true).distinct())))
+        graft.operators.Decontamination.substrHits(d, evalSet).distinct())))
 
     // Fixed 256-query probe set from the base fixture: the scaled axis is
     // the CORPUS (index build + candidate generation); query fan-out is a

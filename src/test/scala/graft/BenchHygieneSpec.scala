@@ -13,9 +13,7 @@ import graft.operators.Dedup
   * sweep, this fails before a bench round smears. */
 class BenchHygieneSpec extends SparkSpec {
 
-  private def sweep(): Unit =
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+  private def sweep(): Unit = Sessions.dropPersisted(spark.sparkContext)
 
   private def cachedRddBlocks(): Int =
     spark.sparkContext.getRDDStorageInfo

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * old one into a shared rule first. */
 class MaterializationSitesSpec extends AnyFunSuite {
 
-  private val Max = 21
+  private val Max = 17
   private val Site = """\.(persist|localCheckpoint|checkpoint|unpersist|cache)\(""".r
   // every way an operator or query can store a frame: a cache, or a
   // checkpoint, local or reliable

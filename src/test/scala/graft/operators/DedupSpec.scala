@@ -709,7 +709,7 @@ class DedupSpec extends SparkSpec {
     val uncapped = Dedup.exactSubstrSpans(docs, minLen = 12).collect()
     assert(uncapped.length == 15, "C(6,2) pairs uncapped")
     // cap = 3: every span-gram bucket deterministically keeps doc ids
-    // 1..3 (capBuckets orders by id), so spans survive ONLY among those —
+    // 1..3 (the bucketPairs cap orders by id), so spans survive ONLY among those —
     // recall loss, with the kept spans' extents still exact
     val capped = Dedup.exactSubstrSpans(docs, minLen = 12, maxBucket = 3)
       .collect()
@@ -735,14 +735,18 @@ class DedupSpec extends SparkSpec {
       "when one doc repeats a gram in a bucket") {
     // bucket 10 holds doc 1 twice (a doc repeating a shared gram) — an
     // orderBy(id) alone leaves WHICH of the five rows survive cap=3 to
-    // shuffle order; with the pos tiebreaker the survivor set is pinned:
-    // (id, pos) ascending -> (1,5), (1,9), (2,3)
+    // shuffle order; the cap orders by id and then by the frame's other
+    // non-key column, pos, so the survivor set is pinned:
+    // (id, pos) ascending -> (1,5), (1,9), (2,3). Every survivor shows in
+    // a pair of the self-join: (1,5)-(2,3) and (1,9)-(2,3).
     val rows = Seq((10L, 1L, 9L), (10L, 2L, 7L), (10L, 1L, 5L),
         (10L, 2L, 3L), (10L, 3L, 1L))
       .toDF("gh", "id", "pos").repartition(8) // shuffle-order noise
     val got = (1 to 3).map { _ =>
-      Dedup.capBuckets(rows, Seq("gh"), 3, "spec", tiebreakers = Seq("pos"))
-        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("pos"))).toSet
+      Dedup.bucketPairs(rows, Seq("gh"), 3, "spec") {
+        _.select($"l.id", $"l.pos", $"r.id", $"r.pos")
+      }.collect().flatMap(r => Seq((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
+        .toSet
     }
     got.foreach(s => assert(s === Set((1L, 5L), (1L, 9L), (2L, 3L))))
   }
